@@ -33,18 +33,18 @@ import org.apache.spark.sql.SparkSession
   *                                    process before it accepts traffic) —
   *                                    so does this: a set-but-unreadable
   *                                    path throws from `from()`. The
-  *                                    in-sandbox sink (filesystem /
-  *                                    NetBroker) never consults it; a
-  *                                    production Kafka/PubSub swap reads
-  *                                    the validated path from here.
+  *                                    config-driven net publish
+  *                                    (`Streams.routePublishNet` with a
+  *                                    broker address) hands the validated
+  *                                    path to its `NetTransport`.
   *  - `spark.graft.maxFilesPerTrigger` — micro-batch size for the file-
   *                                    drop ingest (0 = unbounded, the
   *                                    default). The reference has no
   *                                    analogue (it processes one POST at
   *                                    a time); micro-batch granularity is
-  *                                    this engine's own degree of freedom,
-  *                                    and the streaming bench records
-  *                                    throughput at two settings of it.
+  *                                    this engine's own degree of freedom;
+  *                                    perfbench's `bridge` catch-up
+  *                                    exercises it.
   *  (--projectID remains Google-Cloud-specific with no analogue: topics
   *  here are directories/brokers, not cloud resource names.)
   */

@@ -366,10 +366,15 @@ object AnnOps {
     }),
   )
 
-  /** Per-doc duplicate-cluster labels, with the CC fixpoint run on the
-    * CANONICAL class graph (round 18, r17 verdict #1) and labels fanned
-    * back by digest class. Raw component structure = canonical
-    * component structure expanded by class membership:
+  /** Per-doc (doc_id, cluster_id) fan-back off the canonical-graph
+    * labels — the shared core of q_dedup_cluster (which adds the
+    * cluster_size window) and q_curation_keep (which needs only
+    * canonicality, so it skips that window entirely).
+    *
+    * The CC fixpoint runs on the CANONICAL class graph (round 18, r17
+    * verdict #1) and labels fan back by digest class. Raw component
+    * structure = canonical component structure expanded by class
+    * membership:
     *   - a doc whose class canonical carries a canonical-graph label L
     *     is labeled L (within-class jaccard-1 edges glue every member
     *     to its canonical, which connects onward; the canonical-graph
@@ -384,10 +389,6 @@ object AnnOps {
     *     own doc_id.
     * The corpus never rejoins by a second scan: the membership frame
     * already carries every doc_id. */
-  /** Per-doc (doc_id, cluster_id) fan-back off the canonical-graph
-    * labels — the shared core of q_dedup_cluster (which adds the
-    * cluster_size window) and q_curation_keep (which needs only
-    * canonicality, so it skips that window entirely). */
   private def clusterPerDoc(mem: DataFrame, arr: DataFrame,
       labels: DataFrame, fanOut: Boolean): DataFrame =
     if (!fanOut)

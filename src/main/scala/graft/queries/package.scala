@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 package object queries {
@@ -63,42 +63,40 @@ package object queries {
     else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** Has Dataset.observe delivered a metric for an eager localCheckpoint
-    * in this JVM? Tri-state: null = untested, TRUE = works (fused
-    * per-round scalars ride the checkpoint job), FALSE = never landed
-    * once — skip the bounded wait for the rest of the JVM and pay the
-    * explicit tiny agg job instead. Defensive: on every Spark version
-    * tested the checkpoint runs through withAction and fires
+  /** Has Dataset.observe delivered a metric for an eager
+    * materialization in this JVM? Tri-state: null = untested, TRUE =
+    * works (the scalar rides the materializing job), FALSE = never
+    * landed once — skip the bounded wait for the rest of the JVM and
+    * pay the explicit tiny agg job instead. Defensive: on every Spark
+    * version tested the action runs through withAction and fires
     * QueryExecutionListeners, but a hang here would freeze every
-    * fixpoint consumer, so the fallback stays. Shared by the CC kernel's
-    * convergence sum (AnnOps) and PageRank's dangling-mass sum
-    * (GraphOps) — round 17 generalized it out of AnnOps. */
+    * consumer, so the fallback stays. */
   @volatile private var observeOnCheckpoint: java.lang.Boolean = null
 
-  /** Eagerly checkpoint `df` and return it with the value of `metric`
-    * (a long-valued aggregate over df's rows) WITHOUT a second job: the
-    * aggregate rides the checkpoint's own action as a Dataset.observe
-    * metric. The old shape re-scanned every checkpointed round with a
-    * separate agg action — one extra job per round for every fixpoint
-    * consumer. Callers must coalesce the metric so an empty frame gives
-    * 0, not null. */
-  private[queries] def checkpointedWithSum(
-      df: DataFrame, metric: Column): (DataFrame, Long) = {
-    def explicit(out: DataFrame): Long =
-      out.agg(metric).head().getLong(0)
+  /** Eagerly `materialize` `df` and return it with the value of
+    * `metric` (a long-valued aggregate over df's rows; NULL reads as
+    * 0). The aggregate rides the materializing action as a
+    * Dataset.observe metric; listener delivery is async (post-action),
+    * so the wait is bounded and a timeout falls back to an explicit agg
+    * over the materialized frame. A timeout is remembered for the JVM
+    * in [[observeOnCheckpoint]], so the stall is paid at most once.
+    * Either path reads the same rows, so the value never depends on
+    * timing. */
+  private def materializedWithLong(df: DataFrame, metric: Column)(
+      materialize: DataFrame => DataFrame): (DataFrame, Long) = {
+    def long(r: Row): Long = if (r.isNullAt(0)) 0L else r.getLong(0)
+    def explicit(out: DataFrame): Long = long(out.agg(metric).head())
     if (observeOnCheckpoint == java.lang.Boolean.FALSE) {
-      val out = df.localCheckpoint(true)
+      val out = materialize(df)
       (out, explicit(out))
     } else {
       val obs = org.apache.spark.sql.Observation()
-      val out = df.observe(obs, metric.as("m")).localCheckpoint(true)
-      // listener delivery is async (post-action) — bounded wait, then
-      // fall back once and remember for the JVM
+      val out = materialize(df.observe(obs, metric.as("m")))
       try {
         val row = scala.concurrent.Await.result(obs.future,
           scala.concurrent.duration.Duration(2, "s"))
         observeOnCheckpoint = java.lang.Boolean.TRUE
-        (out, row.getAs[Long]("m"))
+        (out, long(row))
       } catch {
         case _: java.util.concurrent.TimeoutException =>
           observeOnCheckpoint = java.lang.Boolean.FALSE
@@ -107,41 +105,32 @@ package object queries {
     }
   }
 
+  /** Eagerly checkpoint `df` and return it with the value of `metric`
+    * WITHOUT a second job (see [[materializedWithLong]]), so a fixpoint
+    * consumer (the CC kernel's convergence sum in AnnOps, PageRank's
+    * dangling-mass sum in GraphOps) pays no extra agg job per round.
+    * Callers coalesce the metric so an empty frame gives 0. */
+  private[queries] def checkpointedWithSum(
+      df: DataFrame, metric: Column): (DataFrame, Long) =
+    materializedWithLong(df, metric)(_.localCheckpoint(true))
+
   /** [[persistEager]] whose cache-filling count also delivers a
-    * long-valued aggregate over `df` via Dataset.observe — the
-    * fan-back short-circuit's data probe (round 18): the dedup family
-    * branches on the corpus's max exact-dup class size without paying
-    * a second job. Same bounded-wait + explicit-agg fallback contract
-    * as [[checkpointedWithSum]] (the fallback reads the just-filled
-    * cache, so either path returns the same data-determined value —
-    * the branch can never depend on timing). In a plan-inspection
-    * session (skipEagerMaterialize) no job runs, so the metric is None
-    * and callers MUST take their general branch — plan digests stay
-    * data-independent. Callers coalesce NULL aggregates themselves if
-    * an empty frame is possible (getAs returns 0L for a null long
-    * here via the isNullAt guard). */
+    * long-valued aggregate over `df` (see [[materializedWithLong]]) —
+    * the fan-back short-circuit's data probe (round 18): the dedup
+    * family branches on the corpus's max exact-dup class size without
+    * paying a second job. In a plan-inspection session
+    * (skipEagerMaterialize) no job runs, so the metric is None and
+    * callers MUST take their general branch — plan digests stay
+    * data-independent. */
   private[queries] def persistEagerWithLong(
-      df: DataFrame, metric: Column): (DataFrame, Option[Long]) = {
+      df: DataFrame, metric: Column): (DataFrame, Option[Long]) =
     if (df.sparkSession.conf
         .get("spark.graft.skipEagerMaterialize", "false") == "true")
       (df, None)
     else {
-      val obs = org.apache.spark.sql.Observation()
-      val p = df.observe(obs, metric.as("m"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      val v = try {
-        val row = scala.concurrent.Await.result(obs.future,
-          scala.concurrent.duration.Duration(2, "s"))
-        if (row.isNullAt(0)) 0L else row.getAs[Long]("m")
-      } catch {
-        case _: java.util.concurrent.TimeoutException =>
-          val r = p.agg(metric.as("m")).head()
-          if (r.isNullAt(0)) 0L else r.getLong(0)
-      }
+      val (p, v) = materializedWithLong(df, metric)(persistEager)
       (p, Some(v))
     }
-  }
 
   /** Eagerly materialize `df` via localCheckpoint, then release the
     * internal caches it depended on. Sketch queries (minhash / simhash /

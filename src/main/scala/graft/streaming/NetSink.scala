@@ -11,10 +11,8 @@ import scala.jdk.CollectionConverters._
 /** A real network publish endpoint for `s_route_publish_net` — the wire
   * analogue of the reference's Pub/Sub sink (publisher.go:79-94: async
   * per-line publish, per-request future await; topic create-once cache at
-  * :99-129). This sandbox has no Pub/Sub or Kafka endpoint (zero egress,
-  * no kafka-clients jar), so the protocol is a minimal length-prefixed TCP
-  * exchange with the SAME delivery contract a Pub/Sub connector gives the
-  * pipeline:
+  * :99-129). The protocol is a minimal length-prefixed TCP exchange with
+  * the SAME delivery contract a Pub/Sub connector gives the pipeline:
   *
   *  - one PUBLISH frame per row: (topic, payload bytes, attribute map) —
   *    the `pubsub.Message{Data, Attributes}` shape (publisher.go:88-91);
@@ -43,7 +41,7 @@ import scala.jdk.CollectionConverters._
   * overlap the reference gets from the Pub/Sub client, and the window
   * bounds both sides' socket buffers so neither end can deadlock on a
   * full duplex pipe. A production deployment swaps `NetPublisher` for a
-  * Kafka/Pub/Sub client with the identical foreachBatch shape.
+  * Pub/Sub client with the identical foreachBatch shape.
   */
 object NetWire {
   val CmdCreate: Byte = 1
@@ -63,11 +61,10 @@ final case class NetMessage(data: String, attrs: Map[String, String])
 
 /** The production publisher seam (round 11, verdict #6): exactly what
   * the routing sink needs from a transport and nothing else, so the
-  * Kafka / Pub/Sub client a real deployment uses is a two-method
-  * drop-in for the in-process broker. The contract every
-  * implementation must keep (and StreamingSpec pins against the
-  * NetTransport leg; the real-client leg is sandbox-blocked — zero
-  * egress, no client jars):
+  * Pub/Sub client a real deployment uses is a two-method drop-in for
+  * the in-process broker. The contract every implementation must keep
+  * (StreamingSpec and NetTransportContractSpec pin it against the
+  * NetTransport leg):
   *
   *  - Serializable: [[publishPartition]] runs inside
   *    `foreachPartition` on EXECUTORS, so the instance must carry only
@@ -119,22 +116,6 @@ final case class NetTransport(addr: String,
   override def publishPartition(
       rows: Iterator[(String, String, Map[String, String])]): Unit =
     NetPublisher.publishPartition(addr, rows)
-}
-
-/** Session-driven transport construction: the one place the R15
-  * `spark.graft.credentials` flag meets a client that consumes it.
-  * `spark.graft.kafkaBootstrap`, when set, selects the [[KafkaTransport]]
-  * leg (production: a dependency bump + one conf; see KafkaSink.scala) —
-  * otherwise the TCP/emulator leg publishes to `addr`. */
-object Transports {
-  def fromSession(s: org.apache.spark.sql.SparkSession,
-      addr: String): PublishTransport = {
-    val creds = graft.GraftConfig.from(s).credentials
-    s.conf.get("spark.graft.kafkaBootstrap", "") match {
-      case "" => NetTransport(addr, creds)
-      case bootstrap => KafkaTransport(bootstrap, creds)
-    }
-  }
 }
 
 /** In-process TCP broker: the test/emulator stand-in for the real

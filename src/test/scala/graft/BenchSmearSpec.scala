@@ -2,18 +2,17 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the round-17 bench smear detector (r16 verdict #1). The driver's
-  * BENCH_r16.json read 2.2x the same tree's quiet band — the host was
-  * still draining a 25-minute DuckDB sweep when the 1-min-loadavg
-  * quiet-wait passed — and only a judge re-run saved the round from a
-  * false t3-gate breach. The detector compares every timed key against
-  * the committed quiet gate row and stamps `smear_suspect` into the
-  * record itself; these tests pin the counting rule and the real r16
-  * pollution shape against the committed baseline row. */
+/** Pins the smear report of a full-suite graft.Bench record
+  * (BenchBaseline): the counting rule, the record parsing, the gate-row
+  * lookup, and the real r16 pollution shape against the committed gate
+  * row. BENCH_r16.json read 2.2x the same tree's quiet band because the
+  * host was still draining a long sweep; the report names such keys in
+  * the record itself. */
 class BenchSmearSpec extends AnyFunSuite {
 
   private def detect(cur: Map[String, Double], base: Map[String, Double])
-      : Seq[String] = Bench.smearedKeys(cur, base, 2.0, 0.3)
+      : Seq[String] = BenchBaseline.smearedKeys(cur, base,
+        BenchBaseline.Ratio, BenchBaseline.DeltaFloorSec)
 
   test("a key at >= 2x baseline and >= 0.3s above it is smeared") {
     assert(detect(Map("q_a" -> 2.5), Map("q_a" -> 1.0)) == Seq("q_a"))
@@ -51,15 +50,15 @@ class BenchSmearSpec extends AnyFunSuite {
   }
 
   test("parseQueriesJson reads a bench-shaped record") {
-    val (qs, sf) = Bench.parseQueriesJson(
+    val (qs, sf) = BenchBaseline.parseQueriesJson(
       """{"metric":"total","queries":{"q_a":1.25,"q_b":0.5},"sf":"/x/y"}""")
     assert(qs == Map("q_a" -> 1.25, "q_b" -> 0.5))
     assert(sf.contains("/x/y"))
   }
 
   test("parseQueriesJson degrades to empty on malformed input") {
-    assert(Bench.parseQueriesJson("not json at all")._1.isEmpty)
-    assert(Bench.parseQueriesJson("""{"no_queries":1}""")._1.isEmpty)
+    assert(BenchBaseline.parseQueriesJson("not json at all")._1.isEmpty)
+    assert(BenchBaseline.parseQueriesJson("""{"no_queries":1}""")._1.isEmpty)
   }
 
   test("latestBaselinePath picks the highest round number") {
@@ -69,7 +68,7 @@ class BenchSmearSpec extends AnyFunSuite {
         "BASELINE_r7_local.json", "BASELINE_r16_sf1.json", "other.json")
         .foreach(n => java.nio.file.Files.write(dir.resolve(n),
           "{}".getBytes("UTF-8")))
-      assert(Bench.latestBaselinePath(dir).map(_.getFileName.toString)
+      assert(BenchBaseline.latestBaselinePath(dir).map(_.getFileName.toString)
         .contains("BASELINE_r16_local.json"))
     } finally {
       import scala.jdk.CollectionConverters._
@@ -82,17 +81,8 @@ class BenchSmearSpec extends AnyFunSuite {
 
   test("latestBaselinePath on an empty dir is None") {
     val dir = java.nio.file.Files.createTempDirectory("graft_smear_empty")
-    try assert(Bench.latestBaselinePath(dir).isEmpty)
+    try assert(BenchBaseline.latestBaselinePath(dir).isEmpty)
     finally java.nio.file.Files.delete(dir)
-  }
-
-  test("loadAvgs reports both averages on this host") {
-    val (l1, l5) = Bench.loadAvgs()
-    assert(l1 >= 0.0)
-    // procfs host: the 5-min leg must be live, not the -1 fallback
-    if (java.nio.file.Files.exists(
-        java.nio.file.Paths.get("/proc/loadavg")))
-      assert(l5 >= 0.0)
   }
 
   // ── The r16 scenario against the COMMITTED gate row ────────────────
@@ -104,7 +94,7 @@ class BenchSmearSpec extends AnyFunSuite {
   private lazy val gateRow: Map[String, Double] = {
     val p = java.nio.file.Paths.get("BASELINE_r16_local.json")
     if (java.nio.file.Files.isReadable(p))
-      Bench.parseQueriesJson(new String(
+      BenchBaseline.parseQueriesJson(new String(
         java.nio.file.Files.readAllBytes(p), "UTF-8"))._1
     else Map.empty
   }
@@ -134,29 +124,20 @@ class BenchSmearSpec extends AnyFunSuite {
     assert(smeared.size < 10)
   }
 
-  // ── round-18 steal telemetry (r17 verdict #7) ─────────────────────
-
-  test("stealPct: percent of elapsed jiffies stolen between samples") {
-    val a = Some((100L, 10000L))
-    val b = Some((150L, 11000L)) // 50 of 1000 elapsed stolen
-    assert(Bench.stealPct(a, b).contains(5.0))
-  }
-
-  test("stealPct degrades to None without procfs or without progress") {
-    assert(Bench.stealPct(None, Some((1L, 2L))).isEmpty)
-    assert(Bench.stealPct(Some((1L, 2L)), None).isEmpty)
-    // clock did not advance (t2 == t1): no division by zero, no value
-    assert(Bench.stealPct(Some((1L, 100L)), Some((1L, 100L))).isEmpty)
-  }
-
-  test("stealJiffies parses this host's /proc/stat when present") {
-    // On a procfs host the sample is (steal, total) with total covering
-    // at least user+idle; on anything else it must be None, never a
-    // throw. Both outcomes are legal — the telemetry degrades.
-    Bench.stealJiffies() match {
-      case Some((steal, total)) =>
-        assert(steal >= 0 && total > 0 && steal <= total)
-      case None => succeed
+  test("report compares only against a gate row of the same sf") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_smear_report")
+    val row = dir.resolve("BASELINE_r03_local.json")
+    try {
+      java.nio.file.Files.write(row,
+        """{"queries":{"q_a":1.0,"q_b":1.0},"sf":"/x/sf0.1"}"""
+          .getBytes("UTF-8"))
+      val cur = Seq("q_a" -> 2.5, "q_b" -> 1.1)
+      assert(BenchBaseline.report(dir, "/x/sf0.1", cur)
+        .contains("BASELINE_r03_local.json" -> Seq("q_a")))
+      assert(BenchBaseline.report(dir, "/x/sf1", cur).isEmpty)
+    } finally {
+      java.nio.file.Files.delete(row)
+      java.nio.file.Files.delete(dir)
     }
   }
 }

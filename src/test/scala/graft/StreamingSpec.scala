@@ -197,9 +197,8 @@ class StreamingSpec extends AnyFunSuite {
   /** The s_route_publish_net delivery contract, parameterized over the
     * transport (round 11, verdict #6): acks, attrs, create-once, and
     * dead-letter semantics must hold for ANY PublishTransport — the
-    * NetBroker leg runs here; a real Kafka / Pub/Sub client leg would
-    * reuse this same helper but is sandbox-blocked (zero egress, no
-    * client jars), which is exactly why the seam exists. */
+    * NetBroker leg runs here; a real Pub/Sub client leg would reuse
+    * this same helper, which is exactly why the seam exists. */
   private def publishContract(tag: String,
       start: (org.apache.spark.sql.DataFrame, NetBroker, String) =>
         org.apache.spark.sql.streaming.StreamingQuery): Unit = {

@@ -5,8 +5,8 @@ per-query record.
 Usage: python3 tools/bench_medians.py out.json run1.json run2.json ... \
          [--vs prior_local.json] [--top 15]
 
-Writes out.json with {"queries": {name: median}, "runs": [...totals...],
-"loadavg": [...]} and prints the top per-query ratios vs the prior
+Writes out.json with {"queries": {name: median}, "runs": [...totals...]}
+and prints the top per-query ratios vs the prior
 record (riser hunt: a real regression survives quiet medians; host
 smear does not — see BASELINE.md gate row).
 """
@@ -36,8 +36,6 @@ rec = {
     "queries": med,
     "median_sum": round(sum(med.values()), 2),
     "runs": [d["value"] for d in datas],
-    "loadavg": [[d.get("loadavg_start"), d.get("loadavg_end")]
-                for d in datas],
     "n": len(datas),
     "stat_per_run": datas[0].get("stat"),
     "sf": datas[0].get("sf"),

@@ -15,7 +15,6 @@
 #
 # Usage: tools/bench_sf1.sh <round>          # e.g. tools/bench_sf1.sh 16
 #   SF1=/tmp/graft_sf1        fixture dir (generated if missing)
-#   SPARK_GRAFT_BENCH_WAIT_QUIET defaults to 300 for gate runs
 set -euo pipefail
 cd "$(dirname "$0")/.."
 N=${1:?usage: tools/bench_sf1.sh <round number>}
@@ -33,7 +32,6 @@ for i in 1 2; do
   SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
   SPARK_GRAFT_BENCH_SKIP=q_dedup_embedding \
   SPARK_GRAFT_BENCH_ITERS=2 \
-  SPARK_GRAFT_BENCH_WAIT_QUIET=${SPARK_GRAFT_BENCH_WAIT_QUIET:-300} \
   SPARK_GRAFT_BENCH_OUT=/tmp/bench_sf1_$i.json \
     sbt -batch "runMain graft.Bench" > /tmp/bench_sf1_$i.log 2>&1
   echo "pass $i: $(grep -o '"value":[0-9.]*' /tmp/bench_sf1_$i.json | head -1)"

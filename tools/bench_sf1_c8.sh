@@ -34,7 +34,6 @@ for CPUS in 32 8; do
   SPARK_GRAFT_CPUS=$CPUS \
   SPARK_GRAFT_BENCH_ONLY=$KEYS \
   SPARK_GRAFT_BENCH_ITERS=2 \
-  SPARK_GRAFT_BENCH_WAIT_QUIET=${SPARK_GRAFT_BENCH_WAIT_QUIET:-300} \
   SPARK_GRAFT_BENCH_OUT=/tmp/bench_sf1_c${CPUS}.json \
     sbt -batch "runMain graft.Bench" > /tmp/bench_sf1_c${CPUS}.log 2>&1
   echo "cpus=$CPUS: $(grep -o '"value":[0-9.]*' /tmp/bench_sf1_c${CPUS}.json | head -1)"
@@ -47,10 +46,7 @@ ratio = {k: round(c8["queries"][k] / v, 3)
          for k, v in c32["queries"].items() if k in c8["queries"] and v > 0}
 out = {"sf": c32["sf"], "iters": c32["iters"], "stat": c32["stat"],
        "cpus32": c32["queries"], "cpus8": c8["queries"],
-       "ratio_c8_over_c32": ratio,
-       "loadavg": [c32["loadavg_start"], c32["loadavg_end"],
-                   c8["loadavg_start"], c8["loadavg_end"]],
-       "steal_pct": [c32.get("steal_pct"), c8.get("steal_pct")]}
+       "ratio_c8_over_c32": ratio}
 json.dump(out, open(sys.argv[1], "w"), indent=1, sort_keys=True)
 print("ratios:", dict(sorted(ratio.items(), key=lambda x: -x[1])))
 EOF

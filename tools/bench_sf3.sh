@@ -19,7 +19,6 @@
 #
 # Usage: tools/bench_sf3.sh <round>          # e.g. tools/bench_sf3.sh 16
 #   SF3=/tmp/graft_sf3        fixture dir (generated if missing)
-#   SPARK_GRAFT_BENCH_WAIT_QUIET defaults to 300 for gate runs
 #
 # Reading the record: compare per-key medians against the same round's
 # BASELINE_r{N}_sf1.json — the sf1->sf3 step is 3x data, so a healthy
@@ -54,7 +53,6 @@ for i in 1 2; do
   SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
   SPARK_GRAFT_BENCH_ONLY=$KEYS \
   SPARK_GRAFT_BENCH_ITERS=2 \
-  SPARK_GRAFT_BENCH_WAIT_QUIET=${SPARK_GRAFT_BENCH_WAIT_QUIET:-300} \
   SPARK_GRAFT_BENCH_OUT=/tmp/bench_sf3_$i.json \
     sbt -batch "runMain graft.Bench" > /tmp/bench_sf3_$i.log 2>&1
   echo "pass $i: $(grep -o '"value":[0-9.]*' /tmp/bench_sf3_$i.json | head -1)"
