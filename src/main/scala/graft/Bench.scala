@@ -98,8 +98,6 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // Fixture parquet is one row group per table: enable the scan shim.
-      .config("spark.graft.singleRowgroupShim", "true")
       // The fixture harness may run the O(n^2) exact ground-truth twin
       // (q_dedup_embedding); production sessions must not.
       .config("spark.graft.allowQuadratic", "true")

@@ -8,11 +8,12 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: runMain graft.DumpPlanFiles <outDir> <suffix> <k1,k2,...> [sfDir]
   *
-  * Same session shape as DumpPlans: eager materialization disabled so a
-  * dump never executes sketch jobs, and the dumped plan is the real
-  * pipeline rather than a post-checkpoint LogicalRDD scan. Iterative
-  * fixpoint operators (pagerank / CC consumers) therefore dump their
-  * lazy per-round chain — shape is still readable, rounds are unrolled.
+  * Same session shape as the test session (TestSpark) plus eager
+  * materialization disabled, so a dump never executes sketch jobs and
+  * the dumped plan is the real pipeline rather than a post-checkpoint
+  * LogicalRDD scan. Iterative fixpoint operators (pagerank / CC
+  * consumers) therefore dump their lazy per-round chain — shape is still
+  * readable, rounds are unrolled.
   */
 object DumpPlanFiles {
   def main(args: Array[String]): Unit = {

@@ -10,6 +10,19 @@ import org.apache.spark.sql.types._
   * are single parquet files per scale factor. Everything downstream reads
   * through this one chokepoint so a real deployment only swaps this object.
   *
+  * Two reads: [[apply]] is the plain scan; [[spread]] is the scan followed
+  * by a round-robin repartition to `defaultParallelism`. Every fixture file
+  * holds ONE row group per table (FIXTURES.md), so Spark cannot split the
+  * plain scan and a narrow pipeline over it runs on one core until its
+  * first shuffle. Queries whose per-row work dominates the scan (shingle
+  * hashing, regex routing, json parsing, payload synthesis) read through
+  * [[spread]] to put that work on every core. The spread is part of the
+  * fixture contract, not a session option: tests, Verify, Bench and the
+  * plan dumps all build the same plan. A replacing loader whose tables
+  * already scan in parallel (many files / row groups) implements
+  * `spread` as its plain read, because there the extra exchange is a full
+  * shuffle that buys nothing.
+  *
   * The physical parquet encoding of the fixtures has drifted across
   * generations (events.ts was TIMESTAMP(NANOS), then timestamp[us]; key
   * columns could plausibly move between int32/int64). The engine therefore
@@ -80,6 +93,10 @@ object Tables {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     reconcile(name, spark.read.parquet(s"$dir/$name.parquet"))
   }
+
+  /** The fixture read spread over every core (see the object doc). */
+  def spread(spark: SparkSession, dir: String, name: String): DataFrame =
+    apply(spark, dir, name).repartition(spark.sparkContext.defaultParallelism)
 
   /** Map the physically-read frame onto the table's logical schema:
     * pass-through when identical, cast when the encoding is a known

@@ -16,9 +16,6 @@ object Verify {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // Harness input is the single-row-group fixture parquet — opt in to
-      // the scan-parallelism shim (queries.par); prod sessions never do.
-      .config("spark.graft.singleRowgroupShim", "true")
       // The fixture harness may run the O(n^2) exact ground-truth twin
       // (q_dedup_embedding); production sessions must not (round-4 #5).
       .config("spark.graft.allowQuadratic", "true")

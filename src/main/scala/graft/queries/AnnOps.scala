@@ -41,7 +41,7 @@ object AnnOps {
     * one fused shingle_hash60 pass per doc (see that expression's
     * engine-parity contract; it IS `array_distinct(shingles) |> h60`). */
   private def shingleHashes(s: SparkSession, d: String): DataFrame =
-    par(Tables(s, d, "documents"))
+    Tables.spread(s, d, "documents")
       .select(col("doc_id"),
         explode(graft.functions.ShingleHash60(s, col("text"), 3, distinct = true))
           .as("h"))
@@ -244,7 +244,7 @@ object AnnOps {
       val isNew = col("doc_id") % 10 === 3
       val tag = FixtureLayout.contentTag(d, Seq("documents"))
       val base = s"${System.getProperty("java.io.tmpdir")}/graft_mhidx_$tag"
-      def corpusSh = par(Tables(s, d, "documents")).filter(!isNew)
+      def corpusSh = Tables(s, d, "documents").filter(!isNew)
         .select(col("doc_id"),
           graft.functions.ShingleHash60(s, col("text"), 3, distinct = true)
             .as("sh"))
@@ -257,7 +257,7 @@ object AnnOps {
         corpusSh
       }
       // eager: one sketch pass feeds banding + verify
-      val newSh = persistEager(par(Tables(s, d, "documents"))
+      val newSh = persistEager(Tables(s, d, "documents")
         .filter(isNew)
         .select(col("doc_id"),
           graft.functions.ShingleHash60(s, col("text"), 3, distinct = true)
@@ -351,7 +351,7 @@ object AnnOps {
         .select(col("doc_id"),
           (col("doc_id") === col("cluster_id")).as("near_canonical"))
       val base = TextOps.withQualityCols(TextOps.withLangCols(
-          par(Tables(s, d, "documents"))))
+          Tables(s, d, "documents")))
         .select(col("doc_id"), col("pred_lang"), col("quality"))
       val out = base
         .join(mem.select(col("doc_id"),
@@ -681,7 +681,7 @@ object AnnOps {
       // the 48-plane projection runs once. Zero-norm vectors are dropped
       // up front: their cosine is undefined (NaN) on both engines.
       // eager fill: one signature pass for all three reads
-      val sig = persistEager(par(Tables(s, d, "embeddings"))
+      val sig = persistEager(Tables.spread(s, d, "embeddings")
         .select(col("vec_id"), col("embedding"),
           sqrt(DotProduct(s, col("embedding"), col("embedding"))).as("nrm"),
           rpSig(s, "embedding").as("bits"))
@@ -1219,13 +1219,13 @@ object AnnOps {
     * See q_semdedup's Scaladoc for the full determinism contract; the
     * SQL twin of this helper is `semAssignCtes`. */
   private def semAssigned(s: SparkSession, d: String): DataFrame =
-    // par (round 18): the sf1 probe read q_semdedup at a c8/c32 ratio
-    // of 0.92 with ~24 s wall — both corpus passes (the 64-dim seed
-    // explode with a per-row md5 bucket, and the K-DotProduct argmax
-    // assignment) were serialized on the single-row-group fixture scan.
-    // No-op in production sessions; the pipeline twin's canon input is
-    // already partitioned by its class machinery.
-    semAssignedOf(s, par(Tables(s, d, "embeddings")))
+    // Spread read (round 18): the sf1 probe read q_semdedup at a c8/c32
+    // ratio of 0.92 with ~24 s wall — both corpus passes (the 64-dim
+    // seed explode with a per-row md5 bucket, and the K-DotProduct
+    // argmax assignment) were serialized on the single-row-group fixture
+    // scan. The pipeline twin's canon input is already partitioned by
+    // its class machinery.
+    semAssignedOf(s, Tables.spread(s, d, "embeddings"))
 
   /** [[semAssigned]] over an arbitrary (vec_id, embedding) corpus —
     * round-14: q_semdedup_pipeline runs the SAME assignment over the
@@ -1355,7 +1355,7 @@ object AnnOps {
     // verdict rows.
     "q_semdedup_pipeline" -> ((s, d) => {
       val w = Window.partitionBy("embedding")
-      val tagged = persistEager(par(Tables(s, d, "embeddings"))
+      val tagged = persistEager(Tables(s, d, "embeddings")
         .select("vec_id", "embedding")
         .withColumn("rn", row_number().over(w.orderBy("vec_id")))
         .withColumn("n_copies", count(lit(1)).over(w))
@@ -1460,7 +1460,7 @@ object AnnOps {
       val cells = persistEager(semAssigned(s, d)
         .select(col("vec_id").as("doc_id"), col("cell")))
       val sz = cells.groupBy("cell").agg(count(lit(1)).as("n_docs"))
-      val toks = par(Tables(s, d, "documents"))
+      val toks = Tables(s, d, "documents")
         .select(col("doc_id"),
           explode(split(lower(col("text")), " ")).as("token"))
         .filter(col("token") =!= "")

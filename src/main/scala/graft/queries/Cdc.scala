@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
@@ -35,11 +35,31 @@ object Cdc {
     * (SURVEY §8-B1). */
   val resolvedFile = "/([^/]*)/(\\d{4}-\\d{2}-\\d{2})/(\\d{33})\\.RESOLVED$"
 
+  private val isResolved = regexp_extract(col("path"), resolvedFile, 1) =!= ""
+  private val isGeneral = regexp_extract(col("path"), generalFile, 1) =!= ""
+
+  /** The route decision's table over a `path` column (R4+R5+R7): the
+    * table name, "RESOLVED", or "404". Shared by q_cdc_route and
+    * Streams.route. */
+  val routeTbl: Column =
+    when(isResolved, "RESOLVED")
+      .when(isGeneral, regexp_extract(col("path"), generalFile, 5))
+      .otherwise("404")
+
+  /** The route decision's destination topic: `prefix` + the path's topic
+    * segment, null when the path is unroutable (404). */
+  def routeTopic(prefix: String): Column =
+    when(isResolved,
+      concat(lit(prefix), regexp_extract(col("path"), resolvedFile, 1)))
+      .when(isGeneral,
+        concat(lit(prefix), regexp_extract(col("path"), generalFile, 1)))
+      .otherwise(lit(null))
+
   /** Deterministic changefeed path per order, exercising all three route
     * branches: data file, RESOLVED marker, and the 404 fall-through. */
   private[queries] def withPath(o: DataFrame): DataFrame = {
     val ts33 = lpad(col("o_orderkey").cast("string"), 33, "0")
-    par(o).withColumn("path",
+    o.withColumn("path",
       when(col("o_orderkey") % 17 === 0,
         concat(lit("/v1/ord_topic/2024-01-01/"), ts33, lit(".RESOLVED")))
         .when(col("o_orderkey") % 13 === 0,
@@ -76,7 +96,7 @@ object Cdc {
     // Build the ndjson envelope line from orders, then parse it back with
     // from_json and classify insert/delete via `after IS NULL` (R2+R5).
     "q_cdc_envelope_parse" -> ((s, d) => {
-      val o = par(Tables(s, d, "orders"))
+      val o = Tables(s, d, "orders")
       val isDel = col("o_orderkey") % 10 === 0
       val afterJson = to_json(struct(
         col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
@@ -105,23 +125,15 @@ object Cdc {
     // The R4+R5+R7 routing decision as a query: regex-destructure the path,
     // pick the branch, apply the topic prefix.
     "q_cdc_route" -> ((s, d) => {
-      val p = withPath(Tables(s, d, "orders"))
-      val isResolved = regexp_extract(col("path"), resolvedFile, 1) =!= ""
-      val isGeneral = regexp_extract(col("path"), generalFile, 1) =!= ""
+      val p = withPath(Tables.spread(s, d, "orders"))
       p.select(
         col("o_orderkey"), col("path"),
         regexp_extract(col("path"), generalFile, 2).as("dt"),
         regexp_extract(col("path"), generalFile, 3).as("ts33"),
         regexp_extract(col("path"), generalFile, 4).as("uniquer"),
         regexp_extract(col("path"), generalFile, 6).as("schema_id"),
-        when(isResolved, "RESOLVED")
-          .when(isGeneral, regexp_extract(col("path"), generalFile, 5))
-          .otherwise("404").as("tbl"),
-        when(isResolved,
-          concat(lit("cdc-"), regexp_extract(col("path"), resolvedFile, 1)))
-          .when(isGeneral,
-            concat(lit("cdc-"), regexp_extract(col("path"), generalFile, 1)))
-          .otherwise(null).as("topic"))
+        routeTbl.as("tbl"),
+        routeTopic("cdc-").as("topic"))
         .orderBy("o_orderkey")
     }),
 
@@ -138,7 +150,7 @@ object Cdc {
     "q_cdc_schema_evolution" -> ((s, d) => {
       val ts33 = lpad(col("o_orderkey").cast("string"), 33, "0")
       val sid = floor(col("o_orderkey") / 1000).cast("long") + 1
-      val p = par(Tables(s, d, "orders"))
+      val p = Tables(s, d, "orders")
         .withColumn("path", concat(
           lit("/v1/ord_topic/2024-01-01/"), ts33,
           lit("-u"), (col("o_orderkey") % 97).cast("string"),

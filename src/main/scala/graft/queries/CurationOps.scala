@@ -128,7 +128,7 @@ object CurationOps {
     // (benchmarks are MBs); the corpus side streams map-side.
     "q_decontaminate" -> ((s, d) => {
       val docs = Tables(s, d, "documents")
-      val sh = par(docs).select(col("doc_id"),
+      val sh = Tables.spread(s, d, "documents").select(col("doc_id"),
         explode(graft.functions.ShingleHash60(s, col("text"), 5,
           distinct = true)).as("s"))
       val probe = sh.filter(col("doc_id") % 20 === 0)
@@ -1003,13 +1003,13 @@ object CurationOps {
         s"${System.getProperty("java.io.tmpdir")}/graft_novidx_$tag"
       val stored = FixtureLayout.ensureBucketedTable(s,
         s"graft_novidx_${tag}_sh", s"$base/sh", "s", 8) {
-        par(Tables(s, d, "documents")).filter(!isNew)
+        Tables(s, d, "documents").filter(!isNew)
           .select(explode(graft.functions.ShingleHash60(s, col("text"), 3,
             distinct = true)).as("s"))
           .distinct()
       }
       // eager: one sketch pass feeds counts + anti-join
-      val dropSh = persistEager(par(Tables(s, d, "documents"))
+      val dropSh = persistEager(Tables(s, d, "documents")
         .filter(isNew)
         .select(col("doc_id"),
           explode(graft.functions.ShingleHash60(s, col("text"), 3,
@@ -1036,7 +1036,7 @@ object CurationOps {
     // sum; the 1-per-source totals broadcast. Two token-keyed two-phase
     // aggs — never a collect.
     "q_entropy_per_source" -> ((s, d) => {
-      val toks = par(Tables(s, d, "documents"))
+      val toks = Tables(s, d, "documents")
         .select(col("source"),
           explode(split(lower(col("text")), " ")).as("token"))
         .filter(col("token") =!= "")

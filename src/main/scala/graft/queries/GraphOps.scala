@@ -121,7 +121,7 @@ object GraphOps {
     s"$root/graft_affidx_$tag$capSuffix"
   }
 
-  /** Stored-partial read with the DumpPlans escape hatch: a
+  /** Stored-partial read with the plan-dump escape hatch: a
     * plan-inspection session (`spark.graft.skipEagerMaterialize=true`)
     * must run NO jobs at frame-build time, but a cold store would force
     * full base-side write jobs through ensureDir just to dump a plan
@@ -240,7 +240,7 @@ object GraphOps {
     "q_pagerank" -> ((s, d) => {
       val (inc, pairs) = pairCounts(s, d)
       // one pair computation serves all 8 rounds (persistEager: no job
-      // and no cache under the DumpPlans escape hatch)
+      // and no cache under the plan-dump escape hatch)
       val edges = persistEager(
         pairs.select(col("p1").as("src"), col("p2").as("dst"))
           .unionByName(pairs.select(col("p2").as("src"),

@@ -128,7 +128,7 @@ object LlmOps {
       // class assignment shuffles only (digest, doc_id); canonical text
       // comes back through a doc_id join against the scan — text never
       // shuffles by digest (classFanBack's construction)
-      val docsRaw = par(Tables(s, d, "documents"))
+      val docsRaw = Tables.spread(s, d, "documents")
       val cls = docsRaw
         .select(md5(lower(trim(col("text"))).cast("binary")).as("digest"),
           col("doc_id"))
@@ -443,7 +443,7 @@ object LlmOps {
     // subtrees per element (CollapseProject inlines them), which would
     // recompute the array max d times per row.
     "q_embedding_quantize" -> ((s, d) => {
-      val e = par(Tables(s, d, "embeddings"))
+      val e = Tables(s, d, "embeddings")
         .select(col("vec_id"), posexplode(col("embedding")))
         .select(col("vec_id"), col("pos"), col("col").cast("double").as("x"))
       val w = Window.partitionBy("vec_id")
@@ -486,7 +486,7 @@ object LlmOps {
         .withColumn("rw",
           (pmod(h, lit(2001L)) - 1000L).cast("decimal(4,0)")
             * lit("0.001").cast("decimal(4,3)"))
-      val e = par(Tables(s, d, "embeddings"))
+      val e = Tables.spread(s, d, "embeddings")
         .select(col("vec_id"), posexplode(col("embedding")))
         .select(col("vec_id"), col("pos").cast("long").as("i"),
           round(col("col").cast("double"), 6).cast("decimal(12,6)").as("x6"))

@@ -194,13 +194,12 @@ object MultiModal {
     * cheap. */
   def corpus(spark: SparkSession, dir: String): Dataset[MMRecord] = {
     import spark.implicits._
-    // par(): the payload SYNTHESIS below is the fixture's decode-cost
-    // stand-in; without the single-row-group shim it (and every
-    // downstream mapPartitions that inherits this partitioning, e.g.
-    // frameDedup's decode) runs on ONE core. Real deployments read many
-    // files and never need the shim (round-6 perf audit: q_frame_dedup
-    // spent its whole decode stage single-threaded).
-    par(Tables(spark, dir, "documents"))
+    // Spread read: the payload SYNTHESIS below is the fixture's
+    // decode-cost stand-in; over the plain one-row-group scan it (and
+    // every downstream mapPartitions that inherits this partitioning,
+    // e.g. frameDedup's decode) runs on ONE core (round-6 perf audit:
+    // q_frame_dedup spent its whole decode stage single-threaded).
+    Tables.spread(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("n_chars"))
       .as[(Long, String, Long)]
       .map { case (id, text, nChars) =>

@@ -192,7 +192,7 @@ object TextOps {
       s: org.apache.spark.sql.SparkSession, d: String,
       key: Column => Column = t => md5(lower(trim(t)).cast("binary")))
       : (DataFrame, DataFrame) = {
-    val docs = par(graft.Tables(s, d, "documents"))
+    val docs = graft.Tables(s, d, "documents")
     val w = Window.partitionBy("ckey")
     val mem = persistLazy(docs
       .select(key(col("text")).as("ckey"), col("doc_id"))
@@ -275,7 +275,7 @@ object TextOps {
     // shingle strings inside the expression), so all three stats read
     // off the same array.
     "q_fingerprint" -> ((s, d) =>
-      par(Tables(s, d, "documents"))
+      Tables.spread(s, d, "documents")
         .withColumn("h",
           graft.functions.ShingleHash60(s, col("text"), 4, distinct = true))
         .select(col("doc_id"),
@@ -294,7 +294,7 @@ object TextOps {
     // values in double. Scale: two token-keyed two-phase aggs + a 1-row
     // broadcast total + one (doc_id, token)-keyed agg — no collects.
     "q_unigram_logprob" -> ((s, d) => {
-      val toks = par(Tables(s, d, "documents"))
+      val toks = Tables(s, d, "documents")
         .select(col("doc_id"),
           explode(split(lower(col("text")), " ")).as("token"))
         .filter(col("token") =!= "")
@@ -351,7 +351,7 @@ object TextOps {
     // the unigram/bigram model tables are vocabulary-sized; AQE
     // broadcasts them when they fit, hash-joins otherwise.
     "q_perplexity_bigram" -> ((s, d) => {
-      val toks = par(Tables(s, d, "documents"))
+      val toks = Tables.spread(s, d, "documents")
         .select(col("doc_id"),
           posexplode(split(lower(col("text")), " ")).as(Seq("pos", "w")))
         .filter(col("w") =!= "")
@@ -411,7 +411,7 @@ object TextOps {
     // identical on both engines. Post-floor the bigram table is tiny;
     // the joins key on words, two-phase aggs underneath — scale-sane.
     "q_pmi_collocations" -> ((s, d) => {
-      val toks = par(Tables(s, d, "documents"))
+      val toks = Tables(s, d, "documents")
         .select(col("doc_id"),
           posexplode(split(lower(col("text")), " ")).as(Seq("pos", "w")))
         .filter(col("w") =!= "")
@@ -445,7 +445,7 @@ object TextOps {
     // full token list never reaches the driver. Filter on the ROUNDED
     // share so both engines agree at the threshold boundary.
     "q_heavy_hitters" -> ((s, d) => {
-      val toks = par(Tables(s, d, "documents"))
+      val toks = Tables.spread(s, d, "documents")
         .select(col("doc_id"),
           explode(split(lower(col("text")), " ")).as("token"))
         .filter(col("token") =!= "")
@@ -473,13 +473,13 @@ object TextOps {
     // driver collect; the window partitions by doc_id (bounded rows per
     // doc).
     "q_tfidf_keywords" -> ((s, d) => {
-      val toks = par(Tables(s, d, "documents"))
+      val toks = Tables(s, d, "documents")
         .select(col("doc_id"),
           explode(split(lower(col("text")), " ")).as("token"))
         .filter(col("token") =!= "")
       val tf = toks.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
       val dfq = tf.groupBy("token").agg(count(lit(1)).as("df"))
-      val nd = par(Tables(s, d, "documents"))
+      val nd = Tables(s, d, "documents")
         .agg(countDistinct(col("doc_id")).as("n_docs"))
       val scored = tf.join(dfq, "token").crossJoin(broadcast(nd))
         .withColumn("tfidf",
@@ -722,7 +722,7 @@ object TextOps {
     // identically on both engines (explode and unnest agree).
     "q_ngram_novelty" -> ((s, d) => {
       // eager fill: one md5 pass for both aggregations
-      val sh = persistEager(par(Tables(s, d, "documents"))
+      val sh = persistEager(Tables.spread(s, d, "documents")
         .select(col("doc_id"),
           explode(graft.functions.ShingleHash60(s, col("text"), 3,
             distinct = true)).as("s")))
@@ -753,7 +753,7 @@ object TextOps {
     // and the OLS run on the 100-row head — output is 1 row at any
     // corpus size.
     "q_zipf_fit" -> ((s, d) => {
-      val toks = par(Tables(s, d, "documents"))
+      val toks = Tables(s, d, "documents")
         .select(explode(split(lower(col("text")), " ")).as("token"))
         .filter(col("token") =!= "")
       val head = toks.groupBy("token").agg(count(lit(1)).as("cnt"))
@@ -806,7 +806,7 @@ object TextOps {
     "q_bm25_search" -> ((s, d) => {
       val qterms = Seq("spark", "window", "join")
       val tok = split(lower(col("text")), " ")
-      val base0 = par(Tables(s, d, "documents"))
+      val base0 = Tables(s, d, "documents")
         .select(col("doc_id"), tok.as("tok"))
         .withColumn("dl",
           size(filter(col("tok"), t => t =!= "")).cast("long"))
@@ -855,7 +855,7 @@ object TextOps {
     // agg — the corpus is scanned twice and never shuffled on anything
     // wider than the token key.
     "q_vocab_coverage" -> ((s, d) => {
-      val toks = par(Tables(s, d, "documents"))
+      val toks = Tables(s, d, "documents")
         .select(col("source"),
           explode(split(lower(col("text")), " ")).as("token"))
         .filter(col("token") =!= "")

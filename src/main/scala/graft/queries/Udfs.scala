@@ -139,7 +139,7 @@ object Udfs {
     "q_heavy_hitters_mg" -> ((s, d) => {
       import s.implicits._
       val k = 128
-      val toks = par(Tables(s, d, "documents"))
+      val toks = Tables.spread(s, d, "documents")
         .select(explode(split(lower(col("text")), " ")).as("token"))
         .filter(col("token") =!= "").as[String]
       val summary = toks.select(new MisraGriesAgg(k)
@@ -162,7 +162,7 @@ object Udfs {
     "q_heavy_hitters_cms" -> ((s, d) => {
       import s.implicits._
       val depth = 4; val width = 2048
-      val toks = par(Tables(s, d, "documents"))
+      val toks = Tables.spread(s, d, "documents")
         .select(explode(split(lower(col("text")), " ")).as("token"))
         .filter(col("token") =!= "").as[String]
       val sketch = toks.select(new CountMinSketchAgg(depth, width)
@@ -179,7 +179,7 @@ object Udfs {
 
     "q_udf_topic_name" -> ((s, d) => {
       val topicName = udf(topicNameImpl _)
-      Cdc.withPath(Tables(s, d, "orders"))
+      Cdc.withPath(Tables.spread(s, d, "orders"))
         .select(col("o_orderkey"), col("path"),
           topicName(lit("cdc-"), col("path")).as("topic"))
         .orderBy("o_orderkey")

@@ -283,10 +283,10 @@ object Windows {
       // Round-18: the sf1 core-scaling probe read this key at a c8/c32
       // ratio of 1.00 with 21 s wall — the per-row timestamp work
       // (date_trunc + decimal partial agg over the whole events table)
-      // was serialized on the fixture's single-row-group scan. The par
-      // shim (a no-op in production sessions) spreads exactly that map
-      // side; everything downstream was already shuffle-parallel.
-      val hourly = par(Tables(s, d, "events"))
+      // was serialized on the fixture's single-row-group scan. The spread
+      // read puts exactly that map side on every core; everything
+      // downstream was already shuffle-parallel.
+      val hourly = Tables.spread(s, d, "events")
         .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("hr"))
         .agg(count(lit(1)).as("n_events"),
           Det.dsum(col("value")).as("hr_value"))

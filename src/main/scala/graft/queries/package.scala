@@ -7,30 +7,10 @@ package object queries {
   /** A declared query: (session, scale-factor dir) => result frame. */
   type Q = (SparkSession, String) => DataFrame
 
-  /** Local-fixture scan-parallelism shim. The driver's test parquet is one
-    * file with ONE row group per table, so Spark cannot split the scan and
-    * every narrow pipeline runs on a single core until its first shuffle.
-    * Queries whose per-row compute dominates the scan (md5 sketches,
-    * regex routing, json parsing) insert this cheap exchange right after
-    * the scan to spread that work across all cores. A real deployment
-    * reads many row groups/files in parallel and must NOT carry this
-    * repartition — it would be a gratuitous full-data shuffle at 100 TB —
-    * so it is OFF unless the harness opts in via
-    * `spark.graft.singleRowgroupShim=true` (set by Verify/Bench, whose
-    * input IS the single-row-group fixture). Production sessions never set
-    * it and get the clean no-exchange plan.
-    */
-  def par(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    if (s.conf.get("spark.graft.singleRowgroupShim", "false") == "true")
-      df.repartition(s.sparkContext.defaultParallelism)
-    else df
-  }
-
   /** Persist `df` MEMORY_AND_DISK and eagerly fill the cache with one
     * count, so a frame read by several downstream branches computes its
     * pipeline exactly once instead of racing per-side. Under the
-    * DumpPlans escape hatch (`spark.graft.skipEagerMaterialize=true`)
+    * plan-dump escape hatch (`spark.graft.skipEagerMaterialize=true`)
     * it returns `df` untouched: a plan-inspection session must neither
     * execute the job at frame-BUILD time nor persist a cache that
     * materializeAndFree would then skip unpersisting (round-10 advice —
@@ -54,7 +34,7 @@ package object queries {
     * (the consumer's one action fills this cache as it runs, so the
     * explicit count would be a pure extra job; the per-side race
     * persistEager exists to prevent cannot happen when exactly one
-    * consumer runs first). Honors the DumpPlans escape hatch like
+    * consumer runs first). Honors the plan-dump escape hatch like
     * persistEager: a plan-inspection session gets the bare frame and
     * no cache to leak. */
   private[queries] def persistLazy(df: DataFrame): DataFrame = {
@@ -147,7 +127,7 @@ package object queries {
     */
   private[queries] def materializeAndFree(
       df: DataFrame, handles: DataFrame*): DataFrame = {
-    // Plan-inspection escape hatch: DumpPlans sets this so building the
+    // Plan-inspection escape hatch: DumpPlanFiles sets this so building the
     // frame does NOT execute the sketch job (an eager localCheckpoint at
     // plan-dump time would both run the full query and collapse the
     // dumped plan to a LogicalRDD scan). Leaks the internal caches —

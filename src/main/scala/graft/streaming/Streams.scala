@@ -106,20 +106,9 @@ object Streams {
 
   /** R4+R5+R7: destructure the changefeed path and pick the destination
     * topic (prefix applied), `tbl` = table, "RESOLVED", or "404". */
-  def route(df: DataFrame, prefix: String): DataFrame = {
-    val isResolved = regexp_extract(col("path"), Cdc.resolvedFile, 1) =!= ""
-    val isGeneral = regexp_extract(col("path"), Cdc.generalFile, 1) =!= ""
-    df.withColumn("tbl",
-        when(isResolved, "RESOLVED")
-          .when(isGeneral, regexp_extract(col("path"), Cdc.generalFile, 5))
-          .otherwise("404"))
-      .withColumn("topic",
-        when(isResolved,
-          concat(lit(prefix), regexp_extract(col("path"), Cdc.resolvedFile, 1)))
-          .when(isGeneral,
-            concat(lit(prefix), regexp_extract(col("path"), Cdc.generalFile, 1)))
-          .otherwise(lit(null)))
-  }
+  def route(df: DataFrame, prefix: String): DataFrame =
+    df.withColumn("tbl", Cdc.routeTbl)
+      .withColumn("topic", Cdc.routeTopic(prefix))
 
   /** Driver-side lazy topic materializer mirroring the double-checked-lock
     * cache at publisher.go:99-129: exactly one create per topic name per

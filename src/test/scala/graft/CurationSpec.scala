@@ -424,7 +424,7 @@ class CurationSpec extends AnyFunSuite {
     // documents scan carries the drop filter (corpus re-scanned zero
     // times per refresh). The eager localCheckpoint collapses the
     // returned frame to an ExistingRDD scan, so inspect through the
-    // DumpPlans escape hatch like the other sketch-plan pins.
+    // plan-dump escape hatch like the other sketch-plan pins.
     spark.conf.set("spark.graft.skipEagerMaterialize", "true")
     val plan =
       try run("q_novelty_incremental").queryExecution.executedPlan.toString

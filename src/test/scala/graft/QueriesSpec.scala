@@ -585,7 +585,7 @@ class QueriesSpec extends AnyFunSuite {
     // conservation: every distinct corpus shingle is novel in EXACTLY one
     // doc, so per-doc novel counts sum to the corpus distinct-shingle count
     val sumNovel = rows.map(_.getLong(2)).sum
-    val distinctShingles = graft.queries.par(Tables(spark, sf, "documents"))
+    val distinctShingles = Tables.spread(spark, sf, "documents")
       .select(explode(graft.functions.ShingleHash60(spark, col("text"), 3,
         distinct = true)).as("s"))
       .agg(countDistinct(col("s"))).collect()(0).getLong(0)

@@ -133,4 +133,22 @@ class TablesSpec extends AnyFunSuite {
       assert(df.limit(1).count() == 1, s"$t is empty")
     }
   }
+
+  test("spread: the plain test session spreads the fixture over every core") {
+    // no session option gates the spread, so the suite runs the plan the
+    // oracle checks and the bench times
+    val df = Tables.spread(spark, sf, "documents")
+    val n = spark.sparkContext.defaultParallelism
+    assert(df.rdd.getNumPartitions == n)
+    val rows = df.rdd.mapPartitions(it => Iterator(it.size)).collect()
+    assert(rows.count(_ > 0) > 1,
+      s"spread left every row in one partition: ${rows.mkString(",")}")
+  }
+
+  test("spread: q_cdc_route runs the spread plan in the test session") {
+    val plan = SparkEntry.queries("q_cdc_route")(spark, sf)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("RoundRobinPartitioning"),
+      s"no spread exchange above the orders scan:\n$plan")
+  }
 }
