@@ -8,12 +8,12 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: runMain graft.DumpPlanFiles <outDir> <suffix> <k1,k2,...> [sfDir]
   *
-  * Same session shape as the test session (TestSpark) plus eager
-  * materialization disabled, so a dump never executes sketch jobs and
-  * the dumped plan is the real pipeline rather than a post-checkpoint
-  * LogicalRDD scan. Iterative fixpoint operators (pagerank / CC
-  * consumers) therefore dump their lazy per-round chain — shape is still
-  * readable, rounds are unrolled.
+  * Same session shape as the test session (TestSpark). Each file holds
+  * the plans the key's build runs (PlanCapture): every build-time
+  * action's plan under an `== <action> ==` header, then the returned
+  * frame's plan under `== result ==`. A sketch query's result is
+  * usually a checkpointed `Scan ExistingRDD`; its pipeline is the
+  * `localCheckpoint` plan above it.
   */
 object DumpPlanFiles {
   def main(args: Array[String]): Unit = {
@@ -33,15 +33,16 @@ object DumpPlanFiles {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.graft.allowQuadratic", "true")
-      .config("spark.graft.skipEagerMaterialize", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     keys.foreach { k =>
-      val plan = SparkEntry.queries(k)(spark, sfDir)
-        .queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+      val plans = PlanCapture(spark)(SparkEntry.queries(k)(spark, sfDir))
+        .map { case (action, qe) =>
+          s"== $action ==\n" + qe.explainString(
+            org.apache.spark.sql.execution.FormattedMode)
+        }
       java.nio.file.Files.write(outDir.resolve(s"${k}_$suffix.txt"),
-        plan.getBytes("UTF-8"))
+        plans.mkString("\n").getBytes("UTF-8"))
       println(s"[dumpplanfiles] wrote ${k}_$suffix.txt")
     }
     spark.stop()

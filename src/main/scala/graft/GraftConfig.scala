@@ -45,6 +45,25 @@ import org.apache.spark.sql.SparkSession
   *                                    exercises it.
   *  (--projectID remains Google-Cloud-specific with no analogue: topics
   *  here are directories/brokers, not cloud resource names.)
+  *
+  * Keys read where they are used (no reference analogue; reader, default):
+  *  - `spark.graft.allowQuadratic` — q_dedup_embedding's exact O(n²)
+  *    twin (false; the test session, Verify and Bench set true)
+  *  - `spark.graft.basketCap` — GraphOps.pairCounts/incrementalInc and
+  *    Streams.affinityUpdate, per-order part cut (0 = off)
+  *  - `spark.graft.indexRoot` — GraphOps.affIdxBase, root of the
+  *    affinity partial store (java.io.tmpdir)
+  *  - `spark.graft.linkDegCap` — q_link_predict's bottom-k adjacency
+  *    sketch (0 = off)
+  *  - `spark.graft.shingleDfCap` — TextOps.shinglePairSizedFromArrays,
+  *    df-capped shingle candidates (0 = off)
+  *  - `spark.graft.packChunkSize` — q_pack_sequences' chunk size (4096)
+  *  - `spark.graft.affinityCompactEvery` — Streams.affinityUpdate,
+  *    fold increments into the view every N epochs (0 = never)
+  *  - `spark.graft.tombstoneLowWatermark` — Streams.cdcUpsertMaterialize,
+  *    HLC below which tombstones are collected ("" = keep all)
+  *  - `spark.graft.materializeRetainGenerations` —
+  *    Streams.cdcUpsertMaterialize, table generations kept (2)
   */
 final case class GraftConfig(
   bindAddr: String,

@@ -92,8 +92,7 @@ object AnnOps {
     * fanOut). fanOut mirrors classFanBack's short-circuit: arr's
     * cache-filling count observes max(cnt), and a replica-free corpus
     * (every class a singleton) provably makes the fan-back joins
-    * identity/empty, so consumers skip them; plan-digest sessions
-    * observe nothing and take the general branch. Callers release mem
+    * identity/empty, so consumers skip them. Callers release mem
     * and arr (and the returned handles if they bypass
     * dedupClusterLabelsFrom) via materializeAndFree. */
   private def minhashClassAnd(s: SparkSession, d: String)
@@ -105,7 +104,7 @@ object AnnOps {
       max(col("cnt")))
     val (pairs, handles) =
       minhashPairsAndOf(arr.select(col("doc_id"), col("sh")))
-    (pairs, mem, arr, handles, maxCnt.forall(_ > 1))
+    (pairs, mem, arr, handles, maxCnt > 1)
   }
 
   /** (doc_id, band, bucket) LSH banding of a (doc_id, sh) frame: 48

@@ -121,42 +121,12 @@ object GraphOps {
     s"$root/graft_affidx_$tag$capSuffix"
   }
 
-  /** Stored-partial read with the plan-dump escape hatch: a
-    * plan-inspection session (`spark.graft.skipEagerMaterialize=true`)
-    * must run NO jobs at frame-build time, but a cold store would force
-    * full base-side write jobs through ensureDir just to dump a plan
-    * (round-11 advice #4). In those sessions the stored read is
-    * substituted with the EQUIVALENT lazy base-side frame — same rows by
-    * the store's own construction (the store is nothing but `build`
-    * materialized), so the dumped plan is the real pipeline shape, not a
-    * parquet scan of an opaque cache, and the digest is stable whether
-    * or not a prior run warmed the store. An inspection session that
-    * wants the STORED-path plan instead (the refresh shape a production
-    * maintainer runs) sets `spark.graft.requireWarmIndex=true`: the
-    * store must be pre-warmed and is read lazily, and a cold store
-    * fails fast rather than silently running the build jobs.
-    * Harness/production sessions always take the stored path. */
+  /** Stored-partial read: `build` is written once to the
+    * content-addressed `path` (FixtureLayout.ensureDir) and every
+    * refresh reads the stored parquet. */
   private def storedOr(s: SparkSession, path: String)
-      (build: => DataFrame): DataFrame = {
-    val skipEager =
-      s.conf.get("spark.graft.skipEagerMaterialize", "false") == "true"
-    val requireWarm =
-      s.conf.get("spark.graft.requireWarmIndex", "false") == "true"
-    if (skipEager && requireWarm) {
-      if (!new java.io.File(path).isDirectory)
-        throw new IllegalStateException(
-          s"spark.graft.requireWarmIndex=true but the partial store at " +
-            s"$path is cold — pre-warm it with a normal-session refresh " +
-            "before inspecting the stored-path plan")
-      s.read.parquet(path)
-    } else if (skipEager) build
-    else {
-      val bf = () => build
-      s.read.parquet(FixtureLayout.ensureDir(path) { st =>
-        bf().write.parquet(st)
-      })
-    }
-  }
+      (build: => DataFrame): DataFrame =
+    s.read.parquet(FixtureLayout.ensureDir(path)(build.write.parquet(_)))
 
   private def pairsPreFloor(i: DataFrame): DataFrame =
     // Round-17: same one-exchange basket-array shape as the batch
@@ -239,8 +209,7 @@ object GraphOps {
     // derived once at the end from the same long.
     "q_pagerank" -> ((s, d) => {
       val (inc, pairs) = pairCounts(s, d)
-      // one pair computation serves all 8 rounds (persistEager: no job
-      // and no cache under the plan-dump escape hatch)
+      // one pair computation serves all 8 rounds
       val edges = persistEager(
         pairs.select(col("p1").as("src"), col("p2").as("dst"))
           .unionByName(pairs.select(col("p2").as("src"),
@@ -608,98 +577,56 @@ object GraphOps {
     * Output: (pk, degree, rank_pico, rank) ordered rank desc, pk. */
   private[graft] def pageRank(nodes: DataFrame, edges: DataFrame)
       : DataFrame = {
-    val s = nodes.sparkSession
-    val skipEager = s.conf
-      .get("spark.graft.skipEagerMaterialize", "false") == "true"
     val edeg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     // (pk, deg) for every node, deg 0 for dangling — checkpointed once,
     // reused as the spine of all 8 rounds and the final projection
-    val degNodes0 = nodes
+    val degNodes = nodes
       .join(edeg.withColumnRenamed("src", "pk"), Seq("pk"), "left")
       .select(col("pk"), coalesce(col("deg"), lit(0L)).as("deg"))
-    if (skipEager) pageRankLazy(degNodes0, edges)
-    else {
-      // Round-17 re-plan (guide §2.4/§1.2): the old recurrence carried
-      // n and the dangling mass as 1-row broadcast-joined frames, so
-      // every round paid two extra jobs (the dang agg + the nDf agg
-      // feeding each BroadcastExchange) on top of its checkpoint.
-      // Both scalars are exact longs the driver may hold (the bounded
-      // O(1)-collect class): n is constant across rounds — ONE count on
-      // the checkpointed spine — and each round's dangling mass now
-      // rides the round's own checkpoint action as a Dataset.observe
-      // metric (checkpointedWithSum — the CC kernel's convergence-sum
-      // machinery). One job per round instead of three; the integer
-      // pico-unit recurrence is unchanged term for term (Scala Long
-      // division == SQL div on these nonnegative values), so the rank
-      // sequence is bit-identical — the DuckDB gate re-checks that.
-      val degNodes = degNodes0.localCheckpoint(true)
-      val n = degNodes.count()
-      val dangSum = coalesce(sum(when(col("deg") === 0, col("rp"))),
-        lit(0L))
-      var (r, dang) = checkpointedWithSum(
-        degNodes.select(col("pk"), col("deg"),
-          lit(1000000000000L / n).as("rp")), dangSum)
-      for (_ <- 1 to 8) {
-        val contrib = edges
-          .join(r, edges("src") === r("pk"))
-          .groupBy(col("dst"))
-          .agg(sum(expr("rp div deg")).as("m"))
-          .withColumnRenamed("dst", "pk")
-        val next = degNodes
-          .join(contrib, Seq("pk"), "left")
-          .select(col("pk"), col("deg"),
-            // integer `div` (never Column./, which is a double Divide);
-            // the two driver-literal terms are the SQL div results
-            // verbatim — nonnegative Long division is identical in
-            // Scala and SQL
-            expr(s"${150000000000L / n}L + (85 * (coalesce(m, " +
-              s"cast(0 as bigint)) + ${dang / n}L)) div 100").as("rp"))
-        val (cp, ds) = checkpointedWithSum(next, dangSum)
-        r = cp
-        dang = ds
-      }
-      pageRankProject(r)
-    }
-  }
-
-  /** The pre-round-17 broadcast-scalar recurrence, kept ONLY for
-    * plan-inspection sessions (spark.graft.skipEagerMaterialize): a
-    * digest/dump session must run no jobs at frame-build time, so the
-    * driver-literal path above (one count + observed dangling sums) is
-    * unavailable there. Lazy end to end — 8 unrolled rounds of a tiny
-    * graph still dump fine. Execution sessions never take this path. */
-  private def pageRankLazy(degNodes: DataFrame, edges: DataFrame)
-      : DataFrame = {
-    val nDf = degNodes.agg(count(lit(1)).as("n"))
-    var r = degNodes.crossJoin(broadcast(nDf))
-      .select(col("pk"), col("deg"),
-        expr("1000000000000 div n").as("rp"))
+      .localCheckpoint(true)
+    // Round-17 re-plan (guide §2.4/§1.2): the old recurrence carried
+    // n and the dangling mass as 1-row broadcast-joined frames, so
+    // every round paid two extra jobs (the dang agg + the nDf agg
+    // feeding each BroadcastExchange) on top of its checkpoint.
+    // Both scalars are exact longs the driver may hold (the bounded
+    // O(1)-collect class): n is constant across rounds — ONE count on
+    // the checkpointed spine — and each round's dangling mass now
+    // rides the round's own checkpoint action as a Dataset.observe
+    // metric (checkpointedWithSum — the CC kernel's convergence-sum
+    // machinery). One job per round instead of three; the integer
+    // pico-unit recurrence is unchanged term for term (Scala Long
+    // division == SQL div on these nonnegative values), so the rank
+    // sequence is bit-identical — the DuckDB gate re-checks that.
+    val n = degNodes.count()
+    val dangSum = coalesce(sum(when(col("deg") === 0, col("rp"))),
+      lit(0L))
+    var (r, dang) = checkpointedWithSum(
+      degNodes.select(col("pk"), col("deg"),
+        lit(1000000000000L / n).as("rp")), dangSum)
     for (_ <- 1 to 8) {
-      // mass parked on degree-0 nodes, redistributed uniformly below
-      val dang = r.filter(col("deg") === 0)
-        .agg(coalesce(sum("rp"), lit(0L)).as("dang"))
       val contrib = edges
         .join(r, edges("src") === r("pk"))
         .groupBy(col("dst"))
         .agg(sum(expr("rp div deg")).as("m"))
         .withColumnRenamed("dst", "pk")
-      r = degNodes
+      val next = degNodes
         .join(contrib, Seq("pk"), "left")
-        .crossJoin(broadcast(nDf))
-        .crossJoin(broadcast(dang))
         .select(col("pk"), col("deg"),
-          expr("150000000000 div n + " +
-            "(85 * (coalesce(m, cast(0 as bigint)) + dang div n)) div 100")
-            .as("rp"))
+          // integer `div` (never Column./, which is a double Divide);
+          // the two driver-literal terms are the SQL div results
+          // verbatim — nonnegative Long division is identical in
+          // Scala and SQL
+          expr(s"${150000000000L / n}L + (85 * (coalesce(m, " +
+            s"cast(0 as bigint)) + ${dang / n}L)) div 100").as("rp"))
+      val (cp, ds) = checkpointedWithSum(next, dangSum)
+      r = cp
+      dang = ds
     }
-    pageRankProject(r)
-  }
-
-  private def pageRankProject(r: DataFrame): DataFrame =
     r.select(col("pk"), col("deg").cast("long").as("degree"),
         col("rp").as("rank_pico"),
         (col("rp").cast("double") / lit(1000000000000.0)).as("rank"))
       .orderBy(col("rank_pico").desc, col("pk").asc)
+  }
 
   /** Bottom-k neighbor sketch for the wedge pass (round-11 verdict #1 —
     * the last acknowledged 100x scale-killer): a node with more than

@@ -403,8 +403,6 @@ object Joins {
       // fold-keyed join per side. entityHubStarEdges checkpoints the
       // edges and returns the persisted hubIds frame the fan-back
       // reads; materializeAndFree releases it with the final frame.
-      // Under the plan-inspection escape hatch everything stays LAZY
-      // (the digest fixture is sf0.001).
       val (keyLab, hubIds) =
         entityKeyLabels(dirtyRows, masterRows, verified)
       val csz = Window.partitionBy("entity_id")

@@ -216,8 +216,7 @@ object TextOps {
     * function of the data alone (same rows either way; QueriesSpec
     * pins fan-back == raw on a replicated fixture, and the sf0.01/0.1
     * oracle gates run the short-circuited path against the raw-corpus
-    * SQL). Plan-digest sessions observe nothing (None) and always take
-    * the general branch, so digests stay data-independent. */
+    * SQL). */
   private[queries] def classFanBack(
       s: org.apache.spark.sql.SparkSession, d: String,
       key: Column => Column = t => md5(lower(trim(t)).cast("binary")))
@@ -236,7 +235,7 @@ object TextOps {
         size(col("sh")).cast("long").as("n_sh")), "doc_id")
       .filter(col("cnt") >= 2 && col("n_sh") > 0)
       .select(col("ckey"), col("n_sh"), col("len"))
-    (canon, mem, sized, withinCls, sh, maxCnt.forall(_ > 1))
+    (canon, mem, sized, withinCls, sh, maxCnt > 1)
   }
 
   val q: Map[String, Q] = Map(

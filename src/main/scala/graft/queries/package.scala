@@ -9,24 +9,11 @@ package object queries {
 
   /** Persist `df` MEMORY_AND_DISK and eagerly fill the cache with one
     * count, so a frame read by several downstream branches computes its
-    * pipeline exactly once instead of racing per-side. Under the
-    * plan-dump escape hatch (`spark.graft.skipEagerMaterialize=true`)
-    * it returns `df` untouched: a plan-inspection session must neither
-    * execute the job at frame-BUILD time nor persist a cache that
-    * materializeAndFree would then skip unpersisting (round-10 advice —
-    * the graph operators ran their pair-counts job and leaked the edge
-    * cache in dump sessions). `unpersist()` on the un-persisted frame
-    * is a no-op, so materializeAndFree(handles…) stays correct either
-    * way. */
+    * pipeline exactly once instead of racing per-side. */
   private[queries] def persistEager(df: DataFrame): DataFrame = {
-    if (df.sparkSession.conf
-        .get("spark.graft.skipEagerMaterialize", "false") == "true") df
-    else {
-      val p = df.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    }
+    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    p.count()
+    p
   }
 
   /** [[persistEager]] without the cache-filling count job — for a frame
@@ -34,14 +21,9 @@ package object queries {
     * (the consumer's one action fills this cache as it runs, so the
     * explicit count would be a pure extra job; the per-side race
     * persistEager exists to prevent cannot happen when exactly one
-    * consumer runs first). Honors the plan-dump escape hatch like
-    * persistEager: a plan-inspection session gets the bare frame and
-    * no cache to leak. */
-  private[queries] def persistLazy(df: DataFrame): DataFrame = {
-    if (df.sparkSession.conf
-        .get("spark.graft.skipEagerMaterialize", "false") == "true") df
-    else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  }
+    * consumer runs first). */
+  private[queries] def persistLazy(df: DataFrame): DataFrame =
+    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Has Dataset.observe delivered a metric for an eager
     * materialization in this JVM? Tri-state: null = untested, TRUE =
@@ -98,19 +80,10 @@ package object queries {
     * long-valued aggregate over `df` (see [[materializedWithLong]]) —
     * the fan-back short-circuit's data probe (round 18): the dedup
     * family branches on the corpus's max exact-dup class size without
-    * paying a second job. In a plan-inspection session
-    * (skipEagerMaterialize) no job runs, so the metric is None and
-    * callers MUST take their general branch — plan digests stay
-    * data-independent. */
+    * paying a second job. */
   private[queries] def persistEagerWithLong(
-      df: DataFrame, metric: Column): (DataFrame, Option[Long]) =
-    if (df.sparkSession.conf
-        .get("spark.graft.skipEagerMaterialize", "false") == "true")
-      (df, None)
-    else {
-      val (p, v) = materializedWithLong(df, metric)(persistEager)
-      (p, Some(v))
-    }
+      df: DataFrame, metric: Column): (DataFrame, Long) =
+    materializedWithLong(df, metric)(persistEager)
 
   /** Eagerly materialize `df` via localCheckpoint, then release the
     * internal caches it depended on. Sketch queries (minhash / simhash /
@@ -127,18 +100,9 @@ package object queries {
     */
   private[queries] def materializeAndFree(
       df: DataFrame, handles: DataFrame*): DataFrame = {
-    // Plan-inspection escape hatch: DumpPlanFiles sets this so building the
-    // frame does NOT execute the sketch job (an eager localCheckpoint at
-    // plan-dump time would both run the full query and collapse the
-    // dumped plan to a LogicalRDD scan). Leaks the internal caches —
-    // acceptable only in a dump/inspection session, never the harness.
-    if (df.sparkSession.conf
-        .get("spark.graft.skipEagerMaterialize", "false") == "true") df
-    else {
-      val out = df.localCheckpoint(true)
-      handles.foreach(_.unpersist())
-      out
-    }
+    val out = df.localCheckpoint(true)
+    handles.foreach(_.unpersist())
+    out
   }
 }
 

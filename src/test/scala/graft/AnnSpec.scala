@@ -239,16 +239,23 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("q_ann_ivfpq plan: PQ kernels present, no cartesian, bounded exchanges") {
-    // plan inspection: keep the pipeline un-materialized so the digested
-    // plan is the real search, not the checkpointed LogicalRDD stub
-    spark.conf.set("spark.graft.skipEagerMaterialize", "true")
-    val plan = try SparkEntry.queries("q_ann_ivfpq")(spark, sf)
-      .queryExecution.executedPlan.toString
-    finally spark.conf.set("spark.graft.skipEagerMaterialize", "false")
+    // the returned frame is the checkpointed LogicalRDD stub, so inspect
+    // every plan the build runs. Exchanges are counted per executed
+    // plan tree (a finished AQE plan prints its initial plan too, and a
+    // cached frame's plan reappears under every reader) and summed.
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object aqe extends AdaptiveSparkPlanHelper
+    val plans = builtPlans("q_ann_ivfpq")
+    val plan = plans.mkString("\n")
     assert(plan.contains("pq_encode") && plan.contains("pq_decode"),
       "index/ADC must run through the native PQ codec kernels")
     assert(!plan.contains("CartesianProduct"), s"cartesian in plan:\n$plan")
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
+    val exchanges = plans.map(p => aqe.collect(p) {
+      case e: ShuffleExchangeExec
+        if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }.size).sum
     assert(exchanges <= 5,
       s"too many hash exchanges ($exchanges) in:\n$plan")
   }
@@ -307,11 +314,10 @@ class AnnSpec extends AnyFunSuite {
       "a query run must not rewrite any stored index file")
 
     // plan shape: coded corpus served by the stored bucketed table, and
-    // every raw embeddings scan carries a %-10 drop/corpus filter
-    spark.conf.set("spark.graft.skipEagerMaterialize", "true")
+    // every raw embeddings scan in every plan the search runs carries a
+    // %-10 drop/corpus filter
     try {
-      val plan = SparkEntry.queries("q_ann_search_incremental")(spark, sf)
-        .queryExecution.executedPlan.toString
+      val plan = builtPlans("q_ann_search_incremental").mkString("\n")
       assert(plan.contains("graft_annidx_"),
         s"stored coded table missing from the plan:\n$plan")
       val embScans = plan.linesIterator
@@ -319,10 +325,7 @@ class AnnSpec extends AnyFunSuite {
       assert(embScans.nonEmpty, "probe side must scan embeddings")
       embScans.foreach(l => assert(l.contains("% 10)"),
         s"embeddings scan without a drop/corpus filter (re-encoding?):\n$l"))
-    } finally {
-      spark.conf.set("spark.graft.skipEagerMaterialize", "false")
-      spark.sharedState.cacheManager.clearCache()
-    }
+    } finally spark.sharedState.cacheManager.clearCache()
   }
 
   test("minhash candidates achieve full recall on planted near-dups") {
@@ -537,15 +540,13 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("q_dedup_incremental: stored index is read, never rebuilt") {
-    // Warm the index (idempotent), then inspect the un-truncated plan:
-    // the corpus side must come from the two bucketed index tables, and
-    // every scan of the raw documents table must carry the new-drop
-    // filter — i.e. the existing corpus is re-scanned zero times.
+    // Warm the index (idempotent), then inspect every plan the build
+    // runs: the corpus side must come from the two bucketed index
+    // tables, and every scan of the raw documents table must carry the
+    // new-drop filter — i.e. the existing corpus is re-scanned zero times.
     SparkEntry.queries("q_dedup_incremental")(spark, sf).count()
-    spark.conf.set("spark.graft.skipEagerMaterialize", "true")
     try {
-      val plan = SparkEntry.queries("q_dedup_incremental")(spark, sf)
-        .queryExecution.executedPlan.toString
+      val plan = builtPlans("q_dedup_incremental").mkString("\n")
       assert("graft_mhidx_".r.findAllIn(plan).length >= 2,
         s"expected both stored index tables in the plan:\n$plan")
       val docScans = plan.linesIterator
@@ -554,10 +555,7 @@ class AnnSpec extends AnyFunSuite {
       docScans.foreach(l =>
         assert(l.contains("% 10) = 3"),
           s"documents scan without the new-drop filter (corpus rebuilt?):\n$l"))
-    } finally {
-      spark.conf.set("spark.graft.skipEagerMaterialize", "false")
-      spark.sharedState.cacheManager.clearCache()
-    }
+    } finally spark.sharedState.cacheManager.clearCache()
   }
 
   test("q_semdedup: cluster containment, canonical-minimum, threshold contract") {

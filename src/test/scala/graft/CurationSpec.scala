@@ -423,12 +423,9 @@ class CurationSpec extends AnyFunSuite {
     // plan: corpus arrives from the stored bucketed table; every live
     // documents scan carries the drop filter (corpus re-scanned zero
     // times per refresh). The eager localCheckpoint collapses the
-    // returned frame to an ExistingRDD scan, so inspect through the
-    // plan-dump escape hatch like the other sketch-plan pins.
-    spark.conf.set("spark.graft.skipEagerMaterialize", "true")
-    val plan =
-      try run("q_novelty_incremental").queryExecution.executedPlan.toString
-      finally spark.conf.set("spark.graft.skipEagerMaterialize", "false")
+    // returned frame to an ExistingRDD scan, so inspect every plan the
+    // build runs.
+    val plan = builtPlans("q_novelty_incremental").mkString("\n")
     assert(plan.contains("graft_novidx_"),
       s"stored shingle table missing from the refresh plan:\n$plan")
     val docScans = plan.linesIterator

@@ -21,6 +21,13 @@ object TestSpark {
     s
   }
   val sf = "/root/testdata/sf0.001"
+
+  /** The executed plans of one build of `name`: every build-time action,
+    * then the returned frame (PlanCapture). */
+  def builtPlans(name: String)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] =
+    PlanCapture(spark)(SparkEntry.queries(name)(spark, sf))
+      .map(_._2.executedPlan)
 }
 
 /** Smoke + invariants for every declared query at sf0.001. Value-level
@@ -997,19 +1004,9 @@ class QueriesSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(incPairs == batch, "incremental merge drifted from full recompute")
     // plan: the stored partials serve the corpus side; every live
-    // lineitem scan carries the drop filter (fact table re-scanned
-    // zero times per refresh). requireWarmIndex pins the STORED-path
-    // plan (round-12: a plain dump session substitutes the lazy
-    // base-side frame, see storedOr) — the store was warmed above.
-    spark.conf.set("spark.graft.skipEagerMaterialize", "true")
-    spark.conf.set("spark.graft.requireWarmIndex", "true")
-    val plan =
-      try SparkEntry.queries("q_affinity_incremental")(spark, sf)
-        .queryExecution.executedPlan.toString
-      finally {
-        spark.conf.set("spark.graft.skipEagerMaterialize", "false")
-        spark.conf.unset("spark.graft.requireWarmIndex")
-      }
+    // lineitem scan, in every plan the refresh runs, carries the drop
+    // filter (fact table re-scanned zero times per refresh)
+    val plan = builtPlans("q_affinity_incremental").mkString("\n")
     assert(plan.contains("graft_affidx_"),
       s"stored pair index missing from the refresh plan:\n$plan")
     val liScans = plan.linesIterator
@@ -1122,15 +1119,7 @@ class QueriesSpec extends AnyFunSuite {
     val batch = SparkEntry.queries("q_recommend_items")(spark, sf)
       .collect().map(_.toString).toSeq
     assert(inc == batch, "maintained serving table drifted from recompute")
-    spark.conf.set("spark.graft.skipEagerMaterialize", "true")
-    spark.conf.set("spark.graft.requireWarmIndex", "true")
-    val plan =
-      try SparkEntry.queries("q_recommend_incremental")(spark, sf)
-        .queryExecution.executedPlan.toString
-      finally {
-        spark.conf.set("spark.graft.skipEagerMaterialize", "false")
-        spark.conf.unset("spark.graft.requireWarmIndex")
-      }
+    val plan = builtPlans("q_recommend_incremental").mkString("\n")
     assert(plan.contains("graft_affidx_"), "stored partials missing")
     plan.linesIterator.filter(_.contains("lineitem.parquet")).foreach(l =>
       assert(l.contains("% 10) = 3"),

@@ -6,6 +6,13 @@ multiplicity, joins by strategy, window/sort/generate nodes.
 Usage: python3 tools/plan_audit.py <plandir> [suffix]
 Reads <plandir>/<key>_<suffix>.txt (default suffix: audit) and prints a
 TSV ranked by (duplicate-scan score, exchange count).
+
+A dump (graft.DumpPlanFiles) holds every plan the key's build runs: each
+build-time action's plan, then the returned frame's. The counts cover
+all of them, so the build-time plans count too. An executed action's
+AQE plan lists both its final and its initial plan, and a cached frame's
+plan reappears under each reader, so one operator can count more than
+once: compare counts between dumps, not against the plan's node count.
 """
 import sys, re, glob, os
 
