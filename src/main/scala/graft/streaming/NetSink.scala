@@ -66,18 +66,21 @@ final case class NetMessage(data: String, attrs: Map[String, String])
   * (StreamingSpec and NetTransportContractSpec pin it against the
   * NetTransport leg):
   *
-  *  - Serializable: [[publishPartition]] runs inside
+  *  - Serializable: [[ensureTopic]] and [[publishPartition]] run inside
   *    `foreachPartition` on EXECUTORS, so the instance must carry only
   *    connection coordinates, never sockets;
   *  - [[ensureTopic]] is idempotent and create-once per process
-  *    (publisher.go:99-129's double-checked topic cache);
+  *    (publisher.go:99-129's double-checked topic cache), and safe to
+  *    call from concurrent tasks;
   *  - every frame is acknowledged before [[publishPartition]] returns,
   *    and any unacknowledged/NAK'd frame THROWS — the Spark task fails,
   *    Structured Streaming replays the batch from the checkpoint, and
   *    at-least-once holds with no silent-ack window (§8-B2).
   */
 trait PublishTransport extends Serializable {
-  /** Create `topic` if this process hasn't already (driver-side). */
+  /** Create `topic` if this process hasn't already. Any JVM, blocks
+    * until acked, create-once per process: once it returns, a publish
+    * to `topic` cannot be refused for a missing topic. */
   def ensureTopic(topic: String): Unit
   /** Publish one partition's (topic, payload, attributes) rows over one
     * connection; throw on any NAK or IO error. */
@@ -216,7 +219,7 @@ final class NetBroker(bindPort: Int = 0) extends AutoCloseable {
   * create-per-process guarantee). All methods throw on NAK/IO error so a
   * failed publish fails the Spark task → batch retry → at-least-once. */
 object NetPublisher {
-  private val created = ConcurrentHashMap.newKeySet[String]()
+  private val created = new ConcurrentHashMap[String, java.lang.Boolean]()
   def reset(): Unit = created.clear()
 
   /** Drop every create-once entry for `addr`. Called on a publish NAK:
@@ -225,8 +228,8 @@ object NetPublisher {
     * eviction, the replayed batch skips ensureTopic, publishes into the
     * missing topic, NAKs again, and the micro-batch retries forever. */
   private[streaming] def evictAddr(addr: String): Unit = {
-    val it = created.iterator()
-    while (it.hasNext) if (it.next().startsWith(s"$addr/")) it.remove()
+    created.keySet().removeIf(_.startsWith(s"$addr/"))
+    ()
   }
 
   private def connect(addr: String): Socket = {
@@ -234,9 +237,13 @@ object NetPublisher {
     new Socket(h, p.toInt)
   }
 
-  /** Lazy create-once (driver-side, bounded by topic cardinality). */
-  def ensureTopic(addr: String, topic: String): Unit =
-    if (created.add(s"$addr/$topic")) {
+  /** Lazy create-once. Any JVM, blocks until acked, create-once per
+    * process: the entry exists only once the broker has acked the
+    * CREATE, a concurrent caller for the same topic waits inside
+    * `computeIfAbsent` until then, and a NAK or IO error throws and
+    * leaves no entry, so a retry re-attempts. */
+  def ensureTopic(addr: String, topic: String): Unit = {
+    created.computeIfAbsent(s"$addr/$topic", { _ =>
       val sock = connect(addr)
       try {
         val out = new DataOutputStream(
@@ -245,16 +252,13 @@ object NetPublisher {
         out.writeByte(NetWire.CmdCreate.toInt)
         out.writeUTF(topic)
         out.flush()
-        if (in.readByte() != NetWire.Ack) {
-          created.remove(s"$addr/$topic") // let a retry re-attempt
+        if (in.readByte() != NetWire.Ack)
           throw new java.io.IOException(s"broker NAK creating topic $topic")
-        }
-      } catch {
-        case e: Exception =>
-          created.remove(s"$addr/$topic")
-          throw e
+        java.lang.Boolean.TRUE
       } finally sock.close()
-    }
+    })
+    ()
+  }
 
   /** Publish one partition's rows over a single connection, pipelining
     * frames in windows of `NetWire.ackWindow` before draining the

@@ -21,8 +21,9 @@ import java.util.concurrent.ConcurrentHashMap
   *
   * Scale notes: every transform here is per-row or per-key-partition;
   * stateful ops (windows, dedup, counters) keep watermark-bounded state in
-  * the state store, shuffled once on their key. The topic-ensure cache is
-  * driver-side and O(|topics|), mirroring publisher.go:99-129.
+  * the state store, shuffled once on their key. The topic-ensure caches
+  * are per process and O(|topics|), mirroring publisher.go:99-129: the
+  * dir sink ensures on the driver, the net sink in each publishing task.
   */
 object Streams {
 
@@ -178,8 +179,10 @@ object Streams {
     * the checkpoint = at-least-once); topics are lazily created exactly
     * once per process (publisher.go:99-129); unroutable rows publish to
     * the `__dead_letter` topic with a `dl_reason` attribute instead of
-    * silently vanishing. Executors publish partition-parallel — the
-    * driver only runs the O(|topics|) create-once pass. */
+    * silently vanishing. The epoch is ONE Spark job: each task routes
+    * its rows to their topic or the dead letter, creates a topic the
+    * first time it meets one (blocking until the broker acks) and
+    * publishes partition-parallel; there is no driver-side topic pass. */
   def routePublishNet(routed: DataFrame, brokerAddr: String,
     checkpoint: String): StreamingQuery =
     routePublishNet(routed,
@@ -203,31 +206,19 @@ object Streams {
       .writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.persist()
-        try {
-          val dead = batch.filter(col("tbl") === "404")
-            .select(col("value"), col("path"))
-          if (!dead.isEmpty) {
-            transport.ensureTopic("__dead_letter")
-            dead.foreachPartition { (it: Iterator[Row]) =>
-              transport.publishPartition(it.map(r =>
-                ("__dead_letter", r.getString(0),
-                  Map("path" -> r.getString(1),
-                    "dl_reason" -> "unroutable_path"))))
-            }
+        batch.select(col("topic"), col("value"), col("path"), col("tbl"))
+          .foreachPartition { (it: Iterator[Row]) =>
+            val met = scala.collection.mutable.HashSet.empty[String]
+            transport.publishPartition(it.map { r =>
+              val unroutable = r.getString(3) == "404"
+              val topic = if (unroutable) "__dead_letter" else r.getString(0)
+              if (met.add(topic)) transport.ensureTopic(topic)
+              (topic, r.getString(1),
+                if (unroutable)
+                  Map("path" -> r.getString(2), "dl_reason" -> "unroutable_path")
+                else Map("path" -> r.getString(2), "table" -> r.getString(3)))
+            })
           }
-          val ok = batch.filter(col("tbl") =!= "404")
-            .select(col("topic"), col("value"), col("path"), col("tbl"))
-          // driver-side lazy create-once, bounded by topic cardinality
-          // (the same collect the dir sink does; publisher.go:99-129)
-          ok.select("topic").distinct().collect()
-            .foreach(r => transport.ensureTopic(r.getString(0)))
-          ok.foreachPartition { (it: Iterator[Row]) =>
-            transport.publishPartition(it.map(r =>
-              (r.getString(0), r.getString(1),
-                Map("path" -> r.getString(2), "table" -> r.getString(3)))))
-          }
-        } finally { batch.unpersist(); () }
       }
       .start()
 

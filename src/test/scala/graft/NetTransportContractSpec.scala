@@ -1,7 +1,10 @@
 package graft
 
-import graft.streaming.{NetBroker, NetPublisher, NetTransport,
+import graft.streaming.{NetBroker, NetPublisher, NetTransport, NetWire,
   PublishTransport}
+import java.util.concurrent.{Callable, ConcurrentHashMap, CountDownLatch,
+  Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The [[graft.streaming.PublishTransport]] contract pinned against the
@@ -76,5 +79,80 @@ class NetTransportContractSpec extends AnyFunSuite {
       assert(delivered(b, "t_ser") ==
         Seq(("after-roundtrip", Map.empty[String, String])))
     }
+  }
+
+  /** A broker that holds each CREATE ack for `createDelayMs`, so a
+    * publish racing an unacked CREATE reaches it while the topic is
+    * still missing (and is NAK'd, like the real broker). */
+  private final class SlowCreateBroker(createDelayMs: Long)
+      extends AutoCloseable {
+    val creates = new AtomicInteger()
+    val naks = new AtomicInteger()
+    private val topics = ConcurrentHashMap.newKeySet[String]()
+    private val server = new java.net.ServerSocket(0, 50,
+      java.net.InetAddress.getLoopbackAddress)
+    def addr: String = s"127.0.0.1:${server.getLocalPort}"
+    private val pool = Executors.newFixedThreadPool(12)
+    pool.submit(new Runnable {
+      override def run(): Unit =
+        try while (true) {
+          val sock = server.accept()
+          pool.submit(new Runnable { override def run(): Unit = serve(sock) })
+        } catch { case _: java.io.IOException => } // closed
+    })
+
+    private def serve(sock: java.net.Socket): Unit = {
+      val in = new java.io.DataInputStream(
+        new java.io.BufferedInputStream(sock.getInputStream))
+      val out = new java.io.DataOutputStream(sock.getOutputStream)
+      try while (true) {
+        in.readByte() match {
+          case NetWire.CmdCreate =>
+            val topic = in.readUTF()
+            creates.incrementAndGet()
+            Thread.sleep(createDelayMs)
+            topics.add(topic)
+            out.writeByte(NetWire.Ack.toInt)
+          case _ =>
+            val topic = in.readUTF()
+            in.readFully(new Array[Byte](in.readInt()))
+            (0 until in.readInt()).foreach { _ => in.readUTF(); in.readUTF() }
+            if (topics.contains(topic)) out.writeByte(NetWire.Ack.toInt)
+            else { naks.incrementAndGet(); out.writeByte(NetWire.Nak.toInt) }
+        }
+        out.flush()
+      } catch { case _: Exception => } finally sock.close()
+    }
+
+    override def close(): Unit = { server.close(); pool.shutdownNow(); () }
+  }
+
+  test("net transport: concurrent ensureTopic waits for the one CREATE's ack") {
+    val b = new SlowCreateBroker(createDelayMs = 200)
+    NetPublisher.reset()
+    val threads = 8
+    val pool = Executors.newFixedThreadPool(threads)
+    try {
+      val t = NetTransport(b.addr)
+      val start = new CountDownLatch(1)
+      val results = (1 to threads).map { i =>
+        pool.submit(new Callable[Unit] {
+          override def call(): Unit = {
+            start.await()
+            t.ensureTopic("t_race")
+            t.publishPartition(
+              Iterator(("t_race", s"m$i", Map.empty[String, String])))
+          }
+        })
+      }
+      start.countDown()
+      val failed = results.flatMap(f =>
+        scala.util.Try(f.get(30, TimeUnit.SECONDS))
+          .failed.toOption)
+      assert(failed.isEmpty && b.naks.get == 0,
+        s"${failed.size} of $threads publishes failed, ${b.naks.get} NAKs: " +
+          failed.headOption.map(_.toString).getOrElse(""))
+      assert(b.creates.get == 1, s"broker saw ${b.creates.get} CREATEs")
+    } finally { pool.shutdownNow(); b.close() }
   }
 }

@@ -58,6 +58,15 @@ class StreamingSpec extends AnyFunSuite {
     write(in, s"sharedKey=k1/junk.txt", Seq("""{"x": 1}"""))
   }
 
+  /** The CDC drop in `in` streamed through ingest, parse, auth (k1) and
+    * route: the input every routing sink test publishes. */
+  private def routedCdc(in: String): DataFrame =
+    Streams.route(
+      Streams.authFilter(
+        Streams.parseEnvelope(Streams.ingestLines(spark, in), payload),
+        Set("k1")), "cdc-")
+      .select("path", "topic", "tbl", "value", "updated", "op")
+
   /** Batch twin of ingest: identical transforms over read.text. */
   private def batchLines(dir: String): DataFrame =
     spark.read.format("text").option("recursiveFileLookup", "true").load(dir)
@@ -127,11 +136,7 @@ class StreamingSpec extends AnyFunSuite {
     val in = tmp("cdc-route"); val out = tmp("cdc-out")
     writeCdcDrop(in)
     Streams.TopicCache.reset()
-    val routed = Streams.route(
-      Streams.authFilter(
-        Streams.parseEnvelope(Streams.ingestLines(spark, in), payload),
-        Set("k1")), "cdc-")
-      .select("path", "topic", "tbl", "value", "updated", "op")
+    val routed = routedCdc(in)
     val q = Streams.routePublish(routed, out, tmp("cdc-ckpt"))
     q.processAllAvailable()
     // second delivery: same topic must NOT be created again
@@ -206,11 +211,7 @@ class StreamingSpec extends AnyFunSuite {
     val broker = new NetBroker()
     NetPublisher.reset()
     try {
-      val routed = Streams.route(
-        Streams.authFilter(
-          Streams.parseEnvelope(Streams.ingestLines(spark, in), payload),
-          Set("k1")), "cdc-")
-        .select("path", "topic", "tbl", "value", "updated", "op")
+      val routed = routedCdc(in)
       val q = start(routed, broker, tmp(s"cdc-net-$tag-ckpt"))
       q.processAllAvailable()
       // second delivery: same topic must NOT be created again
@@ -254,6 +255,59 @@ class StreamingSpec extends AnyFunSuite {
       (routed, broker, ckpt) =>
         Streams.routePublishNet(routed,
           graft.streaming.NetTransport(broker.addr), ckpt))
+  }
+
+  test("s_route_publish_net: one Spark job per epoch with input") {
+    // route, dead letter and lazy topic create ride in the epoch's one
+    // publish job: no persist, emptiness probe or distinct-topic collect
+    val in = tmp("cdc-net-jobs"); writeCdcDrop(in) // 5 files, junk included
+    val broker = new NetBroker()
+    NetPublisher.reset()
+    val jobQueries = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobQueries.add(String.valueOf(
+          Option(e.properties).map(_.getProperty("sql.streaming.queryId"))
+            .orNull))
+    }
+    spark.conf.set("spark.graft.maxFilesPerTrigger", "1")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val routed = routedCdc(in)
+      val q = Streams.routePublishNet(routed,
+        graft.streaming.NetTransport(broker.addr), tmp("cdc-net-jobs-ckpt"))
+      q.processAllAvailable()
+      val epochs = q.recentProgress.count(_.numInputRows > 0)
+      q.stop()
+      org.apache.spark.PlanCaptureBus.drain(spark.sparkContext)
+      val jobs = jobQueries.toArray.count(_ == q.id.toString)
+      assert(epochs == 5, s"expected 5 one-file epochs, got $epochs")
+      assert(jobs == epochs, s"$jobs Spark jobs for $epochs epochs with input")
+      assert(broker.messages("cdc-ord_topic").size == 6)
+      assert(broker.messages("__dead_letter").size == 1)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.unset("spark.graft.maxFilesPerTrigger")
+      broker.close()
+    }
+  }
+
+  test("s_route_publish_net: the dead-letter topic is created only for an unroutable row") {
+    val in = tmp("cdc-net-nojunk"); writeCdcDrop(in)
+    Files.delete(Paths.get(in, "sharedKey=k1/junk.txt"))
+    val broker = new NetBroker()
+    NetPublisher.reset()
+    try {
+      val routed = routedCdc(in)
+      val q = Streams.routePublishNet(routed,
+        graft.streaming.NetTransport(broker.addr), tmp("cdc-net-nojunk-ckpt"))
+      q.processAllAvailable()
+      q.stop()
+      assert(broker.messages("cdc-ord_topic").size == 6)
+      assert(broker.topicNames == Set("cdc-ord_topic"),
+        s"topics created: ${broker.topicNames}")
+    } finally broker.close()
   }
 
   test("NetTransport: credentials load fail-fast at construction (R15 end-to-end)") {
@@ -300,11 +354,7 @@ class StreamingSpec extends AnyFunSuite {
     val broker = new NetBroker()
     try {
       spark.conf.set("spark.graft.credentials", "/missing/sink-creds.json")
-      val routed = Streams.route(
-        Streams.authFilter(
-          Streams.parseEnvelope(Streams.ingestLines(spark, in), payload),
-          Set("k1")), "cdc-")
-        .select("path", "topic", "tbl", "value", "updated", "op")
+      val routed = routedCdc(in)
       val e = intercept[IllegalArgumentException] {
         Streams.routePublishNet(routed, broker.addr, tmp("cdc-cred-ckpt"))
       }
@@ -1195,17 +1245,12 @@ class StreamingSpec extends AnyFunSuite {
     val in = tmp("cdc-ckptrec"); val out = tmp("cdc-ckptrec-out")
     val ckpt = tmp("cdc-ckptrec-ck")
     writeCdcDrop(in)
-    def routed() = Streams.route(
-      Streams.authFilter(
-        Streams.parseEnvelope(Streams.ingestLines(spark, in), payload),
-        Set("k1")), "cdc-")
-      .select("path", "topic", "tbl", "value", "updated", "op")
-    val q1 = Streams.routePublish(routed(), out, ckpt)
+    val q1 = Streams.routePublish(routedCdc(in), out, ckpt)
     q1.processAllAvailable()
     q1.stop() // simulated crash/redeploy: new query, SAME checkpoint
     write(in, s"sharedKey=k1/ord_topic/2024-01-02/${ts33(8)}-u8-orders-1.ndjson",
       Seq(envLine(21)))
-    val q2 = Streams.routePublish(routed(), out, ckpt)
+    val q2 = Streams.routePublish(routedCdc(in), out, ckpt)
     q2.processAllAvailable()
     q2.stop()
     val published = spark.read.parquet(s"$out/data")
