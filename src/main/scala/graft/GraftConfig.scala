@@ -11,15 +11,13 @@ import org.apache.spark.sql.SparkSession
   * process.
   *
   * Flag mapping (reference default in parens):
-  *  - `spark.graft.bindAddr`       ← --bindAddr (":13013"), used by the
-  *                                    ndjson ingest HTTP shim (IngestServer)
-  *  - `spark.graft.gracePeriodMs`  ← --gracePeriod (30 s), used by
-  *                                    Streams.gracefulDrain callers
   *  - `spark.graft.topicPrefix`    ← --topicPrefix (""), Streams.route
   *  - `spark.graft.sharedKeys`     ← --sharedKey (repeatable → comma list),
   *                                    Streams.authFilter
-  *  - `spark.graft.dumpOnly`       ← --dumpOnly (false): consoleDump
-  *                                    instead of routePublish
+  *  - `spark.graft.dumpOnly`       ← --dumpOnly (false): publishPipeline
+  *                                    logs the routed rows (consoleDump)
+  *                                    instead of writing them to the
+  *                                    dir sink (routePublish)
   *  - `spark.graft.sfDir`          — fixture dir for Bench/Verify; falls
   *                                    back to SPARK_GRAFT_SF_DIR (the
   *                                    driver's contract), then sf0.1
@@ -43,8 +41,11 @@ import org.apache.spark.sql.SparkSession
   *                                    this engine's own degree of freedom;
   *                                    perfbench's `bridge` catch-up
   *                                    exercises it.
-  *  (--projectID remains Google-Cloud-specific with no analogue: topics
-  *  here are directories/brokers, not cloud resource names.)
+  *  (--bindAddr and --gracePeriod are not session keys: `IngestServer`
+  *  takes the bind address and `Streams.gracefulDrain` the grace period
+  *  from their caller. --projectID remains Google-Cloud-specific with
+  *  no analogue: topics here are directories/brokers, not cloud
+  *  resource names.)
   *
   * Keys read where they are used (no reference analogue; reader, default):
   *  - `spark.graft.allowQuadratic` — q_dedup_embedding's exact O(n²)
@@ -66,8 +67,6 @@ import org.apache.spark.sql.SparkSession
   *    Streams.cdcUpsertMaterialize, table generations kept (2)
   */
 final case class GraftConfig(
-  bindAddr: String,
-  gracePeriodMs: Long,
   topicPrefix: String,
   sharedKeys: Set[String],
   dumpOnly: Boolean,
@@ -89,8 +88,6 @@ object GraftConfig {
             "reference exits fatally on bad --credentials)")
     }
     GraftConfig(
-      bindAddr = c("bindAddr", ":13013"),
-      gracePeriodMs = c("gracePeriodMs", "30000").toLong,
       topicPrefix = c("topicPrefix", ""),
       sharedKeys = c("sharedKeys", "")
         .split(",").map(_.trim).filter(_.nonEmpty).toSet,

@@ -45,6 +45,16 @@ final class IngestServer(bindAddr: String, landingDir: String,
     case _ => throw new IllegalArgumentException(s"bad bindAddr $bindAddr")
   }
 
+  /** The request's `sharedKey` query parameter, "" when absent. */
+  private def sharedKey(ex: HttpExchange): String =
+    IngestServer.queryParam(ex.getRequestURI.getQuery, "sharedKey")
+      .getOrElse("")
+
+  /** No keys configured => NO auth check, mirroring the reference's
+    * `if len(p.keys) > 0` gate (publisher.go:143-150). */
+  private def authorized(key: String): Boolean =
+    sharedKeys.isEmpty || sharedKeys.contains(key)
+
   private val server = HttpServer.create(addr, 0)
   // Without an executor every handler shares the ONE dispatcher thread —
   // a blocking /debug/pprof/profile would starve /healthz and ingest for
@@ -61,14 +71,8 @@ final class IngestServer(bindAddr: String, landingDir: String,
       try {
         if (ex.getRequestMethod != "POST") { reply(ex, 405, "POST only") }
         else {
-          val key = Option(ex.getRequestURI.getQuery).getOrElse("")
-            .split("&").collectFirst {
-              case kv if kv.startsWith("sharedKey=") =>
-                kv.substring("sharedKey=".length)
-            }.getOrElse("")
-          // No keys configured => NO auth check, mirroring the reference's
-          // `if len(p.keys) > 0` gate (publisher.go:143-150).
-          if (sharedKeys.nonEmpty && !sharedKeys.contains(key)) {
+          val key = sharedKey(ex)
+          if (!authorized(key)) {
             rejected.incrementAndGet() // the 401 the producer sees
             reply(ex, 401, "invalid sharedKey")
           } else {
@@ -99,7 +103,10 @@ final class IngestServer(bindAddr: String, landingDir: String,
                 throw e
               }
               landed.incrementAndGet()
-              reply(ex, 201, "created")
+              // Headers only, so the ack leaves in one segment: a body
+              // written after the flushed headers waits under Nagle for
+              // the client's delayed ACK, about 40 ms per POST.
+              ex.sendResponseHeaders(201, -1)
             }
           }
         }
@@ -163,27 +170,19 @@ final class IngestServer(bindAddr: String, landingDir: String,
   // single-permit semaphore — a 30s x 250Hz sampler is a CPU
   // amplification primitive if N can run concurrently, so the second
   // concurrent caller gets 429 instead of a thread.
-  private def pprofAuthorized(ex: HttpExchange): Boolean = {
-    val key = Option(ex.getRequestURI.getQuery).getOrElse("")
-      .split("&").collectFirst {
-        case kv if kv.startsWith("sharedKey=") =>
-          kv.substring("sharedKey=".length)
-      }.getOrElse("")
-    sharedKeys.isEmpty || sharedKeys.contains(key)
-  }
   private val profilePermit = new java.util.concurrent.Semaphore(1)
   server.createContext("/debug/pprof/profile", new HttpHandler {
     override def handle(ex: HttpExchange): Unit =
       try {
         if (ex.getRequestMethod != "GET") reply(ex, 405, "GET only")
-        else if (!pprofAuthorized(ex)) {
+        else if (!authorized(sharedKey(ex))) {
           rejected.incrementAndGet()
           reply(ex, 401, "invalid sharedKey")
         } else if (!profilePermit.tryAcquire()) {
           reply(ex, 429, "a profile is already running")
         } else {
           try {
-            val q = Option(ex.getRequestURI.getQuery).getOrElse("")
+            val q = ex.getRequestURI.getQuery
             val secs = Profiler.intParam(q, "seconds", 2)
             val hz = Profiler.intParam(q, "hz", 100)
             reply(ex, 200, Profiler.collapsedCpuProfile(secs, hz))
@@ -197,7 +196,7 @@ final class IngestServer(bindAddr: String, landingDir: String,
     override def handle(ex: HttpExchange): Unit =
       try {
         if (ex.getRequestMethod != "GET") reply(ex, 405, "GET only")
-        else if (!pprofAuthorized(ex)) {
+        else if (!authorized(sharedKey(ex))) {
           rejected.incrementAndGet()
           reply(ex, 401, "invalid sharedKey")
         } else reply(ex, 200, Profiler.threadDump())
@@ -226,4 +225,12 @@ final class IngestServer(bindAddr: String, landingDir: String,
   }
 
   override def close(): Unit = { draining = true; server.stop(0) }
+}
+
+object IngestServer {
+  /** The first `name=` value in a URL query string (null = no query). */
+  private[streaming] def queryParam(query: String, name: String): Option[String] =
+    Option(query).getOrElse("").split("&").collectFirst {
+      case kv if kv.startsWith(s"$name=") => kv.substring(name.length + 1)
+    }
 }

@@ -75,7 +75,11 @@ final case class NetMessage(data: String, attrs: Map[String, String])
   *  - every frame is acknowledged before [[publishPartition]] returns,
   *    and any unacknowledged/NAK'd frame THROWS — the Spark task fails,
   *    Structured Streaming replays the batch from the checkpoint, and
-  *    at-least-once holds with no silent-ack window (§8-B2).
+  *    at-least-once holds with no silent-ack window (§8-B2);
+  *  - messages arrive already decided: the sink's `Streams.messages`
+  *    gives each row its topic (`__dead_letter` for an unroutable path)
+  *    and attributes, and the transport publishes them as given, with no
+  *    routing or dead-letter policy of its own.
   */
 trait PublishTransport extends Serializable {
   /** Create `topic` if this process hasn't already. Any JVM, blocks

@@ -79,9 +79,7 @@ object Profiler {
   /** Parse a positive int query param with a default; garbage → default
     * (pprof's own lenient behavior), clamping happens in the sampler. */
   def intParam(query: String, name: String, default: Int): Int =
-    Option(query).getOrElse("").split("&").collectFirst {
-      case kv if kv.startsWith(s"$name=") =>
-        kv.substring(name.length + 1)
-    }.flatMap(v => scala.util.Try(v.toInt).toOption).filter(_ > 0)
+    IngestServer.queryParam(query, name)
+      .flatMap(v => scala.util.Try(v.toInt).toOption).filter(_ > 0)
       .getOrElse(default)
 }

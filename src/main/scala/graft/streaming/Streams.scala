@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
-import java.util.concurrent.ConcurrentHashMap
 
 /** Structured-Streaming rebuild of the reference's dataflow (SURVEY §2.4).
   *
@@ -21,9 +20,11 @@ import java.util.concurrent.ConcurrentHashMap
   *
   * Scale notes: every transform here is per-row or per-key-partition;
   * stateful ops (windows, dedup, counters) keep watermark-bounded state in
-  * the state store, shuffled once on their key. The topic-ensure caches
-  * are per process and O(|topics|), mirroring publisher.go:99-129: the
-  * dir sink ensures on the driver, the net sink in each publishing task.
+  * the state store, shuffled once on their key. Both publish sinks take
+  * their messages from one projection (`messages`) and run one Spark job
+  * per epoch; a topic is created on its first row, by the partitioned
+  * write (dir sink) or by the publishing task (net sink, a per-process
+  * create-once cache mirroring publisher.go:99-129).
   */
 object Streams {
 
@@ -111,78 +112,64 @@ object Streams {
     df.withColumn("tbl", Cdc.routeTbl)
       .withColumn("topic", Cdc.routeTopic(prefix))
 
-  /** Driver-side lazy topic materializer mirroring the double-checked-lock
-    * cache at publisher.go:99-129: exactly one create per topic name per
-    * process, concurrent-safe via computeIfAbsent. */
-  object TopicCache {
-    private val created = new ConcurrentHashMap[String, java.nio.file.Path]()
-    private val count = new java.util.concurrent.atomic.AtomicInteger(0)
-    def createCount: Int = count.get()
-    def ensure(root: String, topic: String): java.nio.file.Path =
-      created.computeIfAbsent(s"$root/$topic", { k =>
-        count.incrementAndGet() // atomic: += on a @volatile var loses
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(k))
-      })
-    def reset(): Unit = { created.clear(); count.set(0) }
+  /** The publish policy, the one place it is written (publisher.go:88-91,
+    * :161-165): a routable row keeps its `topic` and carries the
+    * Pub/Sub-style attributes `{path, table}`; an unroutable row
+    * (tbl = "404", the bridge's HTTP 404) goes to the `__dead_letter`
+    * topic with `{path, dl_reason}` instead of silently vanishing. */
+  private def messages(batch: DataFrame): DataFrame = {
+    val unroutable = col("tbl") === "404"
+    batch
+      .withColumn("topic",
+        when(unroutable, lit("__dead_letter")).otherwise(col("topic")))
+      .withColumn("attributes",
+        when(unroutable, map(lit("path"), col("path"),
+          lit("dl_reason"), lit("unroutable_path")))
+          .otherwise(map(lit("path"), col("path"), lit("table"), col("tbl"))))
   }
 
-  /** s_route_publish (R4+R5+R7+R8+R9): per-topic partitioned sink writes
-    * with lazy topic creation. The epoch commits only after the write
+  /** The skeleton both publish sinks share: unroutable and seen rows
+    * counted in observedMetrics(`name`) at O(1) cost, and `publish` run
+    * on each epoch's `messages`. The epoch commits only after `publish`
     * returns — a sink failure replays the batch (at-least-once, with the
-    * §8-B2 silent-ack bug structurally impossible).
-    *
-    * Round-4 additions mirroring what the reference tells its producer:
-    *  - unroutable rows (tbl = "404") land in `outDir/dead_letter` with
-    *    their delivery path and a reason, and are counted in
-    *    observedMetrics("route_publish").unroutable_404 — the bridge
-    *    returns HTTP 404 for these (publisher.go:161-165); silently
-    *    vanishing rows are a data-loss bug at any scale;
-    *  - every published message carries the Pub/Sub-style attribute map
-    *    `{path, table}` the reference attaches (publisher.go:88-91,
-    *    attrs built at :177-180) as an `attributes` map column next to
-    *    the payload, so downstream consumers keep provenance. */
-  def routePublish(routed: DataFrame, outDir: String, checkpoint: String): StreamingQuery =
-    routed.observe("route_publish",
+    * §8-B2 silent-ack bug structurally impossible). */
+  private def publishEpochs(routed: DataFrame, name: String,
+      checkpoint: String)(publish: DataFrame => Unit): StreamingQuery =
+    routed.observe(name,
         count(when(col("tbl") === "404", lit(1))).as("unroutable_404"),
         count(lit(1)).as("rows_seen"))
       .writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // batch is read twice (dead-letter split + publish) — persist so
-        // the upstream parse/route pipeline runs once per micro-batch.
-        batch.persist()
-        try {
-          val dead = batch.filter(col("tbl") === "404")
-          if (!dead.isEmpty)
-            dead.withColumn("dl_reason", lit("unroutable_path"))
-              .write.mode("append").parquet(s"$outDir/dead_letter")
-          val ok = batch.filter(col("tbl") =!= "404")
-            .withColumn("attributes",
-              map(lit("path"), col("path"), lit("table"), col("tbl")))
-          ok.select("topic").distinct().collect()
-            .foreach(r => TopicCache.ensure(s"$outDir/topics", r.getString(0)))
-          ok.write.mode("append").partitionBy("topic")
-            .parquet(s"$outDir/data")
-        } finally { batch.unpersist(); () }
-      }
+      .foreachBatch { (batch: DataFrame, _: Long) => publish(messages(batch)) }
       .start()
 
-  /** s_route_publish_net (R9 over a real wire): same routing/dead-letter/
-    * attribute semantics as `routePublish`, but delivered to a NETWORK
-    * publish endpoint (`NetPublisher` → a Pub/Sub-semantics TCP broker)
-    * instead of a partitioned directory — the connector a user migrating
-    * off the reference's actual gRPC Pub/Sub sink (publisher.go:79-94)
-    * plugs their endpoint into.
+  /** s_route_publish (R4+R5+R7+R8+R9): the directory sink. Each epoch is
+    * ONE partitioned parquet append of its `messages` to
+    * `outDir/data/topic=<t>`: a topic's directory is created by the
+    * write on its first row, unroutable rows land in
+    * `topic=__dead_letter` with a `dl_reason` attribute, and the
+    * unroutable count surfaces as
+    * observedMetrics("route_publish").unroutable_404. */
+  def routePublish(routed: DataFrame, outDir: String, checkpoint: String): StreamingQuery =
+    publishEpochs(routed, "route_publish", checkpoint) {
+      _.write.mode("append").partitionBy("topic").parquet(s"$outDir/data")
+    }
+
+  /** s_route_publish_net (R9 over a real wire): the same `messages` as
+    * `routePublish`, delivered to a NETWORK publish endpoint
+    * (`NetPublisher` → a Pub/Sub-semantics TCP broker) instead of a
+    * partitioned directory — the connector a user migrating off the
+    * reference's actual gRPC Pub/Sub sink (publisher.go:79-94) plugs
+    * their endpoint into.
     *
     * Delivery contract: every frame is broker-ACKed before the epoch
     * commits (NAK/IO error fails the task → Spark replays the batch from
     * the checkpoint = at-least-once); topics are lazily created exactly
-    * once per process (publisher.go:99-129); unroutable rows publish to
-    * the `__dead_letter` topic with a `dl_reason` attribute instead of
-    * silently vanishing. The epoch is ONE Spark job: each task routes
-    * its rows to their topic or the dead letter, creates a topic the
-    * first time it meets one (blocking until the broker acks) and
-    * publishes partition-parallel; there is no driver-side topic pass. */
+    * once per process (publisher.go:99-129). The epoch is ONE Spark job:
+    * each task publishes its (topic, value, attributes) rows
+    * partition-parallel and creates a topic the first time it meets one
+    * (blocking until the broker acks); there is no driver-side topic
+    * pass. */
   def routePublishNet(routed: DataFrame, brokerAddr: String,
     checkpoint: String): StreamingQuery =
     routePublishNet(routed,
@@ -191,36 +178,26 @@ object Streams {
       checkpoint)
 
   /** Transport-generic leg of `s_route_publish_net` (round 11, verdict
-    * #6): the routing/dead-letter/create-once/ack-before-commit logic
-    * is identical for every [[PublishTransport]] — the in-process
-    * NetBroker emulator today, a Pub/Sub client in production — so
-    * StreamingSpec exercises THIS method and any real client inherits
-    * the proven delivery contract unchanged. The string-addr overload
-    * above is the config-driven path: it builds a [[NetTransport]] that
-    * consumes `spark.graft.credentials` from the session (R15). */
+    * #6): the message/create-once/ack-before-commit logic is identical
+    * for every [[PublishTransport]] — the in-process NetBroker emulator
+    * today, a Pub/Sub client in production — so StreamingSpec exercises
+    * THIS method and any real client inherits the proven delivery
+    * contract unchanged. The string-addr overload above is the
+    * config-driven path: it builds a [[NetTransport]] that consumes
+    * `spark.graft.credentials` from the session (R15). */
   def routePublishNet(routed: DataFrame, transport: PublishTransport,
     checkpoint: String): StreamingQuery =
-    routed.observe("route_publish_net",
-        count(when(col("tbl") === "404", lit(1))).as("unroutable_404"),
-        count(lit(1)).as("rows_seen"))
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.select(col("topic"), col("value"), col("path"), col("tbl"))
-          .foreachPartition { (it: Iterator[Row]) =>
-            val met = scala.collection.mutable.HashSet.empty[String]
-            transport.publishPartition(it.map { r =>
-              val unroutable = r.getString(3) == "404"
-              val topic = if (unroutable) "__dead_letter" else r.getString(0)
-              if (met.add(topic)) transport.ensureTopic(topic)
-              (topic, r.getString(1),
-                if (unroutable)
-                  Map("path" -> r.getString(2), "dl_reason" -> "unroutable_path")
-                else Map("path" -> r.getString(2), "table" -> r.getString(3)))
-            })
-          }
+    publishEpochs(routed, "route_publish_net", checkpoint) {
+      _.select("topic", "value", "attributes").foreachPartition {
+        (it: Iterator[Row]) =>
+          val met = scala.collection.mutable.HashSet.empty[String]
+          transport.publishPartition(it.map { r =>
+            val topic = r.getString(0)
+            if (met.add(topic)) transport.ensureTopic(topic)
+            (topic, r.getString(1), r.getMap[String, String](2).toMap)
+          })
       }
-      .start()
+    }
 
   /** s_resolved_watermark (R5 with the §8-B1 regex fixed): forward incoming
     * RESOLVED markers and emit this engine's own per-batch resolved
@@ -889,25 +866,32 @@ object Streams {
 
   /** Committed, still-unfolded epoch dirs + the folded base state:
     * (folded epoch names, base parquet files, unfolded committed epoch
-    * dirs, oldest first). Folding state lives INSIDE the base version
-    * (epochs.txt, committed by the same atomic manifest swap as the
-    * data), so a crash anywhere in compaction leaves either the old
-    * base + all epochs or the new base + the remaining epochs — never
-    * a double count. */
-  private def affinityState(store: String)
+    * dirs, oldest first), resolved against the latest base version, or
+    * against base version `seq` when pinned. Folding state lives INSIDE
+    * the base version (epochs.txt, committed by the same atomic manifest
+    * swap as the data), so a crash anywhere in compaction leaves either
+    * the old base + all epochs or the new base + the remaining epochs —
+    * never a double count. */
+  private def affinityState(store: String, seq: Option[Int])
       : (Set[String], Seq[String], Seq[java.io.File]) = {
     val FL = graft.queries.FixtureLayout
     val baseDir = s"$store/base"
-    val (folded, baseParquet) =
-      if (new java.io.File(baseDir, "MANIFEST").isFile) {
-        val (vroot, files) = FL.manifestedFiles(baseDir)
+    val base = seq match {
+      case Some(v) => Some(FL.manifestedFilesAt(baseDir, v))
+      case None if new java.io.File(baseDir, "MANIFEST").isFile =>
+        Some(FL.manifestedFiles(baseDir))
+      case None => None
+    }
+    val (folded, baseParquet) = base match {
+      case Some((vroot, files)) =>
         val ep = new java.io.File(vroot, "epochs.txt")
         val names =
           if (!ep.isFile) Set.empty[String]
           else new String(java.nio.file.Files.readAllBytes(ep.toPath),
             "UTF-8").linesIterator.filter(_.nonEmpty).toSet
         (names, files.filter(_.endsWith(".parquet")))
-      } else (Set.empty[String], Seq.empty[String])
+      case None => (Set.empty[String], Seq.empty[String])
+    }
     val unfoldedDirs = Option(new java.io.File(store).listFiles())
       .toSeq.flatten
       .filter(d => d.isDirectory && d.getName.startsWith("epoch="))
@@ -915,6 +899,22 @@ object Streams {
       .filterNot(d => folded.contains(d.getName))
       .sortBy(_.getName)
     (folded, baseParquet, unfoldedDirs)
+  }
+
+  /** PRE-floor pair partials merged by sum: what compaction folds. */
+  private def pairSums(spark: SparkSession, files: Seq[String]): DataFrame =
+    spark.read.parquet(files: _*).groupBy("p1", "p2").agg(sum("co").as("co"))
+
+  /** The served view at base version `seq` (latest when None): the cap
+    * tag checked, base + unfolded epoch partials merged, and the
+    * co >= 2 support floor applied post-merge. */
+  private def servedAffinity(spark: SparkSession, store: String,
+      seq: Option[Int], ifEmpty: String): DataFrame = {
+    requireCapTag(store, basketCap(spark))
+    val (_, baseParquet, unfoldedDirs) = affinityState(store, seq)
+    val all = baseParquet ++ epochParquet(unfoldedDirs)
+    require(all.nonEmpty, ifEmpty)
+    pairSums(spark, all).filter(col("co") >= 2)
   }
 
   private def epochParquet(dirs: Seq[java.io.File]): Seq[String] =
@@ -970,17 +970,10 @@ object Streams {
     * recorded), and so is a tagged store with zero committed partials
     * (the tag is stamped by the same call that publishes epoch 0, so
     * tag-without-partials means a torn or tampered store). */
-  def readAffinityIndex(spark: SparkSession, store: String): DataFrame = {
-    if (!new java.io.File(store).exists()) return emptyAffinityFrame(spark)
-    requireCapTag(store, basketCap(spark))
-    val (_, baseParquet, unfoldedDirs) = affinityState(store)
-    val all = baseParquet ++ epochParquet(unfoldedDirs)
-    require(all.nonEmpty,
+  def readAffinityIndex(spark: SparkSession, store: String): DataFrame =
+    if (!new java.io.File(store).exists()) emptyAffinityFrame(spark)
+    else servedAffinity(spark, store, None,
       s"no committed affinity partials under $store — nothing was published")
-    spark.read.parquet(all: _*)
-      .groupBy("p1", "p2").agg(sum("co").as("co"))
-      .filter(col("co") >= 2)
-  }
 
   /** Time-travel read of the affinity index (round-13 verdict #7) —
     * parity with the export side's listVersions/readExportVersion: pin
@@ -1002,29 +995,9 @@ object Streams {
     * vacuum (the Delta post-vacuum contract), never serves partial
     * sums. */
   def readAffinityIndexAt(spark: SparkSession, store: String,
-      seq: Int): DataFrame = {
-    requireCapTag(store, basketCap(spark))
-    val FL = graft.queries.FixtureLayout
-    val (vroot, files) = FL.manifestedFilesAt(s"$store/base", seq)
-    val ep = new java.io.File(vroot, "epochs.txt")
-    val folded =
-      if (!ep.isFile) Set.empty[String]
-      else new String(java.nio.file.Files.readAllBytes(ep.toPath),
-        "UTF-8").linesIterator.filter(_.nonEmpty).toSet
-    val unfoldedDirs = Option(new java.io.File(store).listFiles())
-      .toSeq.flatten
-      .filter(d => d.isDirectory && d.getName.startsWith("epoch="))
-      .filter(d => new java.io.File(d, "MANIFEST").isFile)
-      .filterNot(d => folded.contains(d.getName))
-      .sortBy(_.getName)
-    val all = files.filter(_.endsWith(".parquet")) ++
-      epochParquet(unfoldedDirs)
-    require(all.nonEmpty,
+      seq: Int): DataFrame =
+    servedAffinity(spark, store, Some(seq),
       s"base version $seq at $store holds no affinity partials")
-    spark.read.parquet(all: _*)
-      .groupBy("p1", "p2").agg(sum("co").as("co"))
-      .filter(col("co") >= 2)
-  }
 
   /** Committed base-fold versions of the affinity store, oldest first:
     * (seq, version-id) — the [[readAffinityIndexAt]] handles. Empty for
@@ -1049,12 +1022,10 @@ object Streams {
     * nothing new to fold). */
   def compactAffinityStore(spark: SparkSession, store: String): Int = {
     requireCapTag(store, basketCap(spark))
-    val (folded, baseParquet, unfoldedDirs) = affinityState(store)
+    val (folded, baseParquet, unfoldedDirs) = affinityState(store, None)
     val unfoldedNames = unfoldedDirs.map(_.getName)
     if (unfoldedNames.isEmpty) return 0
-    val merged = spark.read
-      .parquet((baseParquet ++ epochParquet(unfoldedDirs)): _*)
-      .groupBy("p1", "p2").agg(sum("co").as("co")) // PRE-floor partials
+    val merged = pairSums(spark, baseParquet ++ epochParquet(unfoldedDirs))
     graft.queries.FixtureLayout.publishManifested(s"$store/base") {
       staging =>
         merged.write.parquet(staging)
@@ -1083,7 +1054,7 @@ object Streams {
       }
       f.delete(); ()
     }
-    val (folded, _, _) = affinityState(store)
+    val (folded, _, _) = affinityState(store, None)
     folded.toSeq.sorted.flatMap { name =>
       val dir = new java.io.File(store, name)
       val vdirs = Option(dir.listFiles()).toSeq.flatten

@@ -135,11 +135,10 @@ class StreamingSpec extends AnyFunSuite {
   test("s_route_publish: per-topic partitioned sink, topic created once") {
     val in = tmp("cdc-route"); val out = tmp("cdc-out")
     writeCdcDrop(in)
-    Streams.TopicCache.reset()
     val routed = routedCdc(in)
     val q = Streams.routePublish(routed, out, tmp("cdc-ckpt"))
     q.processAllAvailable()
-    // second delivery: same topic must NOT be created again
+    // second delivery: the same topic's partition takes the new row
     write(in, s"sharedKey=k1/ord_topic/2024-01-02/${ts33(9)}-u9-orders-1.ndjson",
       Seq(envLine(8)))
     q.processAllAvailable()
@@ -147,23 +146,27 @@ class StreamingSpec extends AnyFunSuite {
       .flatMap(p => Option(p.observedMetrics.get("route_publish")))
       .map(_.getAs[Long]("unroutable_404")).sum
     q.stop()
-    assert(Streams.TopicCache.createCount == 1, "topic created more than once")
-    assert(Files.exists(Paths.get(s"$out/topics/cdc-ord_topic")))
+    assert(spark.read.parquet(s"$out/data/topic=cdc-ord_topic").count() == 7,
+      "both epochs' routed rows belong in the one topic partition")
     val published = spark.read.parquet(s"$out/data")
-    assert(published.filter(col("topic") === "cdc-ord_topic").count() == 7)
-    assert(published.filter(col("tbl") === "RESOLVED").count() == 1)
-    assert(published.filter(col("tbl") === "404").count() == 0)
+    val routable = published.filter(col("topic") =!= "__dead_letter")
+    assert(routable.filter(col("topic") === "cdc-ord_topic").count() == 7)
+    assert(routable.filter(col("tbl") === "RESOLVED").count() == 1)
+    assert(routable.filter(col("tbl") === "404").count() == 0)
     // Pub/Sub-style attributes ride with every message (publisher.go:88-91)
-    assert(published.filter(element_at(col("attributes"), "table") === col("tbl"))
+    assert(routable.filter(element_at(col("attributes"), "table") === col("tbl"))
       .count() == 7)
-    assert(published.filter(element_at(col("attributes"), "path").contains("sharedKey=k1"))
+    assert(routable.filter(element_at(col("attributes"), "path").contains("sharedKey=k1"))
       .count() == 7)
     // the unroutable junk file neither vanishes nor publishes: dead-letter
+    // topic with a reason, as on the wire
     assert(unroutable == 1, s"expected 1 observed 404, got $unroutable")
-    val dead = spark.read.parquet(s"$out/dead_letter")
+    val dead = published.filter(col("topic") === "__dead_letter")
     assert(dead.count() == 1)
-    assert(dead.filter(col("dl_reason") === "unroutable_path")
-      .filter(col("path").contains("junk.txt")).count() == 1)
+    assert(dead
+      .filter(element_at(col("attributes"), "dl_reason") === "unroutable_path")
+      .filter(element_at(col("attributes"), "path").contains("junk.txt"))
+      .count() == 1)
   }
 
   test("s_ingest_ndjson: maxFilesPerTrigger bounds micro-batches, same rows") {
@@ -257,12 +260,15 @@ class StreamingSpec extends AnyFunSuite {
           graft.streaming.NetTransport(broker.addr), ckpt))
   }
 
-  test("s_route_publish_net: one Spark job per epoch with input") {
-    // route, dead letter and lazy topic create ride in the epoch's one
-    // publish job: no persist, emptiness probe or distinct-topic collect
-    val in = tmp("cdc-net-jobs"); writeCdcDrop(in) // 5 files, junk included
-    val broker = new NetBroker()
-    NetPublisher.reset()
+  /** Route, dead letter and lazy topic create ride in an epoch's one
+    * publish job, on either sink: no persist, emptiness probe or
+    * distinct-topic collect. `start` runs the sink over the 5-file drop
+    * one file per epoch; `deadLetters` reads back how many unroutable
+    * rows it published. */
+  private def oneJobPerEpoch(tag: String)(
+      start: (DataFrame, String) => org.apache.spark.sql.streaming.StreamingQuery)(
+      deadLetters: => Long): Unit = {
+    val in = tmp(s"cdc-jobs-$tag"); writeCdcDrop(in) // 5 files, junk included
     val jobQueries = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -274,9 +280,7 @@ class StreamingSpec extends AnyFunSuite {
     spark.conf.set("spark.graft.maxFilesPerTrigger", "1")
     spark.sparkContext.addSparkListener(listener)
     try {
-      val routed = routedCdc(in)
-      val q = Streams.routePublishNet(routed,
-        graft.streaming.NetTransport(broker.addr), tmp("cdc-net-jobs-ckpt"))
+      val q = start(routedCdc(in), tmp(s"cdc-jobs-$tag-ckpt"))
       q.processAllAvailable()
       val epochs = q.recentProgress.count(_.numInputRows > 0)
       q.stop()
@@ -284,12 +288,31 @@ class StreamingSpec extends AnyFunSuite {
       val jobs = jobQueries.toArray.count(_ == q.id.toString)
       assert(epochs == 5, s"expected 5 one-file epochs, got $epochs")
       assert(jobs == epochs, s"$jobs Spark jobs for $epochs epochs with input")
-      assert(broker.messages("cdc-ord_topic").size == 6)
-      assert(broker.messages("__dead_letter").size == 1)
+      assert(deadLetters == 1)
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       spark.conf.unset("spark.graft.maxFilesPerTrigger")
-      broker.close()
+    }
+  }
+
+  test("s_route_publish_net: one Spark job per epoch with input") {
+    val broker = new NetBroker()
+    NetPublisher.reset()
+    try oneJobPerEpoch("net")((routed, ckpt) =>
+      Streams.routePublishNet(routed,
+        graft.streaming.NetTransport(broker.addr), ckpt)) {
+      assert(broker.messages("cdc-ord_topic").size == 6)
+      broker.messages("__dead_letter").size.toLong
+    } finally broker.close()
+  }
+
+  test("s_route_publish: one Spark job per epoch with input") {
+    val out = tmp("cdc-dir-jobs-out")
+    oneJobPerEpoch("dir")((routed, ckpt) =>
+      Streams.routePublish(routed, out, ckpt)) {
+      val published = spark.read.parquet(s"$out/data")
+      assert(published.filter(col("topic") === "cdc-ord_topic").count() == 6)
+      published.filter(col("topic") === "__dead_letter").count()
     }
   }
 
@@ -1254,10 +1277,12 @@ class StreamingSpec extends AnyFunSuite {
     q2.processAllAvailable()
     q2.stop()
     val published = spark.read.parquet(s"$out/data")
-    // batch 1's 6 routable rows (junk 404-filtered) published once — NOT
-    // re-published on restart — plus exactly the 1 new row
-    assert(published.count() == 7, s"got ${published.count()}")
-    assert(published.filter(col("updated") === f"${21L}%023d.0000000001")
+    val routable = published.filter(col("topic") =!= "__dead_letter")
+    // batch 1's 6 routable rows and its 1 dead letter published once —
+    // NOT re-published on restart — plus exactly the 1 new row
+    assert(routable.count() == 7, s"got ${routable.count()}")
+    assert(published.filter(col("topic") === "__dead_letter").count() == 1)
+    assert(routable.filter(col("updated") === f"${21L}%023d.0000000001")
       .count() == 1)
   }
 
