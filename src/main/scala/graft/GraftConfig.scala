@@ -50,8 +50,9 @@ import org.apache.spark.sql.SparkSession
   * Keys read where they are used (no reference analogue; reader, default):
   *  - `spark.graft.allowQuadratic` — q_dedup_embedding's exact O(n²)
   *    twin (false; the test session, Verify and Bench set true)
-  *  - `spark.graft.basketCap` — GraphOps.pairCounts/incrementalInc and
-  *    Streams.affinityUpdate, per-order part cut (0 = off)
+  *  - `spark.graft.basketCap` — GraphOps.basketCap, the per-order part
+  *    cut of GraphOps.baskets that the batch, incremental and
+  *    Streams.affinityUpdate pair paths share (0 = off)
   *  - `spark.graft.indexRoot` — GraphOps.affIdxBase, root of the
   *    affinity partial store (java.io.tmpdir)
   *  - `spark.graft.linkDegCap` — q_link_predict's bottom-k adjacency

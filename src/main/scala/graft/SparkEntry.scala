@@ -11,10 +11,7 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.q ++ Joins.q ++ Aggregates.q ++ Windows.q ++ SetOps.q ++
-      Functions.q ++ Cdc.q ++ Udfs.q ++ LlmOps.q ++ TextOps.q ++
-      AnnOps.q ++ MultiModal.q ++ SaltedJoin.q ++ Subqueries.q ++
-      SamplingOps.q ++ CurationOps.q ++ SourceFormats.q ++ GraphOps.q
+    modules.map(_._2).reduce(_ ++ _)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
@@ -32,7 +29,11 @@ object SparkEntry {
     * asserts keySet equality with `queries` AND that every family here
     * has a SQL-front-door representative (round-15 verdict #6: family
     * coverage must be enumerable, not a hand-maintained list). */
-  def queryFamilies: Map[String, String] = Seq(
+  def queryFamilies: Map[String, String] =
+    modules.flatMap { case (fam, m) => m.keys.map(_ -> fam) }.toMap
+
+  /** (operator family, module key map): the one list of query modules. */
+  private def modules: Seq[(String, Map[String, Q])] = Seq(
     "relational" -> Relational.q, "joins" -> Joins.q,
     "aggregates" -> Aggregates.q, "windows" -> Windows.q,
     "set-ops" -> SetOps.q, "functions" -> Functions.q,
@@ -41,6 +42,5 @@ object SparkEntry {
     "multimodal" -> MultiModal.q, "salted-join" -> SaltedJoin.q,
     "subqueries" -> Subqueries.q, "sampling" -> SamplingOps.q,
     "curation" -> CurationOps.q, "sources" -> SourceFormats.q,
-    "graph" -> GraphOps.q
-  ).flatMap { case (fam, m) => m.keys.map(_ -> fam) }.toMap
+    "graph" -> GraphOps.q)
 }

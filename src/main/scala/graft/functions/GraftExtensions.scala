@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Cast, Conv, Expression, ExpressionInfo, Literal, Md5, Substring}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.functions.{conv, md5, substring}
 import org.apache.spark.sql.types.{BinaryType, LongType}
 
 /** Session-extension entry point: the idiomatic way to ship this
@@ -52,6 +53,16 @@ object GraftExtensions {
   }
 
   val h60Ident = FunctionIdentifier("graft_h60")
+
+  /** graft_h60 in the Column API, over `c` read as a string: the one
+    * Column form of the portable hash every Dataset-side caller uses. */
+  def h60(c: Column): Column =
+    conv(substring(md5(c.cast("string").cast("binary")), 1, 15), 16, 10)
+      .cast("long")
+
+  /** DuckDB twin of [[h60]] over the SQL expression `x`, for oracles. */
+  def h60Sql(x: String): String =
+    s"CAST(('0x' || substring(md5(CAST($x AS VARCHAR)), 1, 15)) AS BIGINT)"
 
   def inject(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((

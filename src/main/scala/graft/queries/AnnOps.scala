@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.GraftExtensions.h60
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -1209,9 +1210,6 @@ object AnnOps {
     * raising K or sub-splitting on h60(vec_id) mod s within the cell
     * (the q_join_salted shape) — at K ~ n/1000 each cell's join fits a
     * single executor's hash table. */
-  private def h60(c: Column): Column =
-    conv(substring(md5(c.cast("string").cast("binary")), 1, 15), 16, 10)
-      .cast("long")
 
   /** Shared by q_semdedup and q_knn_classify: the corpus with its
     * hash-seeded Lloyd cell assignment — (vec_id, cell, embedding, nrm).

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.GraftExtensions.{h60, h60Sql}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -24,14 +25,6 @@ import org.apache.spark.sql.functions._
   * with unique keys.
   */
 object CurationOps {
-
-  /** Portable 60-bit md5-prefix hash of a string column (same as
-    * SamplingOps/the dedup family; DuckDB twin regenerates it). */
-  private def h60(c: Column): Column =
-    conv(substring(md5(c.cast("binary")), 1, 15), 16, 10).cast("long")
-
-  private val h60Sql = (x: String) =>
-    s"CAST(('0x' || substring(md5(CAST($x AS VARCHAR)), 1, 15)) AS BIGINT)"
 
   // PII patterns: intersection of Java-regex and RE2 syntax (char
   // classes + bounded repeats only), so Spark and DuckDB match the same
@@ -266,7 +259,7 @@ object CurationOps {
       val kept = docs.join(
           broadcast(rates.select("source", "n_source", "n_total",
             "w_scaled")), "source")
-        .filter(pmod(h60(col("doc_id").cast("string")), lit(10000))
+        .filter(pmod(h60(col("doc_id")), lit(10000))
           * col("n_source") < col("w_scaled") * col("n_total"))
         .groupBy("source").agg(count(lit(1)).as("n_kept"))
       rates.join(kept, Seq("source"), "left")
@@ -665,7 +658,7 @@ object CurationOps {
             .otherwise(lit(0).cast("decimal(12,2)"))), 2)
             .cast("double").as("pv"))
         .withColumn("variant",
-          when(pmod(h60(col("user_id").cast("string")), lit(2)) === 0,
+          when(pmod(h60(col("user_id")), lit(2)) === 0,
             "A").otherwise("B"))
         .withColumn("converted", (col("np") >= 14).cast("long"))
       val pvDec = col("pv").cast("decimal(12,2)")
@@ -874,7 +867,7 @@ object CurationOps {
         staging =>
           Tables(s, d, "documents")
             .withColumn("shard",
-              pmod(h60(col("doc_id").cast("string")), lit(n)))
+              pmod(h60(col("doc_id")), lit(n)))
             .repartition(col("shard"))
             .write.partitionBy("shard").parquet(staging)
       }
@@ -894,7 +887,7 @@ object CurationOps {
 
     "q_shard_assign" -> ((s, d) => {
       val n = 16
-      val h = h60(col("doc_id").cast("string"))
+      val h = h60(col("doc_id"))
       Tables(s, d, "documents")
         .withColumn("shard", pmod(h, lit(n)))
         .groupBy("shard")

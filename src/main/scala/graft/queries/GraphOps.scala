@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over the order/part co-purchase graph — the retail
@@ -11,13 +11,17 @@ import org.apache.spark.sql.functions._
   * co-purchased in >= 2 distinct orders (the support floor that keeps
   * the edge list signal, not noise).
   *
-  * Scale shape: the edge list comes from ONE orderkey-keyed self-join of
-  * the distinct (order, part) incidence — per-order pair fan-out is
-  * bounded by basket size squared (fixture max 13 => <= 78 pairs/order;
-  * a mega-basket at 100 TB would cap like shingleDfCap caps hot
-  * shingles), then a two-phase agg on the (p1, p2) key. Everything
-  * downstream (rule stats, PageRank) runs on the part-cardinality graph,
-  * which is orders of magnitude smaller than the fact table.
+  * Scale shape: the edge list comes from ONE orderkey-keyed basket
+  * (sorted distinct parts per order) and its nested pair explode —
+  * per-order pair fan-out is bounded by basket size squared (fixture
+  * max 13 => <= 78 pairs/order; a mega-basket at 100 TB caps with
+  * `spark.graft.basketCap` like shingleDfCap caps hot shingles), then a
+  * two-phase agg on the (p1, p2) key. The batch, incremental and
+  * streaming (Streams.affinityUpdate) paths all build their pairs from
+  * the same [[baskets]] / [[basketPairs]] / [[mergePairs]] /
+  * [[supported]] kernel. Everything downstream (rule stats, PageRank)
+  * runs on the part-cardinality graph, which is orders of magnitude
+  * smaller than the fact table.
   *
   * Determinism (the DuckDB gate): every rule metric is a ratio of exact
   * integers with identical expression shape on both engines (6dp); the
@@ -30,79 +34,95 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
-  /** Distinct (order, part) incidence and the undirected co-purchase
-    * pair counts at the co >= 2 support floor. One definition shared by
-    * affinity and PageRank so the two operators can never disagree
-    * about what the graph is.
-    *
-    * `spark.graft.basketCap` (0 = off, the default) bounds the per-order
-    * pair fan-out: an order with more than cap distinct parts keeps only
-    * its cap LOWEST part keys before the self-join, so one mega-basket
-    * (a wholesale order with 10k line items) can no longer emit basket²
-    * pair rows on a single order key. The cut is deterministic and
-    * repartition-stable (row_number over the total order (ok, pk) —
-    * the shingleDfCap precedent, TextOps.shinglePairSizedOf), and the
-    * window's ok-hash exchange is the same partitioning the self-join
-    * needs anyway. With cap >= the corpus max basket the output is
-    * bit-identical to uncapped (spec-pinned, QueriesSpec). */
-  private[graft] def pairCounts(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) = {
-    // Round-17 re-plan (guide §2.4 — the old shape paid THREE exchanges:
-    // distinct (ok, pk), the ok-keyed self-join re-partitioning, and the
-    // (p1, p2) pair agg; the basketCap mode paid a fourth for the
-    // row_number window): one groupBy(ok) with a map-side-partial
-    // collect_set replaces distinct + self-join — the per-order pair
-    // fan-out becomes a nested explode over the sorted basket array
-    // (p2 ranges over the elements greater than p1, so exactly the
-    // a.pk < b.pk join rows appear), and the basketCap cut is a slice
-    // of the same sorted array (identical to the window's "cap LOWEST
-    // part keys" rule, still deterministic and repartition-stable).
-    // Two exchanges total, in EVERY cap mode, and the basket array
-    // shuffles deduplicated instead of row-per-line. The incidence
-    // frame consumers read is the narrow re-explode of the same
-    // grouped frame (same rows as the old distinct by construction).
-    val cap = s.conf.get("spark.graft.basketCap", "0").toInt
-    val grouped0 = Tables(s, d, "lineitem")
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      .groupBy("ok").agg(sort_array(collect_set(col("pk"))).as("ps"))
-    val grouped = if (cap <= 0) grouped0
-      else grouped0.select(col("ok"), slice(col("ps"), 1, cap).as("ps"))
-    val inc = grouped.select(col("ok"), explode(col("ps")).as("pk"))
-    val pairs = grouped
-      .select(col("ok"), explode(col("ps")).as("p1"), col("ps"))
+  /** The only reader of `spark.graft.basketCap` (0 = off, the default):
+    * the per-order pair fan-out bound every co-purchase path applies. */
+  private[graft] def basketCap(s: SparkSession): Int =
+    s.conf.get("spark.graft.basketCap", "0").toInt
+
+  /** `(ok, pk)` lines -> `(ok, ps)`: each order's sorted distinct parts,
+    * sliced to its `cap` LOWEST part keys when cap > 0, so one
+    * mega-basket (a wholesale order with 10k line items) can no longer
+    * emit basket² pair rows on a single order key. The cut is
+    * deterministic and repartition-stable (the shingleDfCap precedent,
+    * TextOps.shinglePairSizedOf), and per-order: capping disjoint order
+    * sets (the incremental drop split, the streaming epochs) one by one
+    * equals capping their union. With cap >= the corpus max basket the
+    * output is bit-identical to uncapped (spec-pinned, QueriesSpec). One
+    * groupBy(ok) with a map-side-partial collect_set, so the basket
+    * shuffles deduplicated instead of row-per-line. */
+  private[graft] def baskets(lines: DataFrame, cap: Int): DataFrame = {
+    val grouped = lines.groupBy("ok")
+      .agg(sort_array(collect_set(col("pk"))).as("ps"))
+    if (cap <= 0) grouped
+    else grouped.select(col("ok"), slice(col("ps"), 1, cap).as("ps"))
+  }
+
+  /** PRE-floor `(p1, p2, co)` pair partials of a basket frame: a nested
+    * explode over each sorted basket (p2 ranges over the elements
+    * greater than p1, so exactly the `a.ok = b.ok AND a.pk < b.pk`
+    * self-join rows appear, without the join's repartition), then the
+    * (p1, p2) count. Pair counts are algebraic over disjoint order sets,
+    * so partials of disjoint baskets merge by [[mergePairs]]. */
+  private[graft] def basketPairs(baskets: DataFrame): DataFrame =
+    baskets.select(explode(col("ps")).as("p1"), col("ps"))
       .select(col("p1"),
         explode(filter(col("ps"), x => x > col("p1"))).as("p2"))
       .groupBy(col("p1"), col("p2"))
       .agg(count(lit(1)).as("co"))
-      .filter(col("co") >= 2)
-    (inc, pairs)
+
+  /** Pair partials merged by sum, still pre-floor. */
+  private[graft] def mergePairs(partials: DataFrame): DataFrame =
+    partials.groupBy("p1", "p2").agg(sum("co").as("co"))
+
+  /** The co >= 2 support floor: an edge is a pair co-purchased in at
+    * least two distinct orders. Applied once, after every merge. */
+  private[graft] def supported(pairs: DataFrame): DataFrame =
+    pairs.filter(col("co") >= 2)
+
+  /** Distinct (order, part) incidence and the undirected co-purchase
+    * pair counts at the support floor: [[basketPairs]] of the capped
+    * [[baskets]]. One definition shared by affinity and PageRank so the
+    * two operators can never disagree about what the graph is. Two
+    * exchanges in every cap mode: the basket groupBy(ok) and the pair
+    * agg. The incidence frame consumers read is the narrow re-explode of
+    * the same basket frame. */
+  private[graft] def pairCounts(s: SparkSession, d: String)
+      : (DataFrame, DataFrame) = {
+    val grouped = baskets(Tables(s, d, "lineitem")
+      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")),
+      basketCap(s))
+    val inc = grouped.select(col("ok"), explode(col("ps")).as("pk"))
+    (inc, supported(basketPairs(grouped)))
   }
 
-  /** Shared pieces of the incremental index family (q_affinity_
-    * incremental / q_recommend_incremental): one definition of the
-    * drop split, the per-order basketCap cut, the pre-floor pair
-    * aggregation, and the cap-aware content-addressed store root — so
-    * the two maintained views, and the batch pairCounts they must
-    * merge-match, can never disagree about what an incidence row or a
-    * capped basket is. The cap cut is per-order and orders partition
-    * by the drop split, so capping each side independently equals
-    * capping the whole corpus (spec-pinned). The store root carries
-    * the cap value: partials built under one cap can never silently
-    * serve a session running another. */
-  private def incrementalInc(s: SparkSession, d: String,
-      newSide: Boolean): DataFrame = {
-    val dropPred = col("l_orderkey") % 10 === 3
-    val cap = s.conf.get("spark.graft.basketCap", "0").toInt
-    val i0 = Tables(s, d, "lineitem")
-      .filter(if (newSide) dropPred else !dropPred)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      .distinct()
-    if (cap <= 0) i0 else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("ok").orderBy("pk")
-      i0.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= cap).drop("rn")
-    }
+  /** One refresh of the maintained co-purchase index (q_affinity_
+    * incremental / q_recommend_incremental): `kept` is the stored side's
+    * basket frame (read only while a store is first built), `drop` the
+    * persisted drop-side baskets, `pairs` the stored pair partials
+    * merged with the drop's at the support floor, `tot` the merged
+    * order total. Both keys share the content-addressed stores under
+    * `base`, so they and the batch [[pairCounts]] they must merge-match
+    * can never disagree about what a capped basket is. The cap cut is
+    * per-order and orders partition by the drop split, so capping each
+    * side independently equals capping the whole corpus (spec-pinned). */
+  private final case class PairIndex(base: String, kept: DataFrame,
+      drop: DataFrame, pairs: DataFrame, tot: DataFrame)
+
+  private def pairIndex(s: SparkSession, d: String): PairIndex = {
+    val cap = basketCap(s)
+    val base = affIdxBase(s, d, cap)
+    val onDrop = col("l_orderkey") % 10 === 3
+    def side(pred: Column) = baskets(Tables(s, d, "lineitem").filter(pred)
+      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")), cap)
+    def orders(b: DataFrame) = b.agg(count(lit(1)).as("n_orders"))
+    val kept = side(!onDrop)
+    val drop = persistEager(side(onDrop))
+    val storedPairs = storedOr(s, s"$base/pairs")(basketPairs(kept))
+    val storedTot = storedOr(s, s"$base/tot")(orders(kept).coalesce(1))
+    PairIndex(base, kept, drop,
+      supported(mergePairs(storedPairs.unionByName(basketPairs(drop)))),
+      storedTot.unionByName(orders(drop))
+        .agg(sum("n_orders").as("n_orders")))
   }
 
   /** Root of the maintained-view partial stores. Defaults to
@@ -111,9 +131,10 @@ object GraphOps {
     * sessions — or even between the ensureDir commit and the lazy
     * parquet read of the same refresh — so a deployment that wants the
     * materialized view durable points this at real storage. The store
-    * stays content-addressed + cap-tagged under whichever root. */
-  private def affIdxBase(s: SparkSession, d: String): String = {
-    val cap = s.conf.get("spark.graft.basketCap", "0").toInt
+    * stays content-addressed + cap-tagged under whichever root: partials
+    * built under one cap can never silently serve a session running
+    * another. */
+  private def affIdxBase(s: SparkSession, d: String, cap: Int): String = {
     val root = s.conf.get("spark.graft.indexRoot",
       System.getProperty("java.io.tmpdir"))
     val tag = FixtureLayout.contentTag(d, Seq("lineitem"))
@@ -127,19 +148,6 @@ object GraphOps {
   private def storedOr(s: SparkSession, path: String)
       (build: => DataFrame): DataFrame =
     s.read.parquet(FixtureLayout.ensureDir(path)(build.write.parquet(_)))
-
-  private def pairsPreFloor(i: DataFrame): DataFrame =
-    // Round-17: same one-exchange basket-array shape as the batch
-    // pairCounts (guide §2.4) — the input is already the distinct
-    // (ok, pk) incidence, so collect_set + the sorted nested explode
-    // emits exactly the a.pk < b.pk self-join rows without the join's
-    // extra ok-keyed repartition of both sides.
-    i.groupBy("ok").agg(sort_array(collect_set(col("pk"))).as("ps"))
-      .select(explode(col("ps")).as("p1"), col("ps"))
-      .select(col("p1"),
-        explode(filter(col("ps"), x => x > col("p1"))).as("p2"))
-      .groupBy(col("p1"), col("p2"))
-      .agg(count(lit(1)).as("co"))
 
   private val incSql =
     "SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem"
@@ -233,37 +241,21 @@ object GraphOps {
     // the family's modulo split (l_orderkey % 10 = 3); the stored side
     // is content-addressed (FixtureLayout), and per refresh the fact
     // table is scanned ONLY with the drop filter (CurationSpec-style
-    // plan pin in QueriesSpec). basketCap composes: incrementalInc
-    // applies the same per-order cut on both sides (orders partition by
+    // plan pin in QueriesSpec). basketCap composes: pairIndex applies
+    // the same per-order baskets cut on both sides (orders partition by
     // the split, so per-side capping == whole-corpus capping,
     // spec-pinned) and the store root is cap-aware so partials built
     // under one cap never serve a session running another. At 100 TB
     // this is how the affinity/recommendation tables stay O(new
     // orders) per refresh.
     "q_affinity_incremental" -> ((s, d) => {
-      val drop = persistEager(incrementalInc(s, d, newSide = true))
-      val base = affIdxBase(s, d)
-      val storedPairs = storedOr(s, s"$base/pairs") {
-        pairsPreFloor(incrementalInc(s, d, newSide = false))
-      }
-      val storedTot = storedOr(s, s"$base/tot") {
-        incrementalInc(s, d, newSide = false)
-          .agg(countDistinct(col("ok")).as("n_orders"))
-          .coalesce(1)
-      }
-      val merged = storedPairs
-        .unionByName(pairsPreFloor(drop))
-        .groupBy("p1", "p2").agg(sum("co").as("co"))
-        .filter(col("co") >= 2)
-      val tot = storedTot
-        .unionByName(drop.agg(countDistinct(col("ok")).as("n_orders")))
-        .agg(sum("n_orders").as("n_orders"))
-      val out = merged.crossJoin(broadcast(tot))
+      val idx = pairIndex(s, d)
+      val out = idx.pairs.crossJoin(broadcast(idx.tot))
         .select(col("p1"), col("p2"), col("co"),
           round(col("co").cast("double") / col("n_orders"), 6)
             .as("support"))
         .orderBy("p1", "p2")
-      materializeAndFree(out, drop)
+      materializeAndFree(out, idx.drop)
     }),
 
     // ── Connected components (round 11) ──────────────────────────────
@@ -497,34 +489,15 @@ object GraphOps {
     // hash gate proves maintained-view == recompute end to end. Per
     // refresh the fact table is scanned only with the drop filter.
     "q_recommend_incremental" -> ((s, d) => {
-      val base = affIdxBase(s, d)
       // the pair/tot stores are SHARED with q_affinity_incremental
-      // (same cap-aware content-addressed paths); cnt is this
-      // operator's own
-      val storedPairs = storedOr(s, s"$base/pairs") {
-        pairsPreFloor(incrementalInc(s, d, newSide = false))
-      }
-      val storedTot = storedOr(s, s"$base/tot") {
-        incrementalInc(s, d, newSide = false)
-          .agg(countDistinct(col("ok")).as("n_orders"))
-          .coalesce(1)
-      }
-      val storedCnt = storedOr(s, s"$base/cnt") {
-        incrementalInc(s, d, newSide = false)
-          .groupBy("pk").agg(count(lit(1)).as("c"))
-      }
-      val drop = persistEager(incrementalInc(s, d, newSide = true))
-      val pairs = storedPairs
-        .unionByName(pairsPreFloor(drop))
-        .groupBy("p1", "p2").agg(sum("co").as("co"))
-        .filter(col("co") >= 2)
-      val cnt = storedCnt
-        .unionByName(drop.groupBy("pk").agg(count(lit(1)).as("c")))
+      // (pairIndex); the per-part order counts are this operator's own
+      val idx = pairIndex(s, d)
+      def partCounts(b: DataFrame) = b.select(explode(col("ps")).as("pk"))
+        .groupBy("pk").agg(count(lit(1)).as("c"))
+      val cnt = storedOr(s, s"${idx.base}/cnt")(partCounts(idx.kept))
+        .unionByName(partCounts(idx.drop))
         .groupBy("pk").agg(sum("c").as("c"))
-      val tot = storedTot
-        .unionByName(drop.agg(countDistinct(col("ok")).as("n_orders")))
-        .agg(sum("n_orders").as("n_orders"))
-      recommendFrom(pairs, cnt, tot, drop)
+      recommendFrom(idx.pairs, cnt, idx.tot, idx.drop)
     }),
   )
 

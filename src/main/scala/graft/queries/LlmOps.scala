@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.GraftExtensions.h60
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.Column
@@ -478,9 +479,7 @@ object LlmOps {
     // heavy reduction, nothing ever collects.
     "q_embedding_project" -> ((s, d) => {
       val dIn = 64L; val dOut = 8L
-      val h = conv(substring(md5(
-        concat(col("i"), lit("_"), col("j")).cast("binary")), 1, 15),
-        16, 10).cast("long")
+      val h = h60(concat(col("i"), lit("_"), col("j")))
       val r = s.range(dIn).select(col("id").as("i"))
         .crossJoin(s.range(dOut).select(col("id").as("j")))
         .withColumn("rw",

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.Column
+import graft.functions.GraftExtensions.{h60, h60Sql}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,17 +18,11 @@ import org.apache.spark.sql.functions._
   */
 object SamplingOps {
 
-  private def h60(c: Column): Column =
-    conv(substring(md5(c.cast("binary")), 1, 15), 16, 10).cast("long")
-
-  private val h60Sql = (x: String) =>
-    s"CAST(('0x' || substring(md5(CAST($x AS VARCHAR)), 1, 15)) AS BIGINT)"
-
   val q: Map[String, Q] = Map(
     // ~10% reproducible sample of documents by id-hash bucket.
     "q_sample_hash" -> ((s, d) =>
       Tables(s, d, "documents")
-        .filter(pmod(h60(col("doc_id").cast("string")), lit(100)) < 10)
+        .filter(pmod(h60(col("doc_id")), lit(100)) < 10)
         .select("doc_id", "lang", "source", "n_chars")
         .orderBy("doc_id")),
 
@@ -41,7 +35,7 @@ object SamplingOps {
     // the per-(split, source) manifest; the assignment itself is the
     // map-side projection. One two-phase agg, no other shuffle.
     "q_train_val_split" -> ((s, d) => {
-      val bucket = pmod(h60(col("doc_id").cast("string")), lit(100))
+      val bucket = pmod(h60(col("doc_id")), lit(100))
       Tables(s, d, "documents")
         .withColumn("split",
           when(bucket < 90, "train").when(bucket < 95, "val")
@@ -54,7 +48,7 @@ object SamplingOps {
     // Stratified sampling: per-language rates (en kept at 50%, others at
     // 10%) — the per-source quota shape of corpus curation.
     "q_stratified_sample" -> ((s, d) => {
-      val bucket = pmod(h60(col("doc_id").cast("string")), lit(100))
+      val bucket = pmod(h60(col("doc_id")), lit(100))
       Tables(s, d, "documents")
         .filter((col("lang") === "en" && bucket < 50) ||
           (col("lang") =!= "en" && bucket < 10))
@@ -71,7 +65,7 @@ object SamplingOps {
     // h60(doc_id). One source-keyed window (WindowGroupLimit prunes
     // rank > k before the shuffle completes at scale).
     "q_sample_stratum_k" -> ((s, d) => {
-      val h = h60(col("doc_id").cast("string"))
+      val h = h60(col("doc_id"))
       Tables(s, d, "documents")
         .withColumn("rk", row_number().over(
           Window.partitionBy("source").orderBy(h, col("doc_id"))))
@@ -93,7 +87,7 @@ object SamplingOps {
     // is needed (or wanted) before the compare. Map-side projection,
     // zero shuffles beyond the presentation sort.
     "q_importance_sample" -> ((s, d) => {
-      val u = h60(col("doc_id").cast("string")).cast("double") /
+      val u = h60(col("doc_id")).cast("double") /
         lit(1152921504606846976.0) // 2^60
       TextOps.withQualityCols(Tables(s, d, "documents"))
         .withColumn("u", u)

@@ -24,7 +24,6 @@ import java.util.concurrent.atomic.AtomicLong
   */
 final class IngestServer(bindAddr: String, landingDir: String,
   sharedKeys: Set[String],
-  healthProbe: () => Boolean = () => true,
   extraMetrics: () => Map[String, Long] = () => Map.empty)
   extends AutoCloseable {
 
@@ -122,7 +121,7 @@ final class IngestServer(bindAddr: String, landingDir: String,
     override def handle(ex: HttpExchange): Unit =
       try {
         if (ex.getRequestMethod != "GET") reply(ex, 405, "GET only")
-        else if (!draining && healthProbe()) reply(ex, 200, "OK")
+        else if (!draining) reply(ex, 200, "OK")
         else reply(ex, 503, "shutting down")
       } finally ex.close()
   })

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.queries.Cdc
+import graft.functions.GraftExtensions.h60
+import graft.queries.{Cdc, GraphOps}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -709,10 +710,7 @@ object Streams {
         graft.queries.FixtureLayout.ensureManifested(s"$dest/epoch=$epoch") {
           staging =>
             batch
-              .withColumn("shard", pmod(
-                conv(substring(md5(col("doc_id").cast("string")
-                  .cast("binary")), 1, 15), 16, 10).cast("long"),
-                lit(shards)))
+              .withColumn("shard", pmod(h60(col("doc_id")), lit(shards)))
               .repartition(shards, col("shard"))
               .write.parquet(staging)
         }
@@ -754,10 +752,11 @@ object Streams {
     * source's unit — the same one-file-one-POST unit the reference's
     * HTTP ingest guarantees), so per-order pairs never split across
     * epochs — which is also why `spark.graft.basketCap` composes
-    * per-epoch (round-11 verdict #2): the SAME row_number-over-(ok, pk)
-    * cut the batch twins apply (GraphOps.incrementalInc) runs inside
-    * each micro-batch, and since orders partition by epoch, per-epoch
-    * capping equals whole-corpus capping. The store root is tagged with
+    * per-epoch (round-11 verdict #2): each micro-batch writes
+    * `GraphOps.basketPairs(GraphOps.baskets(batch, cap))`, the SAME
+    * basket cut and pair emission the batch and incremental twins run,
+    * and since orders partition by epoch, per-epoch capping equals
+    * whole-corpus capping. The store root is tagged with
     * the cap it was built under (`_CAP`, written once create-exclusive):
     * a session running a different cap fails fast on both the write and
     * the read path, so a capped session's streamed index can never
@@ -779,7 +778,7 @@ object Streams {
     * pre-compaction file lists, a condition the maintainer cannot see. */
   def affinityUpdate(lineRows: DataFrame, store: String,
       checkpoint: String): StreamingQuery = {
-    val cap = basketCap(lineRows.sparkSession)
+    val cap = GraphOps.basketCap(lineRows.sparkSession)
     val compactEvery = lineRows.sparkSession.conf
       .get("spark.graft.affinityCompactEvery", "0").toInt
     stampCapTag(store, cap)
@@ -788,19 +787,9 @@ object Streams {
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
         graft.queries.FixtureLayout.ensureManifested(
           s"$store/epoch=$epoch") { staging =>
-          val inc0 = batch
-            .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-            .distinct()
-          val inc = if (cap <= 0) inc0 else {
-            val w = Window.partitionBy("ok").orderBy("pk")
-            inc0.withColumn("rn", row_number().over(w))
-              .filter(col("rn") <= cap).drop("rn")
-          }
-          inc.as("a").join(inc.as("b"),
-              col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-            .groupBy(col("a.pk").as("p1"), col("b.pk").as("p2"))
-            .agg(count(lit(1)).as("co"))
-            .write.parquet(staging)
+          GraphOps.basketPairs(GraphOps.baskets(batch
+            .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")),
+            cap)).write.parquet(staging)
         }
         if (compactEvery > 0 && epoch % compactEvery == compactEvery - 1) {
           compactAffinityStore(batch.sparkSession, store); ()
@@ -809,9 +798,6 @@ object Streams {
       }
       .start()
   }
-
-  private def basketCap(s: SparkSession): Int =
-    s.conf.get("spark.graft.basketCap", "0").toInt
 
   /** Write-once cap tag at the store root: partials built under one
     * basketCap definition must never mix with another's (the batch
@@ -901,20 +887,16 @@ object Streams {
     (folded, baseParquet, unfoldedDirs)
   }
 
-  /** PRE-floor pair partials merged by sum: what compaction folds. */
-  private def pairSums(spark: SparkSession, files: Seq[String]): DataFrame =
-    spark.read.parquet(files: _*).groupBy("p1", "p2").agg(sum("co").as("co"))
-
   /** The served view at base version `seq` (latest when None): the cap
     * tag checked, base + unfolded epoch partials merged, and the
     * co >= 2 support floor applied post-merge. */
   private def servedAffinity(spark: SparkSession, store: String,
       seq: Option[Int], ifEmpty: String): DataFrame = {
-    requireCapTag(store, basketCap(spark))
+    requireCapTag(store, GraphOps.basketCap(spark))
     val (_, baseParquet, unfoldedDirs) = affinityState(store, seq)
     val all = baseParquet ++ epochParquet(unfoldedDirs)
     require(all.nonEmpty, ifEmpty)
-    pairSums(spark, all).filter(col("co") >= 2)
+    GraphOps.supported(GraphOps.mergePairs(spark.read.parquet(all: _*)))
   }
 
   private def epochParquet(dirs: Seq[java.io.File]): Seq[String] =
@@ -1021,11 +1003,12 @@ object Streams {
     * them. Returns the number of epochs folded by this call (0 = no-op:
     * nothing new to fold). */
   def compactAffinityStore(spark: SparkSession, store: String): Int = {
-    requireCapTag(store, basketCap(spark))
+    requireCapTag(store, GraphOps.basketCap(spark))
     val (folded, baseParquet, unfoldedDirs) = affinityState(store, None)
     val unfoldedNames = unfoldedDirs.map(_.getName)
     if (unfoldedNames.isEmpty) return 0
-    val merged = pairSums(spark, baseParquet ++ epochParquet(unfoldedDirs))
+    val merged = GraphOps.mergePairs(
+      spark.read.parquet(baseParquet ++ epochParquet(unfoldedDirs): _*))
     graft.queries.FixtureLayout.publishManifested(s"$store/base") {
       staging =>
         merged.write.parquet(staging)

@@ -1,6 +1,11 @@
 package graft
 
+import graft.queries.GraphOps
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Algebraic properties from SURVEY §5.2: invariants that must hold for
@@ -75,6 +80,43 @@ class PropertiesSpec extends AnyFunSuite {
       }
       val touched = pairs.flatMap(p => Seq(p._1, p._2)).toSet
       assert(got.keySet == touched, s"seed $seed: node set mismatch")
+    }
+  }
+
+  test("co-purchase kernel: basketPairs(baskets) == distinct + row_number cut + self-join") {
+    import spark.implicits._
+    // the reference is the pair shape the kernel replaced: the distinct
+    // (ok, pk) incidence, a row_number-over-(ok, pk) basket cut, and the
+    // a.ok = b.ok AND a.pk < b.pk self-join counted per (p1, p2)
+    def reference(lines: DataFrame, cap: Int): DataFrame = {
+      val inc0 = lines.distinct()
+      val inc = if (cap <= 0) inc0 else inc0
+        .withColumn("rn", row_number().over(
+          Window.partitionBy("ok").orderBy("pk")))
+        .filter(col("rn") <= cap).drop("rn")
+      inc.as("a").join(inc.as("b"),
+          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
+        .groupBy(col("a.pk").as("p1"), col("b.pk").as("p2"))
+        .agg(count(lit(1)).as("co"))
+    }
+    def rows(df: DataFrame): Seq[(Long, Long, Long)] =
+      df.select("p1", "p2", "co").as[(Long, Long, Long)].collect()
+        .toSeq.sorted
+    val lineGen: Gen[(Long, Long)] = for {
+      ok <- Gen.chooseNum(0L, 30L)
+      pk <- Gen.chooseNum(0L, 12L)
+    } yield (ok, pk)
+    for (seed <- Seq(3L, 11L, 29L)) {
+      val drawn = Gen.listOfN(150, lineGen)
+        .pureApply(Gen.Parameters.default, Seed(seed))
+      // re-append a slice so every incidence carries duplicate rows
+      val lines = (drawn ++ drawn.take(40)).toDF("ok", "pk")
+      val maxBasket = drawn.distinct.groupBy(_._1).values.map(_.size).max
+      for (cap <- Seq(0, 1, 2, 3, maxBasket + 1)) {
+        val got = GraphOps.basketPairs(GraphOps.baskets(lines, cap))
+        assert(rows(got) == rows(reference(lines, cap)),
+          s"seed $seed, cap $cap: kernel pairs drifted from the self-join")
+      }
     }
   }
 

@@ -439,7 +439,7 @@ class StreamingSpec extends AnyFunSuite {
   test("s_affinity_update: basketCap applies per epoch == capped batch; cap tag rejects mixing") {
     // round-12 (r11 verdict #2): a capped session's streamed index must
     // be bit-identical to the capped batch pair definition — the same
-    // row_number-over-(ok, pk) cut incrementalInc applies
+    // GraphOps.baskets cut the batch and incremental paths apply
     val in = tmp("affcap-in"); val store = tmp("affcap-store")
     val schema = StructType(Seq(
       StructField("l_orderkey", LongType),
