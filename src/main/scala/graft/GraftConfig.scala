@@ -64,8 +64,6 @@ import org.apache.spark.sql.SparkSession
   *    fold increments into the view every N epochs (0 = never)
   *  - `spark.graft.tombstoneLowWatermark` — Streams.cdcUpsertMaterialize,
   *    HLC below which tombstones are collected ("" = keep all)
-  *  - `spark.graft.materializeRetainGenerations` —
-  *    Streams.cdcUpsertMaterialize, table generations kept (2)
   */
 final case class GraftConfig(
   topicPrefix: String,

@@ -25,6 +25,13 @@ import org.apache.spark.sql.functions.col
   *     which is byte-equivalent by construction (same source content,
   *     deterministic layout).
   *
+  * It also holds the one commit protocol for LIVE versioned stores
+  * (publishManifested: fsync, atomic MANIFEST swap, history copy,
+  * vacuum). Its streaming users are s_export_manifested and
+  * s_affinity_update (one manifested dir per epoch, plus the affinity
+  * base) and s_cdc_upsert_materialize (one manifested latest-state
+  * table); q_export_shards and compactExport are its batch users.
+  *
   * At 100 TB the analogue is a catalog-managed table keyed by snapshot
   * id, written by one job and atomically committed — this object is that
   * contract scaled down to tmpdir.
@@ -80,7 +87,7 @@ object FixtureLayout {
     } finally raf.close()
   }
 
-  private def deleteRec(f: File): Unit = {
+  private[graft] def deleteRec(f: File): Unit = {
     if (f.isDirectory) { val cs = f.listFiles(); if (cs != null) cs.foreach(deleteRec) }
     f.delete()
     ()
@@ -216,26 +223,14 @@ object FixtureLayout {
     * version whose data dir was expired by `vacuumExport` fails loudly
     * naming the cause. */
   def manifestedFilesAt(dest: String, seq: Int): (String, Seq[String]) = {
-    val entry = listVersions(dest).find(_._1 == seq).getOrElse(
+    val vid = listVersions(dest).find(_._1 == seq).getOrElse(
       throw new IllegalStateException(
         s"no committed version $seq at $dest — known: " +
-          listVersions(dest).map(_._1).mkString(",")))
-    val mf = new File(new File(dest, "manifests"), f"$seq%06d-${entry._2}")
-    val entries = new String(Files.readAllBytes(mf.toPath), "UTF-8")
-      .linesIterator.filter(_.nonEmpty).map { l =>
-        val Array(rel, len) = l.split("\t"); (rel, len.toLong)
-      }.toSeq
-    val vid = entries.head._1.takeWhile(_ != '/')
+          listVersions(dest).map(_._1).mkString(",")))._2
     if (!new File(dest, vid).isDirectory) throw new IllegalStateException(
       s"version $seq ($vid) at $dest was expired by vacuumExport — " +
         "time travel past the vacuum horizon is impossible")
-    entries.foreach { case (rel, len) =>
-      val f = new File(dest, rel)
-      if (!f.isFile || f.length != len) throw new IllegalStateException(
-        s"manifested file $rel (${len}B) missing or truncated at $dest — " +
-          "export integrity violated")
-    }
-    (s"$dest/$vid", entries.map { case (rel, _) => s"$dest/$rel" })
+    readManifest(dest, new File(new File(dest, "manifests"), f"$seq%06d-$vid"))
   }
 
   /** Batch read of a pinned historical export version. */
@@ -294,6 +289,18 @@ object FixtureLayout {
     if (!mf.isFile) throw new IllegalStateException(
       s"no committed manifest at $dest — export was never published " +
         "(or crashed before its commit point)")
+    readManifest(dest, mf)
+  }
+
+  /** `manifestedFiles`, or None while nothing is committed at `dest`. */
+  def committedFiles(dest: String): Option[(String, Seq[String])] =
+    if (new File(dest, "MANIFEST").isFile) Some(manifestedFiles(dest))
+    else None
+
+  /** Parse one committed manifest (`rel\tlen` lines) of the store at
+    * `dest` and check every entry is present at its committed length.
+    * Returns (versionRoot, absolute data-file paths). */
+  private def readManifest(dest: String, mf: File): (String, Seq[String]) = {
     val entries = new String(Files.readAllBytes(mf.toPath), "UTF-8")
       .linesIterator.filter(_.nonEmpty).map { l =>
         val Array(rel, len) = l.split("\t"); (rel, len.toLong)
@@ -308,13 +315,24 @@ object FixtureLayout {
     (s"$dest/$vid", entries.map { case (rel, _) => s"$dest/$rel" })
   }
 
+  /** The committed `epoch=*` dirs of a per-epoch manifested store
+    * (s_export_manifested, s_affinity_update), sorted by name: a dir
+    * without a MANIFEST is a torn epoch and is not listed. */
+  def committedEpochs(dest: String): Seq[File] =
+    Option(new File(dest).listFiles()).toSeq.flatten
+      .filter(d => d.isDirectory && d.getName.startsWith("epoch="))
+      .filter(d => new File(d, "MANIFEST").isFile)
+      .sortBy(_.getName)
+
   /** Garbage-collect unreferenced export versions under `dest`: delete
     * every `v-*` dir the committed MANIFEST does not name — crashed
-    * writers' leftovers and superseded versions. Safe by the protocol's
-    * own rule: the manifest is the only source of visibility, so an
-    * unreferenced version is unreadable by a correct reader. Integrity
-    * of the CURRENT version is validated first (manifestedFiles), so a
-    * corrupt state aborts loudly before anything is deleted. This is
+    * writers' leftovers and superseded versions — and every stray
+    * `MANIFEST.tmp.*` file a writer left before its swap. Safe by the
+    * protocol's own rule: the manifest is the only source of
+    * visibility, so an unreferenced version is unreadable by a correct
+    * reader. Integrity of the CURRENT version is validated first
+    * (manifestedFiles), so a corrupt state aborts loudly before
+    * anything is deleted. This is
     * Iceberg/Delta expire-snapshots scaled down; like there, run it
     * outside any window where a long-lived reader may still hold paths
     * resolved from a superseded manifest. Returns the deleted version
@@ -323,8 +341,8 @@ object FixtureLayout {
     val (vroot, _) = manifestedFiles(dest)
     val current = new File(vroot).getName
     val stale = Option(new File(dest).listFiles()).toSeq.flatten
-      .filter(d => d.isDirectory && d.getName != current &&
-        (d.getName.startsWith("v-") || d.getName.startsWith("MANIFEST.tmp")))
+      .filter(d => d.getName.startsWith("MANIFEST.tmp") ||
+        (d.isDirectory && d.getName.startsWith("v-") && d.getName != current))
     stale.foreach(deleteRec)
     stale.map(_.getName)
   }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.functions.GraftExtensions.h60
-import graft.queries.{Cdc, GraphOps}
+import graft.queries.{Cdc, FixtureLayout, GraphOps}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -234,15 +234,24 @@ object Streams {
     * newest version per key wins by the HLC `updated` string (NOT arrival
     * order, so late-arriving older versions lose), deletes TOMBSTONE the
     * key (the tombstone keeps its `updated`, so a late older upsert in a
-    * LATER batch still loses — it never resurrects the key), and the
-    * merged state is published by an atomic pointer swap (write
-    * `v<batch>` dir, then repoint CURRENT) — a reader sees the old or
-    * the new table, never a half-written one; the previous version dir
-    * is kept for one generation then removed. Replay safety: if CURRENT
-    * already points at this batch's version (crash AFTER the swap but
-    * BEFORE the checkpoint commit), the batch was fully applied — the
-    * replay is a no-op instead of overwriting the directory it is
-    * lazily reading from.
+    * LATER batch still loses — it never resurrects the key).
+    *
+    * Commit: the table is a manifested store (FixtureLayout's one
+    * protocol). Each batch stages the merged state plus a one-line
+    * `_BATCH` file holding the batch id in a fresh `v-*` dir, fsyncs
+    * both, and commits them together with one atomic MANIFEST swap — a
+    * reader sees the old or the new table, never a half-written one,
+    * and a crash before the swap leaves only unreferenced debris.
+    * Replay safety: if the committed version's `_BATCH` is this batch
+    * id (crash AFTER the swap but BEFORE the checkpoint commit), the
+    * batch was fully applied and the replay is a no-op; any other write
+    * goes to a new `v-*` dir, never over the one being read. Retention
+    * is the one vacuum: before publishing, `vacuumExport` drops every
+    * version but the committed one, so after each batch the new version
+    * and one prior generation remain (a reader that resolved the table
+    * one batch ago still finds its files; older pins name the vacuum).
+    * As on every manifested store, `manifests/` gains one small history
+    * file per batch.
     *
     * Scale shape: the merge is one window over (state ∪ batch) keyed on
     * key_id — state stays O(live keys + tombstones; a real deployment
@@ -255,7 +264,6 @@ object Streams {
     * deliveries with divergent payloads. */
   def cdcUpsertMaterialize(parsed: DataFrame, tableDir: String,
     checkpoint: String): StreamingQuery = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tableDir))
     parsed
       .filter(col("op").isin("upsert", "delete"))
       .select(element_at(col("key"), 1).as("key_id"),
@@ -264,14 +272,14 @@ object Streams {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val s = batch.sparkSession
-        val version = f"v$id%06d"
-        if (currentVersion(tableDir).contains(version)) {
-          // replay of a batch whose swap already landed: fully applied
-          ()
-        } else {
+        val committed = FixtureLayout.committedFiles(tableDir).map(_._2)
+        val applied = committed.exists(_.find(_.endsWith("/_BATCH"))
+          .exists(f => java.nio.file.Files.readString(
+            java.nio.file.Paths.get(f)).trim == id.toString))
+        if (!applied) {
           // state INCLUDING tombstones — deletes must keep outranking
           // late older upserts across batches
-          val cur = readRaw(s, tableDir).getOrElse(
+          val cur = committed.map(stateFrame(s, _)).getOrElse(
             s.createDataFrame(new java.util.ArrayList[Row](), batch.schema))
           val w = Window.partitionBy("key_id")
             .orderBy(col("updated").desc, col("deleted").desc,
@@ -289,75 +297,28 @@ object Streams {
           val next =
             if (lowWm.isEmpty) merged
             else merged.filter(!col("deleted") || col("updated") >= lowWm)
-          val vdir = s"$tableDir/$version"
-          next.write.mode("overwrite").parquet(vdir)
-          // Reader-vs-GC window (round-5 advice): readMaterialized
-          // resolves CURRENT lazily, so a reader whose action runs k
-          // batches later needs the k-generations-old dir to still
-          // exist. Retention depth is the deployment's choice of that
-          // window; default 2 (current + one prior) matches readers
-          // that materialize within one batch interval.
-          val retain = math.max(1,
-            s.conf.get("spark.graft.materializeRetainGenerations", "2").toInt)
-          swapPointer(tableDir, version, retain)
-          ()
+          if (committed.nonEmpty) FixtureLayout.vacuumExport(tableDir)
+          FixtureLayout.publishManifested(tableDir) { staging =>
+            next.write.parquet(staging)
+            java.nio.file.Files.writeString(
+              java.nio.file.Paths.get(staging, "_BATCH"), s"$id\n")
+            ()
+          }
         }
+        ()
       }
       .start()
   }
 
-  /** The LIVE materialized table behind the CURRENT pointer, if
+  /** The LIVE materialized table at its committed MANIFEST, if
     * published: tombstoned (deleted) keys are filtered out. */
   def readMaterialized(s: SparkSession, tableDir: String): Option[DataFrame] =
-    readRaw(s, tableDir)
+    FixtureLayout.committedFiles(tableDir).map(c => stateFrame(s, c._2))
       .map(_.filter(!col("deleted")).drop("deleted"))
 
   /** Raw state including tombstones (the merge input). */
-  private def readRaw(s: SparkSession, tableDir: String): Option[DataFrame] =
-    currentVersion(tableDir).map(v => s.read.parquet(s"$tableDir/$v"))
-
-  private def currentVersion(tableDir: String): Option[String] = {
-    val ptr = java.nio.file.Paths.get(tableDir, "CURRENT")
-    if (java.nio.file.Files.exists(ptr))
-      Some(java.nio.file.Files.readString(ptr).trim)
-    else None
-  }
-
-  /** Atomically repoint CURRENT (tmp write + ATOMIC_MOVE) and drop all
-    * but the newest `retain` version dirs (zero-padded names, so
-    * lexicographic order IS version order). `retain`=2 keeps the new
-    * version plus one generation for in-flight readers. */
-  private def swapPointer(tableDir: String, version: String,
-    retain: Int = 2): Unit = {
-    val dir = java.nio.file.Paths.get(tableDir)
-    val tmp = java.nio.file.Files.createTempFile(dir, ".ptr", ".tmp")
-    java.nio.file.Files.writeString(tmp, version)
-    java.nio.file.Files.move(tmp, dir.resolve("CURRENT"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // keep the newest `retain` versions for in-flight readers; drop older
-    val keep = {
-      val ls = java.nio.file.Files.list(dir)
-      val versions =
-        try ls.map[String](_.getFileName.toString)
-          .filter(n => n.startsWith("v") && !n.contains("."))
-          .sorted(java.util.Comparator.reverseOrder[String]())
-          .toArray.map(_.toString)
-        finally ls.close()
-      versions.take(math.max(retain, 1)).toSet + version
-    }
-    val stream = java.nio.file.Files.list(dir)
-    try stream.forEach { p =>
-      val n = p.getFileName.toString
-      if (n.startsWith("v") && !keep.contains(n) &&
-        java.nio.file.Files.isDirectory(p)) {
-        val files = java.nio.file.Files.walk(p)
-        try files.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
-        finally files.close()
-      }
-    } finally stream.close()
-  }
+  private def stateFrame(s: SparkSession, files: Seq[String]): DataFrame =
+    s.read.parquet(files.filter(_.endsWith(".parquet")): _*)
 
   // --------------------------------------------------------------- windows
 
@@ -707,7 +668,7 @@ object Streams {
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        graft.queries.FixtureLayout.ensureManifested(s"$dest/epoch=$epoch") {
+        FixtureLayout.ensureManifested(s"$dest/epoch=$epoch") {
           staging =>
             batch
               .withColumn("shard", pmod(h60(col("doc_id")), lit(shards)))
@@ -723,12 +684,8 @@ object Streams {
     * are invisible, truncated manifested files fail loudly
     * (FixtureLayout.manifestedFiles). */
   def readManifestedExport(spark: SparkSession, dest: String): DataFrame = {
-    val epochs = Option(new java.io.File(dest).listFiles()).toSeq.flatten
-      .filter(d => d.isDirectory && d.getName.startsWith("epoch="))
-      .filter(d => new java.io.File(d, "MANIFEST").isFile)
-      .sortBy(_.getName)
-    val files = epochs.flatMap(e =>
-      graft.queries.FixtureLayout.manifestedFiles(e.getAbsolutePath)._2)
+    val files = FixtureLayout.committedEpochs(dest).flatMap(e =>
+      FixtureLayout.manifestedFiles(e.getAbsolutePath)._2)
       .filter(_.endsWith(".parquet"))
     require(files.nonEmpty,
       s"no committed export epochs under $dest — nothing was published")
@@ -785,8 +742,7 @@ object Streams {
     lineRows.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        graft.queries.FixtureLayout.ensureManifested(
-          s"$store/epoch=$epoch") { staging =>
+        FixtureLayout.ensureManifested(s"$store/epoch=$epoch") { staging =>
           GraphOps.basketPairs(GraphOps.baskets(batch
             .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")),
             cap)).write.parquet(staging)
@@ -860,13 +816,10 @@ object Streams {
     * never a double count. */
   private def affinityState(store: String, seq: Option[Int])
       : (Set[String], Seq[String], Seq[java.io.File]) = {
-    val FL = graft.queries.FixtureLayout
     val baseDir = s"$store/base"
     val base = seq match {
-      case Some(v) => Some(FL.manifestedFilesAt(baseDir, v))
-      case None if new java.io.File(baseDir, "MANIFEST").isFile =>
-        Some(FL.manifestedFiles(baseDir))
-      case None => None
+      case Some(v) => Some(FixtureLayout.manifestedFilesAt(baseDir, v))
+      case None => FixtureLayout.committedFiles(baseDir)
     }
     val (folded, baseParquet) = base match {
       case Some((vroot, files)) =>
@@ -878,12 +831,8 @@ object Streams {
         (names, files.filter(_.endsWith(".parquet")))
       case None => (Set.empty[String], Seq.empty[String])
     }
-    val unfoldedDirs = Option(new java.io.File(store).listFiles())
-      .toSeq.flatten
-      .filter(d => d.isDirectory && d.getName.startsWith("epoch="))
-      .filter(d => new java.io.File(d, "MANIFEST").isFile)
+    val unfoldedDirs = FixtureLayout.committedEpochs(store)
       .filterNot(d => folded.contains(d.getName))
-      .sortBy(_.getName)
     (folded, baseParquet, unfoldedDirs)
   }
 
@@ -901,7 +850,7 @@ object Streams {
 
   private def epochParquet(dirs: Seq[java.io.File]): Seq[String] =
     dirs.flatMap { e =>
-      try graft.queries.FixtureLayout.manifestedFiles(e.getAbsolutePath)._2
+      try FixtureLayout.manifestedFiles(e.getAbsolutePath)._2
       catch {
         case ex: IllegalStateException =>
           // Vacuum vs corruption (round-15, the concurrent maintenance
@@ -986,7 +935,7 @@ object Streams {
     * a store that has never been compacted (the live view is then the
     * only view). */
   def listAffinityVersions(store: String): Seq[(Int, String)] =
-    graft.queries.FixtureLayout.listVersions(s"$store/base")
+    FixtureLayout.listVersions(s"$store/base")
 
   /** Epoch compaction (round-11 verdict #3): fold every committed epoch
     * into the base so a long-running maintainer's read cost stays
@@ -1009,7 +958,7 @@ object Streams {
     if (unfoldedNames.isEmpty) return 0
     val merged = GraphOps.mergePairs(
       spark.read.parquet(baseParquet ++ epochParquet(unfoldedDirs): _*))
-    graft.queries.FixtureLayout.publishManifested(s"$store/base") {
+    FixtureLayout.publishManifested(s"$store/base") {
       staging =>
         merged.write.parquet(staging)
         val body = (folded ++ unfoldedNames).toSeq.sorted
@@ -1031,12 +980,6 @@ object Streams {
     * only after no reader may still hold file paths resolved from a
     * pre-compaction listing. Returns the deleted version dirs. */
   def vacuumAffinityStore(store: String): Seq[String] = {
-    def deleteRec(f: java.io.File): Unit = {
-      if (f.isDirectory) {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(deleteRec)
-      }
-      f.delete(); ()
-    }
     val (folded, _, _) = affinityState(store, None)
     folded.toSeq.sorted.flatMap { name =>
       val dir = new java.io.File(store, name)
@@ -1064,7 +1007,7 @@ object Streams {
           (prior ++ vdirs.map(_.getName)).distinct.sorted
             .mkString("", "\n", "\n").getBytes("UTF-8"))
       }
-      vdirs.foreach(deleteRec)
+      vdirs.foreach(FixtureLayout.deleteRec)
       vdirs.map(d => s"$name/${d.getName}")
     }
   }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.queries.FixtureLayout
 import graft.streaming.{NetBroker, NetPublisher, Streams}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -90,6 +91,17 @@ class StreamingSpec extends AnyFunSuite {
 
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
+
+  /** The CDC table's committed raw state (tombstones included), resolved
+    * through its MANIFEST. */
+  private def committedState(table: String): DataFrame =
+    spark.read.parquet(FixtureLayout.manifestedFiles(table)._2
+      .filter(_.endsWith(".parquet")): _*)
+
+  /** The `v-*` version dirs under a manifested store, by name. */
+  private def versionDirs(dest: String): Seq[String] =
+    new java.io.File(dest).listFiles().toSeq.map(_.getName)
+      .filter(_.startsWith("v-")).sorted
 
   // ------------------------------------------------------------ ingest
 
@@ -914,40 +926,40 @@ class StreamingSpec extends AnyFunSuite {
     assert(st(3L) == 30.5, "late-arriving older version must lose for key 3")
     // tombstones are retained by default (no low watermark configured):
     // key 2's delete marker still outranks anything older
-    val raw = spark.read.parquet(
-      s"$table/${Files.readString(Paths.get(table, "CURRENT")).trim}")
+    val raw = committedState(table)
     assert(raw.filter(col("deleted")).count() == 1,
       "delete tombstone must be retained without a low watermark")
-    // published via pointer: CURRENT exists, stale version dirs pruned
-    assert(Files.exists(Paths.get(table, "CURRENT")))
-    val vdirs = Files.list(Paths.get(table)).toArray.map(_.toString)
-      .count(_.matches(".*/v\\d+$"))
-    assert(vdirs <= 2, s"stale version dirs not pruned: $vdirs")
+    // published via the MANIFEST pointer: stale version dirs pruned
+    val vdirs = versionDirs(table)
+    assert(vdirs.size <= 2, s"stale version dirs not pruned: $vdirs")
   }
 
-  test("s_cdc_upsert_materialize: configurable retention keeps N generations for lagging readers") {
+  test("s_cdc_upsert_materialize: retains current + one prior; older pins fail") {
     val in = tmp("cdc-ret"); val table = tmp("cdc-ret-table")
-    spark.conf.set("spark.graft.materializeRetainGenerations", "3")
-    try {
-      val parsed =
-        Streams.parseEnvelope(Streams.ingestLines(spark, in), payload)
-      val q = Streams.cdcUpsertMaterialize(parsed, table, tmp("cdc-ret-ckpt"))
-      for (i <- 1 to 4) {
-        write(in, s"sharedKey=k1/t/2024-01-01/${ts33(i)}-u$i-orders-1.ndjson",
-          Seq(envLine(i)))
-        q.processAllAvailable()
-      }
-      q.stop()
-      // 4 swaps with retain=3: exactly the newest 3 generations survive,
-      // so a reader that resolved CURRENT up to 2 batches ago still finds
-      // its directory (the round-5 advice scenario)
-      val vdirs = Files.list(Paths.get(table)).toArray.map(_.toString)
-        .filter(_.matches(".*/v\\d+$")).sorted
-      assert(vdirs.length == 3, s"retain=3 must keep 3 generations: ${vdirs.toSeq}")
-      val oldest = vdirs.head.split("/").last
-      assert(spark.read.parquet(s"$table/$oldest").count() >= 1,
-        "the oldest retained generation must still be readable")
-    } finally spark.conf.unset("spark.graft.materializeRetainGenerations")
+    val parsed =
+      Streams.parseEnvelope(Streams.ingestLines(spark, in), payload)
+    val q = Streams.cdcUpsertMaterialize(parsed, table, tmp("cdc-ret-ckpt"))
+    for (i <- 1 to 4) {
+      write(in, s"sharedKey=k1/t/2024-01-01/${ts33(i)}-u$i-orders-1.ndjson",
+        Seq(envLine(i)))
+      q.processAllAvailable()
+    }
+    q.stop()
+    // 4 commits through the one vacuum: exactly the committed version
+    // and the one before it survive, so a reader that resolved the
+    // table one batch ago still finds its files
+    val vdirs = versionDirs(table)
+    assert(vdirs.size == 2, s"must keep current + one prior: $vdirs")
+    val hist = FixtureLayout.listVersions(table).map(_._1)
+    assert(hist == Seq(1, 2, 3, 4), s"one history entry per batch: $hist")
+    assert(FixtureLayout.readExportVersion(spark, table, 3)
+      .filter(!col("deleted")).count() == 3,
+      "the prior generation must still be readable")
+    val e = intercept[IllegalStateException] {
+      FixtureLayout.readExportVersion(spark, table, 2)
+    }
+    assert(e.getMessage.contains("vacuum"),
+      s"an expired pin must name the vacuum, got: ${e.getMessage}")
   }
 
   test("s_resolved_watermark: markers advance monotonically per batch") {
@@ -1202,8 +1214,7 @@ class StreamingSpec extends AnyFunSuite {
         Seq(envLine(3)))
       q.processAllAvailable()
       q.stop()
-      val raw = spark.read.parquet(
-        s"$table/${Files.readString(Paths.get(table, "CURRENT")).trim}")
+      val raw = committedState(table)
       assert(raw.filter(col("deleted")).count() == 0,
         "tombstone below the low watermark must be garbage-collected")
       assert(Streams.readMaterialized(spark, table).get
