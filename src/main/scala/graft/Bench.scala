@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-key timer: every declared query against SPARK_GRAFT_SF_DIR, one
   * durable JSON record file plus two JSON lines on stdout.
@@ -92,24 +91,13 @@ object Bench {
         "run to BENCH_LOCAL.json (the full-suite record); pick another " +
         "SPARK_GRAFT_BENCH_OUT")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // The fixture harness may run the O(n^2) exact ground-truth twin
-      // (q_dedup_embedding); production sessions must not.
-      .config("spark.graft.allowQuadratic", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = FixtureSession(cpus.toInt)
     val sfDir = GraftConfig.from(spark).sfDir
 
-    // Cache hygiene: the dedup-sketch queries persist intermediates whose
-    // lifetime the harness owns (the builders return lazy frames, so they
-    // cannot unpersist themselves). Clearing AFTER each query keeps every
-    // timing measured against a cold cache and no GC pressure from
-    // earlier keys.
+    // The caller frees what a key's build cached (the materialization
+    // contract, queries/package.scala): clearing AFTER each query also
+    // keeps every timing measured against a cold cache and no GC
+    // pressure from earlier keys.
     def run(name: String): Unit =
       try SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()

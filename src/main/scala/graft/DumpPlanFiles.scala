@@ -1,19 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: write `.explain("formatted")` output for the named queries
   * to individual files — the per-round plan evidence
   * (plans/r{N}/<query>_{before,after}.txt).
   *
   * Usage: runMain graft.DumpPlanFiles <outDir> <suffix> <k1,k2,...> [sfDir]
   *
-  * Same session shape as the test session (TestSpark). Each file holds
-  * the plans the key's build runs (PlanCapture): every build-time
-  * action's plan under an `== <action> ==` header, then the returned
-  * frame's plan under `== result ==`. A sketch query's result is
-  * usually a checkpointed `Scan ExistingRDD`; its pipeline is the
-  * `localCheckpoint` plan above it.
+  * Same session as the test suites (FixtureSession at 4 cores). Each
+  * file holds the plans the key's build runs (PlanCapture): every
+  * build-time action's plan under an `== <action> ==` header, then the
+  * returned frame's plan under `== result ==`. Like every caller of
+  * SparkEntry.queries, it clears the cache after each key.
   */
 object DumpPlanFiles {
   def main(args: Array[String]): Unit = {
@@ -26,21 +23,16 @@ object DumpPlanFiles {
     keys.foreach(k => require(SparkEntry.queries.contains(k),
       s"unknown query '$k'"))
     java.nio.file.Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.graft.allowQuadratic", "true")
-      .getOrCreate()
+    val spark = FixtureSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     keys.foreach { k =>
-      val plans = PlanCapture(spark)(SparkEntry.queries(k)(spark, sfDir))
-        .map { case (action, qe) =>
-          s"== $action ==\n" + qe.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-        }
+      val plans =
+        try PlanCapture(spark)(SparkEntry.queries(k)(spark, sfDir))
+          .map { case (action, qe) =>
+            s"== $action ==\n" + qe.explainString(
+              org.apache.spark.sql.execution.FormattedMode)
+          }
+        finally spark.catalog.clearCache()
       java.nio.file.Files.write(outDir.resolve(s"${k}_$suffix.txt"),
         plans.mkString("\n").getBytes("UTF-8"))
       println(s"[dumpplanfiles] wrote ${k}_$suffix.txt")

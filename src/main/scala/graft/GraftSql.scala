@@ -10,8 +10,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - FUNCTIONS arrive via `spark.sql.extensions=
   *    graft.functions.GraftExtensions` (cosine_sim, dot_product,
   *    graft_h60, sign_lsh_sig, ivf_top_cells, shingle_hash60,
-  *    bloom_agg/bloom_contains) — injected into every session the
-  *    platform creates, no application code needed;
+  *    bloom_agg/bloom_contains, max_cos_min_id, pq_encode/pq_decode)
+  *    — injected into every session the platform creates, no
+  *    application code needed;
   *  - RELATIONS arrive here: [[registerTables]] binds each fixture
   *    table (through the same [[Tables]] schema-reconciliation
   *    chokepoint every DataFrame operator reads through) as a temp view

@@ -7,7 +7,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import scala.jdk.CollectionConverters._
 
 /** The plans a key's build really runs. Building a frame can run query
-  * actions of its own (persistEager's count, materializeAndFree's
+  * actions of its own (persistEager's count, a checkpoint's
   * localCheckpoint, a driver-side collect), so the returned frame's plan
   * alone is not the program a session executes. `apply` listens while
   * `build` runs and returns, in order, `(funcName, QueryExecution)` for

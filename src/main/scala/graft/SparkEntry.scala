@@ -9,7 +9,10 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q_agg_group")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. A build may
+    * cache intermediates and never frees them: whoever consumes the
+    * returned frame clears the session's cache after each key (the
+    * materialization contract, queries/package.scala). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     modules.map(_._2).reduce(_ ++ _)
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,17 +9,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // The fixture harness may run the O(n^2) exact ground-truth twin
-      // (q_dedup_embedding); production sessions must not (round-4 #5).
-      .config("spark.graft.allowQuadratic", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = FixtureSession(cpus.toInt)
     new java.io.File(outDir).mkdirs()
     var failed = 0
     SparkEntry.queries
@@ -37,9 +26,8 @@ object Verify {
         Files.writeString(Paths.get(s"$outDir/$name/ERROR.txt"),
           s"$name: ${e.toString}\n")
       } finally
-        // Release the per-query persisted sketch frames the builders
-        // cannot unpersist themselves (they return lazy frames) — see
-        // Bench.run for the full rationale.
+        // The caller frees what the key's build cached (the
+        // materialization contract, queries/package.scala).
         spark.catalog.clearCache()
     }
     if (failed > 0) System.err.println(s"[verify] $failed queries FAILED")

@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
@@ -89,26 +88,10 @@ case class CosineSim(left: Expression, right: Expression)
 }
 
 object CosineSim {
-  private val ident = FunctionIdentifier("cosine_sim")
-
-  /** Idempotent per-session registration in the function registry, then
-    * usable as `cosine_sim(a, b)` from both the Column API and SQL. */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(ident)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-        (exprs: Seq[Expression]) => {
-          // analysis-time arity error instead of IndexOutOfBounds at plan
-          if (exprs.length != 2) throw new IllegalArgumentException(
-            s"cosine_sim requires exactly 2 arguments, got ${exprs.length}")
-          CosineSim(exprs.head, exprs(1))
-        })
-    }
-
-  /** Column-API entry: registers on first use for the given session. */
+  /** Column-API entry: registers the natives on first use for the
+    * given session. */
   def apply(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+    GraftExtensions.register(spark)
     call_function("cosine_sim", a, b)
   }
 }

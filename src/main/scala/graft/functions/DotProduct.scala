@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
@@ -71,24 +70,10 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
-  private val ident = FunctionIdentifier("dot_product")
-
-  /** Idempotent per-session registration, mirroring CosineSim.register. */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(ident)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-        (exprs: Seq[Expression]) => {
-          if (exprs.length != 2) throw new IllegalArgumentException(
-            s"dot_product requires exactly 2 arguments, got ${exprs.length}")
-          DotProduct(exprs.head, exprs(1))
-        })
-    }
-
-  /** Column-API entry: registers on first use for the given session. */
+  /** Column-API entry: registers the natives on first use for the
+    * given session. */
   def apply(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+    GraftExtensions.register(spark)
     call_function("dot_product", a, b)
   }
 }

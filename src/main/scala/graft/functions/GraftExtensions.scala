@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Cast, Conv, Expression, ExpressionInfo, Literal, Md5, Substring}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
@@ -14,7 +14,9 @@ import org.apache.spark.sql.types.{BinaryType, LongType}
   *
   * — so every session (including ones the user's platform creates, where
   * application code never gets to call a register() helper) resolves them
-  * from SQL and the Column API. Injected:
+  * from SQL and the Column API. One table ([[natives]]) feeds both the
+  * injection and the per-session [[register]] the Column-API entries
+  * call. Injected:
   *
   *  - `cosine_sim(array<float>, array<float>)` — the codegen'd similarity
   *    kernel (CosineSim.scala);
@@ -30,6 +32,10 @@ import org.apache.spark.sql.types.{BinaryType, LongType}
   *    (IvfTopCells.scala);
   *  - `shingle_hash60(text, n, distinct)` — fused shingle hasher
   *    (ShingleHash60.scala);
+  *  - `dot_product(a, b)` (DotProduct.scala) and `max_cos_min_id(cos,
+  *    id)`, the exact-NN argmax aggregate (MaxCosMinId.scala);
+  *  - `pq_encode(vec, cell, coarse, books)` / `pq_decode(codes, cell,
+  *    coarse, books)` — the IVF-PQ codec (PqCodec.scala);
   *  - `bloom_agg(long[, n])` / `bloom_contains(bloom, long)` — Catalyst's
   *    own runtime-filter bloom sketch pair, surfaced for the explicit
   *    semi-join prefilter pattern (q_join_bloom).
@@ -41,16 +47,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  private def h60Builder(exprs: Seq[Expression]): Expression = {
-    if (exprs.length != 1) throw new IllegalArgumentException(
-      s"graft_h60 requires exactly 1 argument, got ${exprs.length}")
+  private def h60Builder(exprs: Seq[Expression]): Expression =
     Cast(
       Conv(
         Substring(Md5(Cast(exprs.head, BinaryType)),
           Literal(1), Literal(15)),
         Literal(16), Literal(10)),
       LongType)
-  }
 
   val h60Ident = FunctionIdentifier("graft_h60")
 
@@ -64,43 +67,35 @@ object GraftExtensions {
   def h60Sql(x: String): String =
     s"CAST(('0x' || substring(md5(CAST($x AS VARCHAR)), 1, 15)) AS BIGINT)"
 
-  def inject(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 2) throw new IllegalArgumentException(
-          s"cosine_sim requires exactly 2 arguments, got ${exprs.length}")
-        CosineSim(exprs.head, exprs(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 2) throw new IllegalArgumentException(
-          s"dot_product requires exactly 2 arguments, got ${exprs.length}")
-        DotProduct(exprs.head, exprs(1))
-      }))
-    ext.injectFunction((
-      h60Ident,
-      new ExpressionInfo(classOf[Conv].getName, "graft_h60"),
-      h60Builder _))
-    ext.injectFunction((
-      FunctionIdentifier("sign_lsh_sig"),
-      new ExpressionInfo(classOf[SignLshSig].getName, "sign_lsh_sig"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 2) throw new IllegalArgumentException(
-          s"sign_lsh_sig requires exactly 2 arguments, got ${exprs.length}")
-        SignLshSig(exprs.head, exprs(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("ivf_top_cells"),
-      new ExpressionInfo(classOf[IvfTopCells].getName, "ivf_top_cells"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 3) throw new IllegalArgumentException(
-          s"ivf_top_cells requires exactly 3 arguments, got ${exprs.length}")
-        IvfTopCells(exprs.head, exprs(1), exprs(2))
-      }))
+  /** One native function: its SQL name, implementing class and
+    * builder. */
+  private final case class Native(name: String, clazz: Class[_],
+      build: Seq[Expression] => Expression) {
+    val ident = FunctionIdentifier(name)
+    def info = new ExpressionInfo(clazz.getName, name)
+  }
+
+  /** A fixed-arity native: a wrong argument count is an analysis-time
+    * error, not an IndexOutOfBounds at planning. */
+  private def fixed(name: String, clazz: Class[_], arity: Int)(
+      build: Seq[Expression] => Expression): Native =
+    Native(name, clazz, exprs => {
+      if (exprs.length != arity) throw new IllegalArgumentException(
+        s"$name requires exactly $arity argument" +
+          s"${if (arity == 1) "" else "s"}, got ${exprs.length}")
+      build(exprs)
+    })
+
+  /** Every native function, read by [[inject]] and [[register]]. */
+  private val natives: Seq[Native] = Seq(
+    fixed("cosine_sim", classOf[CosineSim], 2)(e => CosineSim(e(0), e(1))),
+    fixed("dot_product", classOf[DotProduct], 2)(
+      e => DotProduct(e(0), e(1))),
+    fixed(h60Ident.funcName, classOf[Conv], 1)(h60Builder),
+    fixed("sign_lsh_sig", classOf[SignLshSig], 2)(
+      e => SignLshSig(e(0), e(1))),
+    fixed("ivf_top_cells", classOf[IvfTopCells], 3)(
+      e => IvfTopCells(e(0), e(1), e(2))),
     // Catalyst's runtime-filter bloom pair (used internally by
     // spark.sql.optimizer.runtime.bloomFilter; not exposed as SQL
     // functions upstream). Registering them gives the library an
@@ -108,42 +103,36 @@ object GraftExtensions {
     // small side's join key, broadcast the single sketch row, and drop
     // non-matching probe rows at the scan — before the shuffle the join
     // would otherwise pay for them (q_join_bloom).
-    ext.injectFunction((
-      FunctionIdentifier("bloom_agg"),
-      new ExpressionInfo(classOf[BloomFilterAggregate].getName, "bloom_agg"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(c) => new BloomFilterAggregate(c)
-        case Seq(c, n) => new BloomFilterAggregate(c, n)
-        case _ => throw new IllegalArgumentException(
-          s"bloom_agg requires 1 or 2 arguments, got ${exprs.length}")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_contains"),
-      new ExpressionInfo(
-        classOf[BloomFilterMightContain].getName, "bloom_contains"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 2) throw new IllegalArgumentException(
-          s"bloom_contains requires exactly 2 arguments, got ${exprs.length}")
-        BloomFilterMightContain(exprs.head, exprs(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("shingle_hash60"),
-      new ExpressionInfo(classOf[ShingleHash60].getName, "shingle_hash60"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 3) throw new IllegalArgumentException(
-          s"shingle_hash60 requires exactly 3 arguments, got ${exprs.length}")
-        ShingleHash60(exprs.head, exprs(1), exprs(2))
-      }))
+    Native("bloom_agg", classOf[BloomFilterAggregate], {
+      case Seq(c) => new BloomFilterAggregate(c)
+      case Seq(c, n) => new BloomFilterAggregate(c, n)
+      case exprs => throw new IllegalArgumentException(
+        s"bloom_agg requires 1 or 2 arguments, got ${exprs.length}")
+    }),
+    fixed("bloom_contains", classOf[BloomFilterMightContain], 2)(
+      e => BloomFilterMightContain(e(0), e(1))),
+    fixed("shingle_hash60", classOf[ShingleHash60], 3)(
+      e => ShingleHash60(e(0), e(1), e(2))),
     // Width-safe declarative argmax for the exact-NN family (round 12):
     // max by first long, ties by min second long, full 64-bit ids —
     // HashAggregate-eligible where max-of-struct would SortAggregate.
-    ext.injectFunction((
-      FunctionIdentifier("max_cos_min_id"),
-      new ExpressionInfo(classOf[MaxCosMinId].getName, "max_cos_min_id"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 2) throw new IllegalArgumentException(
-          s"max_cos_min_id requires exactly 2 arguments, got ${exprs.length}")
-        MaxCosMinId(exprs.head, exprs(1))
-      }))
+    // The builder returns the bare AggregateFunction; the analyzer
+    // wraps it in AggregateExpression (as for bloom_agg).
+    fixed("max_cos_min_id", classOf[MaxCosMinId], 2)(
+      e => MaxCosMinId(e(0), e(1))),
+    fixed("pq_encode", classOf[PqEncode], 4)(
+      e => PqEncode(e(0), e(1), e(2), e(3))),
+    fixed("pq_decode", classOf[PqDecode], 4)(
+      e => PqDecode(e(0), e(1), e(2), e(3))))
+
+  def inject(ext: SparkSessionExtensions): Unit =
+    natives.foreach(n => ext.injectFunction((n.ident, n.info, n.build)))
+
+  /** Idempotent per-session registration of every native, for a session
+    * built without the extension; the Column-API entries call it. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    natives.filterNot(n => registry.functionExists(n.ident))
+      .foreach(n => registry.registerFunction(n.ident, n.info, n.build))
   }
 }

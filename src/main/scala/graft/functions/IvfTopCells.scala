@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{call_function, lit}
@@ -100,25 +99,11 @@ case class IvfTopCells(first: Expression, second: Expression,
 }
 
 object IvfTopCells {
-  private val ident = FunctionIdentifier("ivf_top_cells")
-
-  /** Idempotent per-session registration, mirroring DotProduct.register. */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(ident)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[IvfTopCells].getName, "ivf_top_cells"),
-        (exprs: Seq[Expression]) => {
-          if (exprs.length != 3) throw new IllegalArgumentException(
-            s"ivf_top_cells requires exactly 3 arguments, got ${exprs.length}")
-          IvfTopCells(exprs.head, exprs(1), exprs(2))
-        })
-    }
-
-  /** Column-API entry: registers on first use for the given session. */
+  /** Column-API entry: registers the natives on first use for the
+    * given session. */
   def apply(spark: SparkSession, vec: Column, centroids: Column,
     k: Int): Column = {
-    register(spark)
+    GraftExtensions.register(spark)
     call_function("ivf_top_cells", vec, centroids, lit(k))
   }
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, CreateNamedStruct, EqualTo, Expression, ExpressionInfo, GreaterThan, If, IsNotNull, IsNull, LessThan, Literal, Or}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, CreateNamedStruct, EqualTo, Expression, GreaterThan, If, IsNotNull, IsNull, LessThan, Literal, Or}
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.functions.call_function
@@ -86,26 +85,10 @@ case class MaxCosMinId(left: Expression, right: Expression)
 }
 
 object MaxCosMinId {
-  private val ident = FunctionIdentifier("max_cos_min_id")
-
-  /** Idempotent per-session registration, mirroring DotProduct.register.
-    * The builder returns the bare AggregateFunction; the analyzer wraps
-    * it in AggregateExpression (same contract bloom_agg relies on). */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(ident)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[MaxCosMinId].getName, "max_cos_min_id"),
-        (exprs: Seq[Expression]) => {
-          if (exprs.length != 2) throw new IllegalArgumentException(
-            s"max_cos_min_id requires exactly 2 arguments, got ${exprs.length}")
-          MaxCosMinId(exprs.head, exprs(1))
-        })
-    }
-
-  /** Column-API entry: registers on first use for the given session. */
+  /** Column-API entry: registers the natives on first use for the
+    * given session. */
   def apply(spark: SparkSession, cos: Column, id: Column): Column = {
-    register(spark)
+    GraftExtensions.register(spark)
     call_function("max_cos_min_id", cos, id)
   }
 }

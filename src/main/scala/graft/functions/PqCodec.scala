@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Expression, QuaternaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.call_function
@@ -198,31 +197,17 @@ case class PqDecode(first: Expression, second: Expression,
 }
 
 object PqCodec {
-  private def register(spark: SparkSession, name: String, clazz: Class[_],
-    build: Seq[Expression] => Expression): Unit = {
-    val ident = FunctionIdentifier(name)
-    if (!spark.sessionState.functionRegistry.functionExists(ident)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        ident, new ExpressionInfo(clazz.getName, name),
-        (exprs: Seq[Expression]) => {
-          if (exprs.length != 4) throw new IllegalArgumentException(
-            s"$name requires exactly 4 arguments, got ${exprs.length}")
-          build(exprs)
-        })
-    }
-  }
-
+  /** Column-API entries: register the natives on first use for the
+    * given session. */
   def encode(spark: SparkSession, vec: Column, cell: Column,
     coarse: Column, books: Column): Column = {
-    register(spark, "pq_encode", classOf[PqEncode],
-      e => PqEncode(e.head, e(1), e(2), e(3)))
+    GraftExtensions.register(spark)
     call_function("pq_encode", vec, cell, coarse, books)
   }
 
   def decode(spark: SparkSession, codes: Column, cell: Column,
     coarse: Column, books: Column): Column = {
-    register(spark, "pq_decode", classOf[PqDecode],
-      e => PqDecode(e.head, e(1), e(2), e(3)))
+    GraftExtensions.register(spark)
     call_function("pq_decode", codes, cell, coarse, books)
   }
 }

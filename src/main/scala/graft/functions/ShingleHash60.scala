@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions.{call_function, lit}
@@ -114,25 +113,11 @@ case class ShingleHash60(first: Expression, second: Expression,
 }
 
 object ShingleHash60 {
-  private val ident = FunctionIdentifier("shingle_hash60")
-
-  /** Idempotent per-session registration, mirroring DotProduct.register. */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(ident)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[ShingleHash60].getName, "shingle_hash60"),
-        (exprs: Seq[Expression]) => {
-          if (exprs.length != 3) throw new IllegalArgumentException(
-            s"shingle_hash60 requires exactly 3 arguments, got ${exprs.length}")
-          ShingleHash60(exprs.head, exprs(1), exprs(2))
-        })
-    }
-
-  /** Column-API entry: registers on first use for the given session. */
+  /** Column-API entry: registers the natives on first use for the
+    * given session. */
   def apply(spark: SparkSession, text: Column, n: Int,
     distinct: Boolean): Column = {
-    register(spark)
+    GraftExtensions.register(spark)
     call_function("shingle_hash60", text, lit(n), lit(distinct))
   }
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
@@ -92,24 +91,10 @@ case class SignLshSig(left: Expression, right: Expression)
 }
 
 object SignLshSig {
-  private val ident = FunctionIdentifier("sign_lsh_sig")
-
-  /** Idempotent per-session registration, mirroring DotProduct.register. */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(ident)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[SignLshSig].getName, "sign_lsh_sig"),
-        (exprs: Seq[Expression]) => {
-          if (exprs.length != 2) throw new IllegalArgumentException(
-            s"sign_lsh_sig requires exactly 2 arguments, got ${exprs.length}")
-          SignLshSig(exprs.head, exprs(1))
-        })
-    }
-
-  /** Column-API entry: registers on first use for the given session. */
+  /** Column-API entry: registers the natives on first use for the
+    * given session. */
   def apply(spark: SparkSession, vec: Column, planes: Column): Column = {
-    register(spark)
+    GraftExtensions.register(spark)
     call_function("sign_lsh_sig", vec, planes)
   }
 }

@@ -5,7 +5,6 @@ import graft.functions.GraftExtensions.h60
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.storage.StorageLevel
 
 /** Approximate dedup + ANN family (north star): MinHash+LSH banding,
   * SimHash with chunk banding, and an IVF-bucketed ANN search — the scale
@@ -88,24 +87,32 @@ object AnnOps {
     * single shingle is — and the shingle explode only feeds per-class
     * aggregations, never a shingle-keyed join.
     *
-    * Returns (canonical verified pairs, mem, arr — the persisted
-    * (ckey, doc_id, cnt, sh) class sketch frame, internal handles,
-    * fanOut). fanOut mirrors classFanBack's short-circuit: arr's
-    * cache-filling count observes max(cnt), and a replica-free corpus
-    * (every class a singleton) provably makes the fan-back joins
-    * identity/empty, so consumers skip them. Callers release mem
-    * and arr (and the returned handles if they bypass
-    * dedupClusterLabelsFrom) via materializeAndFree. */
-  private def minhashClassAnd(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, DataFrame, Seq[DataFrame], Boolean) = {
-    val (mem, canon) = TextOps.classMembership(s, d)
-    val (arr, maxCnt) = persistEagerWithLong(
+    * Takes `canon` from TextOps.classMembership and returns (canonical
+    * verified pairs, arr — the persisted (ckey, doc_id, cnt, sh) class
+    * sketch frame, fanOut). fanOut mirrors classFanBack's
+    * short-circuit: arr's cache-filling count observes max(cnt), and a
+    * replica-free corpus (every class a singleton) provably makes the
+    * fan-back joins identity/empty, so consumers skip them. */
+  private def minhashClassOf(s: SparkSession, canon: DataFrame)
+      : (DataFrame, DataFrame, Boolean) = {
+    val (arr, maxCnt) = persistEager(
       shingleArraysOf(s, canon
         .select(col("ckey"), col("doc_id"), col("cnt"), col("text"))),
       max(col("cnt")))
-    val (pairs, handles) =
-      minhashPairsAndOf(arr.select(col("doc_id"), col("sh")))
-    (pairs, mem, arr, handles, maxCnt > 1)
+    (minhashPairsOf(arr.select(col("doc_id"), col("sh"))), arr, maxCnt > 1)
+  }
+
+  /** [[minhashClassOf]] for the per-doc consumers (q_dedup_cluster,
+    * q_curation_keep), which read the membership frame again after the
+    * class sketch's build: `mem` is persisted before the sketch fills,
+    * so both reads share one class assignment. Returns (mem, pairs,
+    * arr, fanOut). */
+  private def minhashClassMem(s: SparkSession, d: String)
+      : (DataFrame, DataFrame, DataFrame, Boolean) = {
+    val (mem, canon) = TextOps.classMembership(s, d)
+    val cached = persistLazy(mem)
+    val (pairs, arr, fanOut) = minhashClassOf(s, canon)
+    (cached, pairs, arr, fanOut)
   }
 
   /** (doc_id, band, bucket) LSH banding of a (doc_id, sh) frame: 48
@@ -136,7 +143,7 @@ object AnnOps {
     * …) — THE shingle-array definition of the dedup family (round-15
     * review: two copies of this literal would let the report's metrics
     * drift from the standalone operators if the shingle parameters ever
-    * changed in one place), shared by [[minhashClassAnd]] and
+    * changed in one place), shared by [[minhashClassOf]] and
     * q_dedup_report's cache. Since round 18 every minhash consumer
     * sketches a CANONICAL doc set (one row per normalized-text digest
     * class). Passthrough columns (e.g. the class size `cnt`) survive;
@@ -152,10 +159,8 @@ object AnnOps {
     * q_dedup_report uses to pay the corpus's ShingleHash60 pass ONCE
     * across the jaccard/simhash/minhash-cluster branches (round-14
     * verdict #5, the d96e96e sharing pattern), and since round 18 the
-    * shared kernel of [[minhashClassAnd]]. Returned handles cover only
-    * the internal banded cache; the caller owns `docsSh`. */
-  private[queries] def minhashPairsAndOf(
-    docsSh: DataFrame): (DataFrame, Seq[DataFrame]) = {
+    * shared kernel of [[minhashClassOf]]. */
+  private[queries] def minhashPairsOf(docsSh: DataFrame): DataFrame = {
     val docs = docsSh
     // Persist the banded SKETCH (doc_id, band, bucket — constant bytes
     // per doc) before the self-join: Spark does not reuse the exchange
@@ -183,17 +188,18 @@ object AnnOps {
           / (size(col("sh1")) + size(col("sh2")) - col("inter")), 6)
           .as("jaccard"))
       .filter(col("jaccard") >= 0.8)
-    (pairs, Seq(banded))
+    pairs
   }
 
   // ------------------------------------------------------------- queries
 
   private val pairQ: Map[String, Q] = Map(
     // Raw near-dup pair listing, detector run once per digest class
-    // (round 18 — see minhashClassAnd for the fan-back algebra; oracle
+    // (round 18 — see minhashClassOf for the fan-back algebra; oracle
     // unchanged, raw exact-Jaccard semantics).
     "q_dedup_minhash" -> ((s, d) => {
-      val (pairs, mem, arr, handles, fanOut) = minhashClassAnd(s, d)
+      val (mem, canon) = TextOps.classMembership(s, d)
+      val (pairs, arr, fanOut) = minhashClassOf(s, canon)
       val out = if (!fanOut) pairs else {
         val cross = pairs
           .join(mem.select(col("cdoc").as("d1"), col("doc_id").as("x")),
@@ -213,8 +219,7 @@ object AnnOps {
             lit(1.0).as("jaccard"))
         cross.unionByName(within)
       }
-      materializeAndFree(out, mem +: arr +: handles: _*)
-        .orderBy("d1", "d2")
+      out.orderBy("d1", "d2")
     }),
 
     // Incremental near-dup dedup against a PERSISTED corpus index (round
@@ -285,7 +290,7 @@ object AnnOps {
             / (size(col("sh1")) + size(col("sh2")) - col("inter")), 6)
             .as("jaccard"))
         .filter(col("jaccard") >= 0.8)
-      materializeAndFree(pairs, newSh, newBanded).orderBy("d1", "d2")
+      pairs.orderBy("d1", "d2")
     }),
 
     // Duplicate-cluster assignment — the step a real curation pipeline
@@ -345,8 +350,8 @@ object AnnOps {
       // lang/quality stay stateless projections on the scan, and the
       // near-dup side stops at the per-doc label fan-back (no size
       // window).
-      val (pairs, mem, arr, handles, fanOut) = minhashClassAnd(s, d)
-      val labels = dedupClusterLabelsFrom(pairs, handles)
+      val (mem, pairs, arr, fanOut) = minhashClassMem(s, d)
+      val labels = dedupClusterLabelsFrom(pairs)
       val near = clusterPerDoc(mem, arr, labels, fanOut)
         .select(col("doc_id"),
           (col("doc_id") === col("cluster_id")).as("near_canonical"))
@@ -362,7 +367,7 @@ object AnnOps {
           col("exact_canonical"), col("near_canonical"),
           (col("pred_lang") === "en" && col("quality") >= 0.15 &&
             col("exact_canonical") && col("near_canonical")).as("keep"))
-      materializeAndFree(out, mem, arr).orderBy("doc_id")
+      out.orderBy("doc_id")
     }),
   )
 
@@ -408,14 +413,14 @@ object AnnOps {
               .otherwise(col("doc_id"))).as("cluster_id"))
 
   private def dedupCluster(s: SparkSession, d: String): DataFrame = {
-    val (pairs, mem, arr, handles, fanOut) = minhashClassAnd(s, d)
-    val labels = dedupClusterLabelsFrom(pairs, handles)
+    val (mem, pairs, arr, fanOut) = minhashClassMem(s, d)
+    val labels = dedupClusterLabelsFrom(pairs)
     val csz = Window.partitionBy("cluster_id")
-    val out = clusterPerDoc(mem, arr, labels, fanOut)
+    clusterPerDoc(mem, arr, labels, fanOut)
       .withColumn("cluster_size", count(lit(1)).over(csz))
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
         (col("doc_id") === col("cluster_id")).as("is_canonical"))
-    materializeAndFree(out, mem, arr).orderBy("doc_id")
+      .orderBy("doc_id")
   }
 
   /** The SUBGRAPH label fixpoint of [[dedupClusterFrom]] without the
@@ -426,24 +431,17 @@ object AnnOps {
     * — every subgraph component has >= 2 members (each node carries an
     * edge) and every singleton is its own canonical cluster of size 1 —
     * so the report skips the full-corpus left join + cluster_size window
-    * the per-doc operator genuinely needs. Releases `sketchHandles` (and
-    * the internal pair cache) once the edge list is checkpointed. */
-  private[queries] def dedupClusterLabelsFrom(rawPairs: DataFrame,
-      sketchHandles: Seq[DataFrame]): DataFrame = {
+    * the per-doc operator genuinely needs. */
+  private[queries] def dedupClusterLabelsFrom(rawPairs: DataFrame)
+      : DataFrame = {
     // Materialize the pair pipeline ONCE, then truncate its whole DAG
     // out of the loop's plans (the union references pairs twice, and
     // every round's plan would re-embed it otherwise).
     // eager fill: one pair pass for both union branches
     val pairs = persistEager(rawPairs.select("d1", "d2"))
-    val edges = pairs.select(col("d1").as("src"), col("d2").as("dst"))
-      .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
-      .localCheckpoint(true)
-    // edges are self-contained now: release the pair frame AND the
-    // sketch caches minhashPairs persisted internally, instead of
-    // letting them sit dead through the whole propagation loop.
-    pairs.unpersist()
-    sketchHandles.foreach(_.unpersist())
-    propagateMinLabels(edges)._1
+    propagateMinLabels(checkpointed(
+      pairs.select(col("d1").as("src"), col("d2").as("dst"))
+        .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))))._1
   }
 
   /** Min-label propagation with pointer doubling over a symmetric edge
@@ -489,10 +487,10 @@ object AnnOps {
     * label sum — the per-round convergence witness — WITHOUT a second
     * job (round 16; the sum rides the checkpoint's own action as a
     * Dataset.observe metric — machinery now shared via
-    * queries.checkpointedWithSum, round 17). coalesce: an edgeless
+    * queries.checkpointed, round 17). coalesce: an edgeless
     * corpus gives an EMPTY frame and a null sum — 0, not an NPE. */
   private def checkpointedWithLabelSum(df: DataFrame): (DataFrame, Long) =
-    checkpointedWithSum(df, coalesce(sum(col("label")), lit(0L)))
+    checkpointed(df, coalesce(sum(col("label")), lit(0L)))
 
   private[graft] def propagateMinLabels(edges: DataFrame)
       : (DataFrame, Int) = {
@@ -563,9 +561,7 @@ object AnnOps {
   /** SimHash near-dup pairs from an exploded (doc_id, h) shingle-hash
     * frame — extracted (round 15) so q_dedup_report can feed it from its
     * one shared shingle cache instead of paying a second ShingleHash60
-    * corpus pass. Returns the materialized unordered pair list
-    * (d1, d2, hamming); the internal chunked-signature cache is released
-    * before returning. */
+    * corpus pass. Returns the unordered pair list (d1, d2, hamming). */
   private[queries] def simhashPairsOf(shEx: DataFrame): DataFrame = {
     val mask48 = (1L << 48) - 1
     // b is a Scala literal per agg column, so plain integer shifts work
@@ -589,7 +585,7 @@ object AnnOps {
         posexplode(array((0 until 4).map(c =>
           shiftright(col("bits"), c * 12).bitwiseAND(0xFFFL)): _*)))
       .withColumnRenamed("col", "v").withColumnRenamed("pos", "c"))
-    val pairs = chunked.as("a").join(chunked.as("b"),
+    chunked.as("a").join(chunked.as("b"),
         col("a.c") === col("b.c") && col("a.v") === col("b.v") &&
         col("a.doc_id") < col("b.doc_id") &&
         bit_count(col("a.bits").bitwiseXOR(col("b.bits"))) <= 3)
@@ -597,9 +593,6 @@ object AnnOps {
         bit_count(col("a.bits").bitwiseXOR(col("b.bits")))
           .cast("long").as("hamming"))
       .dropDuplicates("d1", "d2")
-    // Tiny pair list: materialize it so the chunked sketch cache can be
-    // released here rather than leak into the session (round-4 advice).
-    materializeAndFree(pairs, chunked)
   }
 
   private val sketchQ: Map[String, Q] = Map(
@@ -718,9 +711,7 @@ object AnnOps {
       val verdicts = sig.select("vec_id").join(best, Seq("vec_id"), "left")
         .select(col("vec_id"), col("nn_id"), col("hamming"), col("cos_sim"),
           coalesce(col("cos_sim") >= 0.4, lit(false)).as("is_near_dup"))
-      // One ~40-byte row per vector: materialize so the (embedding-sized)
-      // sig cache can be released here rather than leak into the session.
-      materializeAndFree(verdicts, sig).orderBy("vec_id")
+      verdicts.orderBy("vec_id")
     }),
   )
 
@@ -944,24 +935,16 @@ object AnnOps {
       }
     }
     (0 until iters).foreach { _ =>
-      // Cache the encoded frame BEFORE the per-dim explode: pq_encode is
-      // CodegenFallback, and the interpreted projection path has no
-      // subexpression elimination, so without the barrier
-      // CollapseProject inlines the m x ks x subDim encode loop into the
-      // post-explode projection — re-running it once per DIM (64x per
-      // row; measured 8.5 s/iter vs ~1 s with the barrier at sf0.1).
-      // Round 18 (r17 verdict #6): the persist is LAZY — the cache
-      // boundary alone is the optimizer barrier (the InMemoryRelation's
-      // child plan is planned separately, so the collapse cannot cross
-      // it), and the sums collect below is this frame's ONLY consumer,
-      // so its execution fills the cache — encode still runs exactly
-      // once per row per iteration, one job instead of two. The
-      // per-side race persistEager guards against needs a second
-      // concurrent consumer, which does not exist here.
-      val enc = persistLazy(emb
+      // No barrier before the per-dim explode: pq_encode is
+      // CodegenFallback, but the Generate between the two projections
+      // keeps CollapseProject from inlining the encode loop per DIM.
+      // Measured without the round-18 lazy cache (4 cpus, 3 passes):
+      // q_ann_ivfpq 1106 -> 1255 ms at sf0.1 and 5103 -> 4913 ms at
+      // sf1, inside the with-cache pass spread (534 / 614 ms).
+      val enc = emb
         .select(col("cell"), col("embedding"),
           graft.functions.PqCodec.encode(s, col("embedding"), col("cell"),
-            coarseLit, typedLit[Seq[Seq[Seq[Double]]]](books)).as("codes")))
+            coarseLit, typedLit[Seq[Seq[Seq[Double]]]](books)).as("codes"))
       val sums = enc
         .select(col("cell"), col("codes"), posexplode(col("embedding")))
         .select(
@@ -976,7 +959,6 @@ object AnnOps {
         .groupBy("sub", "code", "subpos")
         .agg(sum("r").as("sr"), count(lit(1)).as("n"))
         .collect()
-      enc.unpersist()
       val byKey = sums.map(r => ((r.getInt(0), r.getInt(1),
         r.getInt(2)), (BigDecimal(r.getDecimal(3)), r.getLong(4)))).toMap
       books = books.indices.map { sub =>
@@ -1016,18 +998,15 @@ object AnnOps {
     // ADC error to the DIRECTION term: cos(q,x) ≈ dot(q, x̂)/(|q|·|x|)
     // with the true norm, instead of also mis-estimating |x| from the
     // reconstruction (the FAISS norm-augmented IP/cosine recipe).
-    // Persisted like minhash's banded sketch: the cell join multiplies
-    // index rows per matching probe, and pq_encode (CodegenFallback, no
-    // interpreted-path CSE) would re-run per MATCH if the projection is
-    // inlined above the join. O(corpus) rows of codes+norm — constant
-    // bytes/vec, MEMORY_AND_DISK spills rather than OOMs.
+    // The encode projection sits below the cell join, so it runs once
+    // per vector; the index is read once and is not cached (a cache
+    // measured no faster, see trainPqBooks).
     val index = assignCells(s, emb, "embedding", 1, cents)
       .select(col("vec_id"), col("cell"),
         graft.functions.PqCodec.encode(s, col("embedding"), col("cell"),
           coarseLit, booksLit).as("codes"),
         sqrt(graft.functions.DotProduct(s, col("embedding"),
           col("embedding"))).as("vec_norm"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val probes = assignCells(s,
       emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("probe_id"), col("embedding").as("probe")),
@@ -1046,7 +1025,7 @@ object AnnOps {
     // exact rerank: ONLY the shortlist rows rejoin the raw vectors
     val wExact = Window.partitionBy("probe_id")
       .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    val out = short
+    short
       .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
       .select(col("probe_id"), col("vec_id"), col("cell"),
         round(graft.functions.CosineSim(s, col("embedding"), col("probe")), 6)
@@ -1055,9 +1034,6 @@ object AnnOps {
       .filter(col("rn") <= 5)
       .select("probe_id", "vec_id", "cell", "cos_sim")
       .orderBy(col("probe_id").asc, col("cos_sim").desc, col("vec_id").asc)
-    // tiny end product (probes x 5 rows): materialize it and release the
-    // index cache instead of leaking it into the session
-    materializeAndFree(out, index)
   }
 
   // ------------------------------ persisted IVF-PQ index (round 8)
@@ -1348,8 +1324,7 @@ object AnnOps {
     // re-scan, but HERE each would re-run the corpus-wide array-keyed
     // window — the first dump of this plan showed four full
     // Exchange+Sort+Window pyramids. With the cache the window executes
-    // once; materializeAndFree releases it behind the checkpointed
-    // verdict rows.
+    // once.
     "q_semdedup_pipeline" -> ((s, d) => {
       val w = Window.partitionBy("embedding")
       val tagged = persistEager(Tables(s, d, "embeddings")
@@ -1360,7 +1335,7 @@ object AnnOps {
       val canon = tagged.filter(col("rn") === 1)
         .select("vec_id", "embedding")
       val sem = semVerdictsOf(s, semAssignedOf(s, canon))
-      val out = tagged
+      tagged
         .select(col("vec_id"), col("n_copies"),
           (col("rn") === 1).as("exact_canonical"), col("canonical_id"))
         .join(sem, Seq("vec_id"), "left")
@@ -1371,7 +1346,6 @@ object AnnOps {
           (col("exact_canonical")
             && !coalesce(col("is_semdup"), lit(false))).as("keep"))
         .orderBy("vec_id")
-      materializeAndFree(out, tagged)
     }),
 
     // Embedding-space label classification (round 7) — the

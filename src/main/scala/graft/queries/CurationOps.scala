@@ -1012,12 +1012,12 @@ object CurationOps {
       val novel = dropSh.join(stored, Seq("s"), "left_anti")
         .groupBy("s").agg(min("doc_id").as("doc_id"))
         .groupBy("doc_id").agg(count(lit(1)).as("nn"))
-      val out = perDoc.join(novel, Seq("doc_id"), "left")
+      perDoc.join(novel, Seq("doc_id"), "left")
         .select(col("doc_id"), col("n_shingles"),
           coalesce(col("nn"), lit(0L)).as("n_novel"),
           round(coalesce(col("nn"), lit(0L)).cast("double")
             / col("n_shingles"), 6).as("novelty"))
-      materializeAndFree(out, dropSh).orderBy("doc_id")
+        .orderBy("doc_id")
     }),
 
     // ── Token entropy per source ──────────────────────────────────────

@@ -222,8 +222,7 @@ object GraphOps {
         pairs.select(col("p1").as("src"), col("p2").as("dst"))
           .unionByName(pairs.select(col("p2").as("src"),
             col("p1").as("dst"))))
-      val out = pageRank(inc.select(col("pk")).distinct(), edges)
-      materializeAndFree(out, edges)
+      pageRank(inc.select(col("pk")).distinct(), edges)
     }),
 
     "q_triangle_count" -> (graphTriangles _),
@@ -250,12 +249,11 @@ object GraphOps {
     // orders) per refresh.
     "q_affinity_incremental" -> ((s, d) => {
       val idx = pairIndex(s, d)
-      val out = idx.pairs.crossJoin(broadcast(idx.tot))
+      idx.pairs.crossJoin(broadcast(idx.tot))
         .select(col("p1"), col("p2"), col("co"),
           round(col("co").cast("double") / col("n_orders"), 6)
             .as("support"))
         .orderBy("p1", "p2")
-      materializeAndFree(out, idx.drop)
     }),
 
     // ── Connected components (round 11) ──────────────────────────────
@@ -273,13 +271,12 @@ object GraphOps {
     "q_graph_components" -> ((s, d) => {
       val (inc, pairs0) = pairCounts(s, d)
       val pairs = persistEager(pairs0.select("p1", "p2"))
-      val edges = pairs.select(col("p1").as("src"), col("p2").as("dst"))
-        .union(pairs.select(col("p2").as("src"), col("p1").as("dst")))
-        .localCheckpoint(true)
-      val (labels, _) = AnnOps.propagateMinLabels(edges)
+      val (labels, _) = AnnOps.propagateMinLabels(checkpointed(
+        pairs.select(col("p1").as("src"), col("p2").as("dst"))
+          .union(pairs.select(col("p2").as("src"), col("p1").as("dst")))))
       val csz = org.apache.spark.sql.expressions.Window
         .partitionBy("component_id")
-      val out = inc.select(col("pk")).distinct()
+      inc.select(col("pk")).distinct()
         .join(labels.withColumnRenamed("doc_id", "pk"), Seq("pk"), "left")
         .select(col("pk"),
           coalesce(col("label"), col("pk")).as("component_id"))
@@ -287,7 +284,6 @@ object GraphOps {
         .select(col("pk"), col("component_id"), col("component_size"),
           (col("pk") === col("component_id")).as("is_canonical"))
         .orderBy("pk")
-      materializeAndFree(out, pairs)
     }),
 
     // ── 2-hop link prediction (round 11) ─────────────────────────────
@@ -376,12 +372,11 @@ object GraphOps {
           col("adamic_adar")))
       val w = org.apache.spark.sql.expressions.Window.partitionBy("part")
         .orderBy(col("cn").desc, col("cand").asc)
-      val out = dir.withColumn("rk", row_number().over(w))
+      dir.withColumn("rk", row_number().over(w))
         .filter(col("rk") <= 3)
         .select(col("part"), col("rk").cast("long").as("rk"), col("cand"),
           col("cn"), col("jaccard"), col("adamic_adar"))
         .orderBy("part", "rk")
-      materializeAndFree(out, pairs, scored)
     }),
 
     // ── Degree distribution histogram (round 11) ─────────────────────
@@ -402,7 +397,7 @@ object GraphOps {
         .unionByName(pairs.select(col("p2").as("pk")))
         .groupBy("pk").agg(count(lit(1)).as("degree"))
       val tot = deg.agg(count(lit(1)).as("n_nodes_total"))
-      val out = deg
+      deg
         .select((length(bin(col("degree"))) - 1).cast("long").as("bucket"),
           col("degree"))
         .groupBy("bucket")
@@ -417,7 +412,6 @@ object GraphOps {
           round(col("n_nodes").cast("double") / col("n_nodes_total"), 6)
             .as("share"))
         .orderBy("bucket")
-      materializeAndFree(out, pairs)
     }),
 
     // ── Whole-graph summary statistics (round 11) ────────────────────
@@ -447,7 +441,7 @@ object GraphOps {
         sum("degree").as("deg_sum"), max("degree").as("max_degree"),
         sum(col("degree") * (col("degree") - 1)).as("wedges2"))
       val nParts = inc.agg(countDistinct(col("pk")).as("n_parts"))
-      val out = degStats.crossJoin(broadcast(triCount))
+      degStats.crossJoin(broadcast(triCount))
         .crossJoin(broadcast(nParts))
         .select(col("n_nodes"),
           (col("n_parts") - col("n_nodes")).as("n_dangling"),
@@ -457,7 +451,6 @@ object GraphOps {
           col("max_degree"), col("n_triangles"),
           round(lit(6.0) * col("n_triangles") / col("wedges2"), 6)
             .as("global_clustering"))
-      materializeAndFree(out, pairs, ori)
     }),
 
     // ── Item-to-item recommendations (round 10) ──────────────────────
@@ -497,7 +490,7 @@ object GraphOps {
       val cnt = storedOr(s, s"${idx.base}/cnt")(partCounts(idx.kept))
         .unionByName(partCounts(idx.drop))
         .groupBy("pk").agg(sum("c").as("c"))
-      recommendFrom(idx.pairs, cnt, idx.tot, idx.drop)
+      recommendFrom(idx.pairs, cnt, idx.tot)
     }),
   )
 
@@ -509,11 +502,9 @@ object GraphOps {
     * semantics. The sized pair frame feeds BOTH direction branches, so
     * it persists once (round 12 — the same double-execution shape the
     * r11 advice flagged on q_link_predict's scored frame; before this,
-    * the whole pair pipeline ran twice per serve). `extraHandles` lets
-    * callers hand their own upstream caches to the one
-    * materializeAndFree. */
+    * the whole pair pipeline ran twice per serve). */
   private def recommendFrom(pairs: DataFrame, cnt: DataFrame,
-      tot: DataFrame, extraHandles: DataFrame*): DataFrame = {
+      tot: DataFrame): DataFrame = {
     val sized = persistEager(pairs
       .join(cnt.select(col("pk").as("p1"), col("c").as("c1")), "p1")
       .join(cnt.select(col("pk").as("p2"), col("c").as("c2")), "p2")
@@ -531,12 +522,11 @@ object GraphOps {
         round(col("co").cast("double") / col("cp"), 6))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("part")
       .orderBy(col("lift").desc, col("co").desc, col("rec").asc)
-    val out = dir.withColumn("rk", row_number().over(w))
+    dir.withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 3)
       .select(col("part"), col("rk").cast("long").as("rk"), col("rec"),
         col("co"), col("lift"), col("confidence"))
       .orderBy("part", "rk")
-    materializeAndFree(out, (sized +: extraHandles): _*)
   }
 
   /** The PageRank kernel over an explicit node set: `nodes` is one
@@ -553,10 +543,9 @@ object GraphOps {
     val edeg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     // (pk, deg) for every node, deg 0 for dangling — checkpointed once,
     // reused as the spine of all 8 rounds and the final projection
-    val degNodes = nodes
+    val degNodes = checkpointed(nodes
       .join(edeg.withColumnRenamed("src", "pk"), Seq("pk"), "left")
-      .select(col("pk"), coalesce(col("deg"), lit(0L)).as("deg"))
-      .localCheckpoint(true)
+      .select(col("pk"), coalesce(col("deg"), lit(0L)).as("deg")))
     // Round-17 re-plan (guide §2.4/§1.2): the old recurrence carried
     // n and the dangling mass as 1-row broadcast-joined frames, so
     // every round paid two extra jobs (the dang agg + the nDf agg
@@ -565,7 +554,7 @@ object GraphOps {
     // O(1)-collect class): n is constant across rounds — ONE count on
     // the checkpointed spine — and each round's dangling mass now
     // rides the round's own checkpoint action as a Dataset.observe
-    // metric (checkpointedWithSum — the CC kernel's convergence-sum
+    // metric (checkpointed — the CC kernel's convergence-sum
     // machinery). One job per round instead of three; the integer
     // pico-unit recurrence is unchanged term for term (Scala Long
     // division == SQL div on these nonnegative values), so the rank
@@ -573,7 +562,7 @@ object GraphOps {
     val n = degNodes.count()
     val dangSum = coalesce(sum(when(col("deg") === 0, col("rp"))),
       lit(0L))
-    var (r, dang) = checkpointedWithSum(
+    var (r, dang) = checkpointed(
       degNodes.select(col("pk"), col("deg"),
         lit(1000000000000L / n).as("rp")), dangSum)
     for (_ <- 1 to 8) {
@@ -591,7 +580,7 @@ object GraphOps {
           // Scala and SQL
           expr(s"${150000000000L / n}L + (85 * (coalesce(m, " +
             s"cast(0 as bigint)) + ${dang / n}L)) div 100").as("rp"))
-      val (cp, ds) = checkpointedWithSum(next, dangSum)
+      val (cp, ds) = checkpointed(next, dangSum)
       r = cp
       dang = ds
     }
@@ -716,7 +705,7 @@ object GraphOps {
     val perNode = tri.select(explode(array(col("a"), col("b"), col("c")))
         .as("pk"))
       .groupBy("pk").agg(count(lit(1)).as("n_triangles"))
-    val out = deg.join(perNode, Seq("pk"), "left")
+    deg.join(perNode, Seq("pk"), "left")
       .select(col("pk"), col("degree"),
         coalesce(col("n_triangles"), lit(0L)).as("n_triangles"),
         when(col("degree") >= 2,
@@ -724,7 +713,6 @@ object GraphOps {
             / (col("degree").cast("double") * (col("degree") - 1)), 6))
           .as("clustering"))
       .orderBy("pk")
-    materializeAndFree(out, pairs, ori)
   }
 
   // AS MATERIALIZED: each iteration reads its predecessor TWICE (the

@@ -400,13 +400,10 @@ object Joins {
       // hub-only star graph of entityHubStarEdges (size a function of
       // the distinct-NAME structure, independent of per-entity row
       // duplication), and per-key labels fan back through one
-      // fold-keyed join per side. entityHubStarEdges checkpoints the
-      // edges and returns the persisted hubIds frame the fan-back
-      // reads; materializeAndFree releases it with the final frame.
-      val (keyLab, hubIds) =
-        entityKeyLabels(dirtyRows, masterRows, verified)
+      // fold-keyed join per side.
+      val keyLab = entityKeyLabels(dirtyRows, masterRows, verified)
       val csz = Window.partitionBy("entity_id")
-      val out = Tables(s, d, "customer").select(col("c_custkey"))
+      Tables(s, d, "customer").select(col("c_custkey"))
         .join(keyLab.withColumnRenamed("key", "c_custkey"),
           Seq("c_custkey"), "left")
         .select(col("c_custkey"),
@@ -414,7 +411,7 @@ object Joins {
         .withColumn("entity_size", count(lit(1)).over(csz))
         .select(col("c_custkey"), col("entity_id"), col("entity_size"),
           (col("c_custkey") === col("entity_id")).as("is_canonical"))
-      materializeAndFree(out, hubIds).orderBy("c_custkey")
+        .orderBy("c_custkey")
     }),
   )
 
@@ -468,15 +465,13 @@ object Joins {
     * closure on TPC-H and on a planted replica-heavy fixture.
     *
     * Returns (edges, hubIds): edges (src, dst) both directions,
-    * self-loops dropped, eagerly checkpointed with the internal caches
-    * released (the closure loop iterates over a LogicalRDD leaf);
-    * hubIds (blk, d_fold, m_fold, hub_id) persisted lazily — its cache
-    * fills during the edges checkpoint and the CALLER releases it
-    * after the fan-back. */
+    * self-loops dropped, eagerly checkpointed (the closure loop
+    * iterates over a LogicalRDD leaf); hubIds (blk, d_fold, m_fold,
+    * hub_id) persisted lazily — its cache fills during the edges
+    * checkpoint and serves the fan-back. */
   /** Per-key entity labels via the hub-only star closure: (key, label)
     * for every key attached to >= 1 hub (keys matching nothing are
-    * absent — callers coalesce to the key itself), plus the persisted
-    * hubIds handle the caller releases after its final materialization.
+    * absent — callers coalesce to the key itself).
     * Label algebra: every hub carrying a fold is star-connected through
     * any key attached to that fold, so the min-hub representative's
     * label is the fold's label; an isolated hub (its keys attach to
@@ -488,7 +483,7 @@ object Joins {
       dirtyRows: org.apache.spark.sql.DataFrame,
       masterRows: org.apache.spark.sql.DataFrame,
       verified: org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+      : org.apache.spark.sql.DataFrame = {
     val (edges, hubIds) =
       entityHubStarEdges(dirtyRows, masterRows, verified)
     val (labels, _) = AnnOps.propagateMinLabels(edges)
@@ -498,7 +493,7 @@ object Joins {
       .join(labels.withColumnRenamed("doc_id", "h"), Seq("h"), "left")
       .select(col("blk_nat"), col("blk_seg"), col("fold"),
         coalesce(col("label"), col("h")).as("label"))
-    val keyLab = dirtyRows
+    dirtyRows
       .select(col("blk_nat"), col("blk_seg"),
         col("d_fold").as("fold"), col("import_id").as("key"))
       .join(foldLab("d_fold"), Seq("blk_nat", "blk_seg", "fold"))
@@ -507,7 +502,6 @@ object Joins {
           col("m_fold").as("fold"), col("c_custkey").as("key"))
         .join(foldLab("m_fold"), Seq("blk_nat", "blk_seg", "fold")))
       .groupBy("key").agg(min(col("label")).as("label"))
-    (keyLab, hubIds)
   }
 
   private[graft] def entityHubStarEdges(
@@ -545,7 +539,7 @@ object Joins {
         struct(col("a").as("src"), col("b").as("dst")),
         struct(col("b").as("src"), col("a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    (materializeAndFree(edges, hubs, att), hubIds)
+    (checkpointed(edges), hubIds)
   }
 
   /** The three shared frames of the linkage machinery:

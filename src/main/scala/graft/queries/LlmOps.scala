@@ -115,7 +115,7 @@ object LlmOps {
       // from the standalone operators on top. Composition still cannot
       // drift: the branches run the SAME extracted definitions the
       // standalone operators delegate to (shingleArraysOf /
-      // shinglePairSizedFromArrays / simhashPairsOf / minhashPairsAndOf
+      // shinglePairSizedFromArrays / simhashPairsOf / minhashPairsOf
       // / dedupClusterLabelsFrom), only over the canonical doc set.
       //
       // Scale shape: ONE corpus scan (the digest groupBy — exact
@@ -144,7 +144,7 @@ object LlmOps {
           "d1")
         .join(cnts.select(col("doc_id").as("d2"), col("cnt").as("cnt2")),
           "d2")
-      val (sized, _) = TextOps.shinglePairSizedFromArrays(s,
+      val sized = TextOps.shinglePairSizedFromArrays(s,
         arr.select(col("doc_id"), col("sh")))
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
@@ -163,12 +163,10 @@ object LlmOps {
           arr.select(col("doc_id"), explode(col("sh")).as("h"))))
         .agg(coalesce(sum(col("cnt1") * col("cnt2")), lit(0L)))
         .head().getLong(0))
-      // minhash pairs ride the same array cache; the labels fixpoint
-      // releases the banded cache once edges are checkpointed
+      // minhash pairs ride the same array cache
       val labelsF = Future {
-        val (mhPairs, mhHandles) = AnnOps.minhashPairsAndOf(
-          arr.select(col("doc_id"), col("sh")))
-        val labels = AnnOps.dedupClusterLabelsFrom(mhPairs, mhHandles)
+        val labels = AnnOps.dedupClusterLabelsFrom(AnnOps.minhashPairsOf(
+            arr.select(col("doc_id"), col("sh"))))
           .join(cnts, "doc_id")
         val g = labels.agg(countDistinct(col("label")),
           coalesce(sum(col("cnt")), lit(0L))).head()
@@ -192,7 +190,6 @@ object LlmOps {
       val (graphClusters, graphRaw, soloClusters, soloDropped) =
         await(labelsF)
       val basic = await(basicF)
-      arr.unpersist()
       val nDocs = basic.getLong(0)
       val withinDirected = basic.getLong(2)
       val withinPairs = withinDirected / 2
@@ -237,8 +234,10 @@ object LlmOps {
       // frame (exact_canonical = doc_id == cdoc, n_copies = cnt — the
       // same rows the rn/count window produced). Detector stages and
       // the keep rule are unchanged.
-      val (mem, canon) = TextOps.classMembership(s, d)
-      val (sized, sh) = TextOps.shinglePairSizedOf(s,
+      val (mem0, canon) = TextOps.classMembership(s, d)
+      // read by the shingle cache's build and by the per-doc verdict
+      val mem = graft.queries.persistLazy(mem0)
+      val sized = TextOps.shinglePairSizedOf(s,
         canon.select(col("doc_id"), col("text")))
       val nd = sized.select(col("d1"), col("d2"),
           round(col("inter").cast("double")
@@ -249,7 +248,7 @@ object LlmOps {
         .groupBy("doc_id").agg(count(lit(1)).as("nd_partners"))
       val droppedNd = nd.select(col("d2").as("doc_id")).distinct()
         .withColumn("nd_dropped", lit(true))
-      val out = mem
+      mem
         .select(col("doc_id"), col("cnt").as("n_copies"),
           (col("doc_id") === col("cdoc")).as("exact_canonical"))
         .join(partners, Seq("doc_id"), "left")
@@ -259,7 +258,6 @@ object LlmOps {
           (col("exact_canonical") &&
             !coalesce(col("nd_dropped"), lit(false))).as("keep"))
         .orderBy("doc_id")
-      graft.queries.materializeAndFree(out, mem, sh)
     }),
 
     // Global token frequency top-50: explode -> two-phase agg -> top-k.
@@ -323,7 +321,6 @@ object LlmOps {
         .collect()
       val rels = cand.select("vec_id", "rel").collect()
         .map(r => r.getLong(0) -> r.getDouble(1))
-      cand.unpersist()
       val rel6 = rels.map { case (v, r) => v -> math.round(r * 1e6) }.toMap
       val sim6 = simRows.map(r =>
         (r.getLong(0), r.getLong(1)) -> math.round(r.getDouble(2) * 1e6))
@@ -556,14 +553,13 @@ object LlmOps {
     * order). */
   private[graft] def bpeVocab(s: org.apache.spark.sql.SparkSession,
     d: String, k: Int): (org.apache.spark.sql.DataFrame, Seq[String]) = {
-    var vocab = Tables(s, d, "documents")
+    var vocab = graft.queries.checkpointed(Tables(s, d, "documents")
       .select(explode(split(lower(col("text")), " ")).as("word"))
       .filter(col("word") =!= "")
       .groupBy("word").agg(count(lit(1)).as("wfreq"))
       .withColumn("sym", concat(lit(" "),
         concat_ws("  ", expr("filter(split(word, ''), x -> x <> '')")),
-        lit(" ")))
-      .localCheckpoint(true)
+        lit(" "))))
     val merges = scala.collection.mutable.ListBuffer.empty[String]
     var r = 0
     var exhausted = false

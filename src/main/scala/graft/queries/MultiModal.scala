@@ -536,11 +536,10 @@ object MultiModal {
         col("hamming")))
       .withColumn("rn", row_number().over(wBest))
       .filter(col("rn") === 1).drop("rn")
-    val out = ph.join(best, Seq("id"), "left")
+    ph.join(best, Seq("id"), "left")
       .select(col("id"), col("phash"), col("mate").as("near_dup_id"),
         col("hamming"), col("mate").isNotNull.as("is_near_dup"))
       .orderBy("id")
-    graft.queries.materializeAndFree(out, ph)
   }
 
   /** Per-window audio fingerprints: REAL WAV decode -> 16-bit PCM ->

@@ -154,63 +154,61 @@ object SamplingOps {
       val x = Tables(s, d, "lineitem")
         .select(col("l_extendedprice").cast("double").as("x"))
       val nPart = s.sparkContext.defaultParallelism
-      val parted = x.repartitionByRange(nPart, col("x"))
-        .withColumn("pid", spark_partition_id())
-        .persist() // two actions below must see the SAME partitioning
-      try {
-        val cnts = parted.groupBy("pid").agg(count(lit(1)).as("cnt"))
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-        val n = cnts.values.sum
-        // range partitions are ordered by pid, so offsets are prefix sums
-        val pids = cnts.keys.toSeq.sorted
-        val offsets = pids.zip(pids.map(cnts).scanLeft(0L)(_ + _)).toMap
-        val pos = qs.map { case (name, q) => name -> (q * (n - 1) + 1.0) }
-        val need = pos.flatMap { case (_, p) =>
-          Seq(math.floor(p).toLong, math.ceil(p).toLong)
-        }.distinct
-        val offExpr = element_at(
-          map(cnts.keys.toSeq.sorted.flatMap(p =>
-            Seq(lit(p), lit(offsets(p)))): _*), col("pid"))
-        val w = Window.partitionBy("pid").orderBy("x")
-        // The rank offsets are only valid if this second action sees the
-        // SAME partitioning as the counts pass. That holds while the
-        // persisted blocks live, but an evicted block re-runs the range
-        // exchange, which MAY resample boundaries — so this pass also
-        // returns EVERY partition's first row carrying that partition's
-        // count (same window exchange, no extra job) and validates the
-        // full per-pid count map, not just partitions that happened to
-        // hold a boundary rank: compensating drift (one partition gains a
-        // row, another loses one) shifts offsets of partitions whose own
-        // count is unchanged, so per-boundary-row checks alone would pass
-        // on silently wrong quantiles (round-3 advice, round-4 review).
-        val firstRns = pids.map(p => offsets(p) + 1L)
-        val rows = parted
-          .withColumn("rn", row_number().over(w) + offExpr)
-          .withColumn("cnt2", count(lit(1)).over(Window.partitionBy("pid")))
-          .filter(col("rn").isin((need ++ firstRns).distinct: _*))
-          .select("pid", "rn", "x", "cnt2").collect()
-        val cnts2 = rows.filter(r => r.getLong(1) == offsets
-            .getOrElse(r.getInt(0), Long.MinValue) + 1L)
-          .map(r => r.getInt(0) -> r.getLong(3)).toMap
-        if (cnts2 != cnts)
-          throw new IllegalStateException(
-            s"q_quantiles: boundary-pass partition counts $cnts2 != " +
-              s"counts-pass $cnts — cached range partitioning was lost " +
-              "and resampled between the two passes")
-        val boundary = rows.map(r => r.getLong(1) -> r.getDouble(2)).toMap
-        val missingRank = need.filterNot(boundary.contains)
-        if (missingRank.nonEmpty)
-          throw new IllegalStateException(
-            s"q_quantiles: boundary ranks $missingRank not found — " +
-              "partitioning drifted between the two passes")
-        val cells = pos.map { case (name, p) =>
-          val lo = math.floor(p).toLong
-          val frac = p - lo
-          val v = boundary(lo) + frac * (boundary(math.ceil(p).toLong) - boundary(lo))
-          round(lit(v), 4).as(name)
-        }
-        s.range(1).select(cells: _*)
-      } finally parted.unpersist()
+      // two actions below must see the SAME partitioning
+      val parted = persistLazy(x.repartitionByRange(nPart, col("x"))
+        .withColumn("pid", spark_partition_id()))
+      val cnts = parted.groupBy("pid").agg(count(lit(1)).as("cnt"))
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val n = cnts.values.sum
+      // range partitions are ordered by pid, so offsets are prefix sums
+      val pids = cnts.keys.toSeq.sorted
+      val offsets = pids.zip(pids.map(cnts).scanLeft(0L)(_ + _)).toMap
+      val pos = qs.map { case (name, q) => name -> (q * (n - 1) + 1.0) }
+      val need = pos.flatMap { case (_, p) =>
+        Seq(math.floor(p).toLong, math.ceil(p).toLong)
+      }.distinct
+      val offExpr = element_at(
+        map(cnts.keys.toSeq.sorted.flatMap(p =>
+          Seq(lit(p), lit(offsets(p)))): _*), col("pid"))
+      val w = Window.partitionBy("pid").orderBy("x")
+      // The rank offsets are only valid if this second action sees the
+      // SAME partitioning as the counts pass. That holds while the
+      // persisted blocks live, but an evicted block re-runs the range
+      // exchange, which MAY resample boundaries — so this pass also
+      // returns EVERY partition's first row carrying that partition's
+      // count (same window exchange, no extra job) and validates the
+      // full per-pid count map, not just partitions that happened to
+      // hold a boundary rank: compensating drift (one partition gains a
+      // row, another loses one) shifts offsets of partitions whose own
+      // count is unchanged, so per-boundary-row checks alone would pass
+      // on silently wrong quantiles (round-3 advice, round-4 review).
+      val firstRns = pids.map(p => offsets(p) + 1L)
+      val rows = parted
+        .withColumn("rn", row_number().over(w) + offExpr)
+        .withColumn("cnt2", count(lit(1)).over(Window.partitionBy("pid")))
+        .filter(col("rn").isin((need ++ firstRns).distinct: _*))
+        .select("pid", "rn", "x", "cnt2").collect()
+      val cnts2 = rows.filter(r => r.getLong(1) == offsets
+          .getOrElse(r.getInt(0), Long.MinValue) + 1L)
+        .map(r => r.getInt(0) -> r.getLong(3)).toMap
+      if (cnts2 != cnts)
+        throw new IllegalStateException(
+          s"q_quantiles: boundary-pass partition counts $cnts2 != " +
+            s"counts-pass $cnts — cached range partitioning was lost " +
+            "and resampled between the two passes")
+      val boundary = rows.map(r => r.getLong(1) -> r.getDouble(2)).toMap
+      val missingRank = need.filterNot(boundary.contains)
+      if (missingRank.nonEmpty)
+        throw new IllegalStateException(
+          s"q_quantiles: boundary ranks $missingRank not found — " +
+            "partitioning drifted between the two passes")
+      val cells = pos.map { case (name, p) =>
+        val lo = math.floor(p).toLong
+        val frac = p - lo
+        val v = boundary(lo) + frac * (boundary(math.ceil(p).toLong) - boundary(lo))
+        round(lit(v), 4).as(name)
+      }
+      s.range(1).select(cells: _*)
     }),
 
     // Per-group quantiles via approx_percentile: a KLL/GK-style sketch —

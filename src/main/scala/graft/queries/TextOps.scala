@@ -82,14 +82,13 @@ object TextOps {
     * MEMORY_AND_DISK — spills, never OOMs), pair intersection counts
     * from the shingle equi-join with BOTH set sizes attached. Honors
     * `spark.graft.shingleDfCap` (df-capped candidate generation with
-    * exact full-set verify — the O(df²) join-row bound). Returns
-    * (sized pairs, shingle cache handle); callers release the handle
-    * via materializeAndFree. One definition so no family member can
-    * drift from the proven candidate semantics, and composite consumers
-    * pay the shingle pipeline exactly once. */
+    * exact full-set verify — the O(df²) join-row bound). Returns the
+    * sized pairs. One definition so no family member can drift from
+    * the proven candidate semantics, and composite consumers pay the
+    * shingle pipeline exactly once. */
   private[queries] def shinglePairSizedOf(
       s: org.apache.spark.sql.SparkSession,
-      docs: DataFrame): (DataFrame, DataFrame) =
+      docs: DataFrame): DataFrame =
     shinglePairSizedFromArrays(s, persistEager(docs
       .select(col("doc_id"),
         graft.functions.ShingleHash60(s, col("text"), 3, distinct = true)
@@ -110,10 +109,10 @@ object TextOps {
     * ShingleHash60 scan, no second cache. Per-doc set sizes come from
     * `size(sh)` on the cached arrays (the shingles are distinct by
     * construction), which also deletes the old per-doc count SHUFFLE.
-    * Returns (sized pairs, the array handle the caller releases). */
+    * Returns the sized pairs. */
   private[queries] def shinglePairSizedFromArrays(
       s: org.apache.spark.sql.SparkSession,
-      arr: DataFrame): (DataFrame, DataFrame) = {
+      arr: DataFrame): DataFrame = {
     val cap = s.conf.get("spark.graft.shingleDfCap", "0").toLong
     val sh = arr.select(col("doc_id"), explode(col("sh")).as("s"))
     val sz = arr.select(col("doc_id"), size(col("sh")).cast("long").as("n"))
@@ -142,12 +141,47 @@ object TextOps {
           size(array_intersect(col("sh1"), col("sh2"))).cast("long")
             .as("inter"))
     }
-    val sized = inter
+    inter
       .join(sz.as("s1"), col("d1") === col("s1.doc_id"))
       .join(sz.as("s2"), col("d2") === col("s2.doc_id"))
       .select(col("d1"), col("d2"), col("inter"),
         col("s1.n").as("n1"), col("s2.n").as("n2"))
-    (sized, arr)
+  }
+
+  /** Class-assignment frames shared by [[classFanBack]] and the minhash
+    * cluster family (AnnOps, round 18): `mem` (ckey, doc_id, cdoc, cnt —
+    * every raw doc keyed by its class and the class canonical) and
+    * `canon` (ckey, doc_id, text, cnt, len — one row per class,
+    * lowest-doc_id representative). Neither is persisted: a caller
+    * that re-reads `mem` persists it before its first action, and each
+    * caller persists the derived frame it re-reads and observes
+    * max(cnt) on that fill.
+    *
+    * Class assignment shuffles only (ckey, doc_id) — never text — as
+    * ONE unordered window over that id frame (min + count per ckey),
+    * which yields the membership frame `mem` directly: a groupBy +
+    * join-back shape would shuffle the same (ckey, doc_id) bytes TWICE
+    * (guide §2.4 — two operations keyed the same way share one
+    * exchange). The canonical rows' text comes back through a doc_id
+    * join against the scan (AQE broadcasts the class side at fixture
+    * scale; at 100 TB it is a doc_id-keyed equi join, still cheaper
+    * than shuffling every text copy by ckey). */
+  private[queries] def classMembership(
+      s: org.apache.spark.sql.SparkSession, d: String,
+      key: Column => Column = t => md5(lower(trim(t)).cast("binary")))
+      : (DataFrame, DataFrame) = {
+    val docs = graft.Tables(s, d, "documents")
+    val w = Window.partitionBy("ckey")
+    val mem = docs
+      .select(key(col("text")).as("ckey"), col("doc_id"))
+      .withColumn("cdoc", min(col("doc_id")).over(w))
+      .withColumn("cnt", count(lit(1)).over(w))
+    val canon = docs.select(col("doc_id"), col("text"))
+      .join(mem.filter(col("doc_id") === col("cdoc"))
+        .select(col("ckey"), col("doc_id"), col("cnt")), "doc_id")
+      .select(col("ckey"), col("doc_id"), col("text"), col("cnt"),
+        length(col("text")).cast("long").as("len"))
+    (mem, canon)
   }
 
   /** Exact-dup class machinery for the raw-pair FAN-BACK detectors
@@ -168,46 +202,11 @@ object TextOps {
     * doc keyed by its class and the class canonical), sized (canonical
     * candidate pairs with set sizes, from the shared shingle
     * machinery), withinCls (ckey, n_sh, len for classes the raw plan
-    * would self-pair: >= 2 copies and >= 1 shingle), and the shingle
-    * cache handle the caller releases. */
-  /** Class-assignment frames shared by [[classFanBack]] and the minhash
-    * cluster family (AnnOps, round 18): `mem` (ckey, doc_id, cdoc, cnt —
-    * every raw doc keyed by its class and the class canonical,
-    * lazily persisted: the first consumer's eager fill materializes it)
-    * and `canon` (ckey, doc_id, text, cnt, len — one row per class,
-    * lowest-doc_id representative, UNPERSISTED: each consumer persists
-    * the derived frame it actually re-reads and observes max(cnt) on
-    * that fill, see the callers).
+    * would self-pair: >= 2 copies and >= 1 shingle), and fanOut.
     *
-    * Class assignment shuffles only (ckey, doc_id) — never text — as
-    * ONE unordered window over that id frame (min + count per ckey),
-    * which yields the membership frame `mem` directly: a groupBy +
-    * join-back shape would shuffle the same (ckey, doc_id) bytes TWICE
-    * (guide §2.4 — two operations keyed the same way share one
-    * exchange). The canonical rows' text comes back through a doc_id
-    * join against the scan (AQE broadcasts the class side at fixture
-    * scale; at 100 TB it is a doc_id-keyed equi join, still cheaper
-    * than shuffling every text copy by ckey). */
-  private[queries] def classMembership(
-      s: org.apache.spark.sql.SparkSession, d: String,
-      key: Column => Column = t => md5(lower(trim(t)).cast("binary")))
-      : (DataFrame, DataFrame) = {
-    val docs = graft.Tables(s, d, "documents")
-    val w = Window.partitionBy("ckey")
-    val mem = persistLazy(docs
-      .select(key(col("text")).as("ckey"), col("doc_id"))
-      .withColumn("cdoc", min(col("doc_id")).over(w))
-      .withColumn("cnt", count(lit(1)).over(w)))
-    val canon = docs.select(col("doc_id"), col("text"))
-      .join(mem.filter(col("doc_id") === col("cdoc"))
-        .select(col("ckey"), col("doc_id"), col("cnt")), "doc_id")
-      .select(col("ckey"), col("doc_id"), col("text"), col("cnt"),
-        length(col("text")).cast("long").as("len"))
-    (mem, canon)
-  }
-
-  /** The sixth return value `fanOut` is the round-18 short-circuit
-    * (r17 verdict #4): canon's cache-filling count also observes the
+    * `fanOut` is the round-18 short-circuit
+    * (r17 verdict #4): the shingle cache carries each canonical's class
+    * scalars (ckey, cnt, len), so its filling count also observes the
     * corpus's max class size, and when every class is a singleton
     * (max(cnt) = 1) the membership fan-out joins and the within-class
     * branches are PROVABLY identity/empty — mem maps every canonical
@@ -220,22 +219,17 @@ object TextOps {
   private[queries] def classFanBack(
       s: org.apache.spark.sql.SparkSession, d: String,
       key: Column => Column = t => md5(lower(trim(t)).cast("binary")))
-      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame, Boolean) = {
-    // canon's eager fill doubles as mem's (the join reads mem through a
-    // filter, which materializes the whole cache — no per-consumer race
-    // is possible because nothing else runs first). Callers release
-    // both by checkpointing their final fan-out through
-    // materializeAndFree(out, canon, mem, sh).
-    val (mem, canonRaw) = classMembership(s, d, key)
-    val (canon, maxCnt) = persistEagerWithLong(canonRaw, max(col("cnt")))
-    val (sized, sh) = shinglePairSizedOf(s,
-      canon.select(col("doc_id"), col("text")))
-    val withinCls = canon
-      .join(sh.select(col("doc_id"),
-        size(col("sh")).cast("long").as("n_sh")), "doc_id")
-      .filter(col("cnt") >= 2 && col("n_sh") > 0)
-      .select(col("ckey"), col("n_sh"), col("len"))
-    (canon, mem, sized, withinCls, sh, maxCnt > 1)
+      : (DataFrame, DataFrame, DataFrame, DataFrame, Boolean) = {
+    val (mem, canon) = classMembership(s, d, key)
+    val (sh, maxCnt) = persistEager(canon
+      .select(col("ckey"), col("doc_id"), col("cnt"), col("len"),
+        graft.functions.ShingleHash60(s, col("text"), 3, distinct = true)
+          .as("sh")), max(col("cnt")))
+    val withinCls = sh
+      .filter(col("cnt") >= 2 && size(col("sh")) > 0)
+      .select(col("ckey"), size(col("sh")).cast("long").as("n_sh"),
+        col("len"))
+    (canon, mem, shinglePairSizedFromArrays(s, sh), withinCls, maxCnt > 1)
   }
 
   val q: Map[String, Q] = Map(
@@ -521,10 +515,8 @@ object TextOps {
       // within-class frame each feed exactly ONE consumer below, so the
       // former per-stage checkpoints (pairs / withinM) were pure job
       // barriers — everything upstream they could recompute is already
-      // persisted inside classFanBack (canon / mem / sh). One final
-      // materializeAndFree releases all three handles (guide §1.2:
-      // fewer sequential actions, same exchanges).
-      val (canon, mem, sized, withinCls, sh, fanOut) = classFanBack(s, d)
+      // persisted inside classFanBack (canon / mem / sh).
+      val (_, mem, sized, withinCls, fanOut) = classFanBack(s, d)
       val pairs = sized
         .select(col("d1"), col("d2"), col("inter"),
           round(col("inter").cast("double")
@@ -551,8 +543,7 @@ object TextOps {
             col("n_sh").as("inter"), lit(1.0).as("jaccard"))
         cross.unionByName(within)
       }
-      materializeAndFree(out, canon, mem, sh)
-        .orderBy("d1", "d2")
+      out.orderBy("d1", "d2")
     }),
 
     // ── Containment near-subset detection (round 10) ─────────────────
@@ -583,8 +574,8 @@ object TextOps {
       // contributes all n(n-1) ordered member pairs at containment 1.
       // Round-17 optimization pass: single-consumer stages compose
       // lazily (no per-stage checkpoint barriers — the jaccard twin's
-      // comment); one final materializeAndFree releases every handle.
-      val (canon, mem, sized, withinCls, sh, fanOut) = classFanBack(s, d)
+      // comment).
+      val (_, mem, sized, withinCls, fanOut) = classFanBack(s, d)
       val dir = sized.select(explode(array(
           struct(col("d1").as("d_sub"), col("d2").as("d_super"),
             col("inter"),
@@ -615,8 +606,7 @@ object TextOps {
             col("n_sh").as("inter"), lit(1.0).as("containment"))
         cross.unionByName(within)
       }
-      materializeAndFree(out, canon, mem, sh)
-        .orderBy("d_sub", "d_super")
+      out.orderBy("d_sub", "d_super")
     }),
 
     // ── Fuzzy edit-distance dedup (round 10) ─────────────────────────
@@ -655,18 +645,22 @@ object TextOps {
     // Oracle unchanged (raw semantics) — the sf0.01 hash gate checks
     // the reconstruction, not a re-statement of it.
     "q_dedup_fuzzy_edit" -> ((s, d) => {
-      val (canon, mem, sized, withinCls, sh, fanOut) =
+      val (canon, mem, sized, withinCls, fanOut) =
         classFanBack(s, d, t => md5(t.cast("binary")))
       val cands = sized
         .filter(round(col("inter").cast("double")
           / (col("n1") + col("n2") - col("inter")), 6) >= 0.5)
         .select("d1", "d2")
-      val t = canon.select(col("doc_id"), col("text"))
+      // both verify sides read the canonical texts
+      val t = persistLazy(canon.select(col("doc_id"), col("text")))
       // O(len²) DP once per distinct-text candidate pair — the win.
       // Round-17 optimization pass: cands → verified → cross is a
       // single-consumer chain over persisted inputs, so it composes
       // lazily (the former per-stage checkpoints were pure job
-      // barriers); one final materializeAndFree releases every handle.
+      // barriers). The one checkpoint below stays: whole-stage codegen
+      // defers `edit_dist` into the fan-out joins' match loops, so
+      // without a barrier above them levenshtein would run per fanned
+      // row rather than per pair.
       val verified = cands
         .join(t.select(col("doc_id").as("d1"), col("text").as("t1")), "d1")
         .join(t.select(col("doc_id").as("d2"), col("text").as("t2")), "d2")
@@ -700,10 +694,10 @@ object TextOps {
             lit(0L).as("edit_dist"))
         cross.unionByName(within)
       }
-      materializeAndFree(base
+      checkpointed(base
         .withColumn("rel_edit", round(col("edit_dist").cast("double")
           / greatest(col("len1"), col("len2")), 6))
-        .withColumn("is_dup", col("rel_edit") <= 0.2), canon, mem, sh)
+        .withColumn("is_dup", col("rel_edit") <= 0.2))
         .orderBy("d1", "d2")
     }),
 
@@ -728,12 +722,12 @@ object TextOps {
       val perDoc = sh.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
       val novel = sh.groupBy("s").agg(min("doc_id").as("doc_id"))
         .groupBy("doc_id").agg(count(lit(1)).as("nn"))
-      val out = perDoc.join(novel, Seq("doc_id"), "left")
+      perDoc.join(novel, Seq("doc_id"), "left")
         .select(col("doc_id"), col("n_shingles"),
           coalesce(col("nn"), lit(0L)).as("n_novel"),
           round(coalesce(col("nn"), lit(0L)).cast("double")
             / col("n_shingles"), 6).as("novelty"))
-      materializeAndFree(out, sh).orderBy("doc_id")
+        .orderBy("doc_id")
     }),
 
     // ── Zipf rank-frequency fit (round 10) ───────────────────────────

@@ -3,6 +3,25 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+/** The declared queries and the materialization contract, written once.
+  *
+  * Release: a declared query returns its frame and never frees what its
+  * build cached. Whoever consumes the frame (Bench, Verify,
+  * DumpPlanFiles, the specs) clears the session's cache after each key
+  * — a cache over a fixture path keeps serving its rows until it is
+  * cleared, even if the files change. Checkpoint blocks are freed by
+  * the ContextCleaner once their frame is unreachable.
+  *
+  * A barrier stays only for one of three reasons:
+  *  1. a cache is read at least twice by the key's executed plans (its
+  *     fill not counted; a read inside another cache's build counted
+  *     once) — PlanDigestSpec checks this for every key;
+  *  2. a checkpoint cuts a loop's lineage (PageRank, propagateMinLabels);
+  *  3. removing it slows a key through it at sf0.1 or sf1 by more than
+  *     that key's with-barrier pass spread — each such site is listed
+  *     with its measurement in PlanDigestSpec.
+  * The three helpers below are the only code under `queries/` that
+  * persists, checkpoints or unpersists. */
 package object queries {
   /** A declared query: (session, scale-factor dir) => result frame. */
   type Q = (SparkSession, String) => DataFrame
@@ -16,14 +35,37 @@ package object queries {
     p
   }
 
+  /** [[persistEager]] whose cache-filling count also delivers a
+    * long-valued aggregate over `df` (see [[materializedWithLong]]) —
+    * the fan-back short-circuit's data probe (round 18): the dedup
+    * family branches on the corpus's max exact-dup class size without
+    * paying a second job. */
+  private[queries] def persistEager(
+      df: DataFrame, metric: Column): (DataFrame, Long) =
+    materializedWithLong(df, metric)(persistEager(_))
+
   /** [[persistEager]] without the cache-filling count job — for a frame
-    * whose FIRST consumer is itself a single eagerly-materialized frame
-    * (the consumer's one action fills this cache as it runs, so the
-    * explicit count would be a pure extra job; the per-side race
-    * persistEager exists to prevent cannot happen when exactly one
-    * consumer runs first). */
+    * whose FIRST consumer is itself a single action (that action fills
+    * the cache as it runs, so the explicit count would be a pure extra
+    * job; the per-side race persistEager exists to prevent cannot
+    * happen when exactly one consumer runs first). */
   private[queries] def persistLazy(df: DataFrame): DataFrame =
     df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** Eagerly checkpoint `df`: its plan is cut to a `Scan ExistingRDD`
+    * leaf. On a multi-node cluster prefer reliable checkpoint()
+    * (localCheckpoint blocks die with an executor). */
+  private[queries] def checkpointed(df: DataFrame): DataFrame =
+    df.localCheckpoint(true)
+
+  /** Eagerly checkpoint `df` and return it with the value of `metric`
+    * WITHOUT a second job (see [[materializedWithLong]]), so a fixpoint
+    * consumer (the CC kernel's convergence sum in AnnOps, PageRank's
+    * dangling-mass sum in GraphOps) pays no extra agg job per round.
+    * Callers coalesce the metric so an empty frame gives 0. */
+  private[queries] def checkpointed(
+      df: DataFrame, metric: Column): (DataFrame, Long) =
+    materializedWithLong(df, metric)(checkpointed(_))
 
   /** Has Dataset.observe delivered a metric for an eager
     * materialization in this JVM? Tri-state: null = untested, TRUE =
@@ -65,44 +107,6 @@ package object queries {
           (out, explicit(out))
       }
     }
-  }
-
-  /** Eagerly checkpoint `df` and return it with the value of `metric`
-    * WITHOUT a second job (see [[materializedWithLong]]), so a fixpoint
-    * consumer (the CC kernel's convergence sum in AnnOps, PageRank's
-    * dangling-mass sum in GraphOps) pays no extra agg job per round.
-    * Callers coalesce the metric so an empty frame gives 0. */
-  private[queries] def checkpointedWithSum(
-      df: DataFrame, metric: Column): (DataFrame, Long) =
-    materializedWithLong(df, metric)(_.localCheckpoint(true))
-
-  /** [[persistEager]] whose cache-filling count also delivers a
-    * long-valued aggregate over `df` (see [[materializedWithLong]]) —
-    * the fan-back short-circuit's data probe (round 18): the dedup
-    * family branches on the corpus's max exact-dup class size without
-    * paying a second job. */
-  private[queries] def persistEagerWithLong(
-      df: DataFrame, metric: Column): (DataFrame, Long) =
-    materializedWithLong(df, metric)(persistEager)
-
-  /** Eagerly materialize `df` via localCheckpoint, then release the
-    * internal caches it depended on. Sketch queries (minhash / simhash /
-    * sign-LSH / ngram-jaccard) persist big intermediates that a
-    * lazy-returned frame could never unpersist — they would sit in the
-    * CacheManager for the whole session (round-4 advice #1). Checkpoint
-    * blocks, by contrast, are ContextCleaner-managed: freed when the
-    * frame is GC'd, no explicit release needed. The materialization is
-    * not extra work — callers materialize exactly once anyway — and the
-    * checkpointed rows are the SMALL end product (pair lists /
-    * per-doc sketch rows), not the big intermediates. On a multi-node
-    * cluster prefer reliable checkpoint() (localCheckpoint blocks die
-    * with an executor).
-    */
-  private[queries] def materializeAndFree(
-      df: DataFrame, handles: DataFrame*): DataFrame = {
-    val out = df.localCheckpoint(true)
-    handles.foreach(_.unpersist())
-    out
   }
 }
 

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Structured-Streaming rebuild of the reference's dataflow (SURVEY §2.4).
   *
@@ -17,7 +18,7 @@ import org.apache.spark.sql.types._
   * HTTP 201/500 ack protocol — a failed micro-batch is replayed, the same
   * at-least-once contract as CRDB re-POSTing on 500 (publisher.go:167-175),
   * with the async-ack data-loss bug (SURVEY §8-B2) fixed by construction:
-  * foreachBatch only commits the epoch after the sink write returns.
+  * an epoch commits only after its sink write returns.
   *
   * Scale notes: every transform here is per-row or per-key-partition;
   * stateful ops (windows, dedup, counters) keep watermark-bounded state in
@@ -129,32 +130,30 @@ object Streams {
           .otherwise(map(lit("path"), col("path"), lit("table"), col("tbl"))))
   }
 
-  /** The skeleton both publish sinks share: unroutable and seen rows
-    * counted in observedMetrics(`name`) at O(1) cost, and `publish` run
-    * on each epoch's `messages`. The epoch commits only after `publish`
-    * returns — a sink failure replays the batch (at-least-once, with the
-    * §8-B2 silent-ack bug structurally impossible). */
-  private def publishEpochs(routed: DataFrame, name: String,
-      checkpoint: String)(publish: DataFrame => Unit): StreamingQuery =
+  /** `routed` with its unroutable and seen rows counted in
+    * observedMetrics(`name`) at O(1) cost — both publish sinks. */
+  private def observed(routed: DataFrame, name: String): DataFrame =
     routed.observe(name,
-        count(when(col("tbl") === "404", lit(1))).as("unroutable_404"),
-        count(lit(1)).as("rows_seen"))
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) => publish(messages(batch)) }
-      .start()
+      count(when(col("tbl") === "404", lit(1))).as("unroutable_404"),
+      count(lit(1)).as("rows_seen"))
 
-  /** s_route_publish (R4+R5+R7+R8+R9): the directory sink. Each epoch is
-    * ONE partitioned parquet append of its `messages` to
-    * `outDir/data/topic=<t>`: a topic's directory is created by the
-    * write on its first row, unroutable rows land in
+  /** s_route_publish (R4+R5+R7+R8+R9): the directory sink. Each epoch's
+    * `messages` go through Spark's own parquet file sink, partitioned
+    * by topic under `outDir/data/topic=<t>`: a topic's directory is
+    * created by the write on its first row, unroutable rows land in
     * `topic=__dead_letter` with a `dl_reason` attribute, and the
     * unroutable count surfaces as
-    * observedMetrics("route_publish").unroutable_404. */
+    * observedMetrics("route_publish").unroutable_404. The sink's
+    * `_spark_metadata` log makes it exactly-once: a batch id it has
+    * already committed is skipped on replay, and `spark.read` of
+    * `outDir/data` lists only committed files. */
   def routePublish(routed: DataFrame, outDir: String, checkpoint: String): StreamingQuery =
-    publishEpochs(routed, "route_publish", checkpoint) {
-      _.write.mode("append").partitionBy("topic").parquet(s"$outDir/data")
-    }
+    messages(observed(routed, "route_publish")).writeStream
+      .format("parquet")
+      .partitionBy("topic")
+      .option("path", s"$outDir/data")
+      .option("checkpointLocation", checkpoint)
+      .start()
 
   /** s_route_publish_net (R9 over a real wire): the same `messages` as
     * `routePublish`, delivered to a NETWORK publish endpoint
@@ -188,25 +187,37 @@ object Streams {
     * `spark.graft.credentials` from the session (R15). */
   def routePublishNet(routed: DataFrame, transport: PublishTransport,
     checkpoint: String): StreamingQuery =
-    publishEpochs(routed, "route_publish_net", checkpoint) {
-      _.select("topic", "value", "attributes").foreachPartition {
-        (it: Iterator[Row]) =>
-          val met = scala.collection.mutable.HashSet.empty[String]
-          transport.publishPartition(it.map { r =>
-            val topic = r.getString(0)
-            if (met.add(topic)) transport.ensureTopic(topic)
-            (topic, r.getString(1), r.getMap[String, String](2).toMap)
-          })
+    observed(routed, "route_publish_net").writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        messages(batch).select("topic", "value", "attributes")
+          .foreachPartition { (it: Iterator[Row]) =>
+            val met = scala.collection.mutable.HashSet.empty[String]
+            transport.publishPartition(it.map { r =>
+              val topic = r.getString(0)
+              if (met.add(topic)) transport.ensureTopic(topic)
+              (topic, r.getString(1), r.getMap[String, String](2).toMap)
+            })
+          }
       }
-    }
+      .start()
 
   /** s_resolved_watermark (R5 with the §8-B1 regex fixed): forward incoming
-    * RESOLVED markers and emit this engine's own per-batch resolved
-    * watermark (max `updated` seen), one marker file per micro-batch —
+    * RESOLVED markers and emit this engine's own resolved watermark (max
+    * `updated` seen), one marker file per micro-batch with input —
     * downstream consumers get the same in-band "no earlier updates" promise
-    * CRDB gives the bridge (publisher.go:155-157). */
+    * CRDB gives the bridge (publisher.go:155-157). Markers are monotone:
+    * each batch's value is seeded with the marker of the highest earlier
+    * batch id, so a batch whose own max is older rewrites the earlier
+    * value (and a replayed batch rewrites the same one). A marker lands
+    * as a temp file moved into place, so a reader never sees half of
+    * one. */
   def resolvedWatermark(parsed: DataFrame, markerDir: String, checkpoint: String): StreamingQuery = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(markerDir))
+    val dir = java.nio.file.Paths.get(markerDir)
+    java.nio.file.Files.createDirectories(dir)
+    val marker = "batch-(\\d+)\\.RESOLVED".r
+    def valueOf(p: java.nio.file.Path): String =
+      java.nio.file.Files.readString(p).split("\"")(3)
     parsed.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -216,12 +227,27 @@ object Streams {
           max(when(col("op") === "resolved",
             get_json_object(col("value"), "$.resolved"))).as("incoming"),
           max(col("updated")).as("own")).collect()(0)
-        val hi = Seq(Option(row.getString(0)), Option(row.getString(1)))
-          .flatten.reduceOption((a, b) => if (a >= b) a else b)
-        hi.foreach { r =>
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(f"$markerDir/batch-$id%05d.RESOLVED"),
-            s"""{"resolved": "$r"}""")
+        val own = Seq(Option(row.getString(0)), Option(row.getString(1)))
+          .flatten
+        if (own.nonEmpty) {
+          val earlier = {
+            val ls = java.nio.file.Files.list(dir)
+            try ls.iterator().asScala.toSeq.flatMap { p =>
+              p.getFileName.toString match {
+                case marker(b) if b.toLong < id => Some(b.toLong -> p)
+                case _ => None
+              }
+            } finally ls.close()
+          }
+          val hi = (own ++ earlier.maxByOption(_._1).map(e => valueOf(e._2)))
+            .max
+          val tmp = java.nio.file.Files.createTempFile(dir, ".marker", ".tmp")
+          try {
+            java.nio.file.Files.writeString(tmp, s"""{"resolved": "$hi"}""")
+            java.nio.file.Files.move(tmp, dir.resolve(f"batch-$id%05d.RESOLVED"),
+              java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+          } finally java.nio.file.Files.deleteIfExists(tmp)
         }
         ()
       }

@@ -239,8 +239,8 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("q_ann_ivfpq plan: PQ kernels present, no cartesian, bounded exchanges") {
-    // the returned frame is the checkpointed LogicalRDD stub, so inspect
-    // every plan the build runs. Exchanges are counted per executed
+    // the training collects run plans of their own, so inspect every
+    // plan the build runs. Exchanges are counted per executed
     // plan tree (a finished AQE plan prints its initial plan too, and a
     // cached frame's plan reappears under every reader) and summed.
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -699,8 +699,10 @@ class AnnSpec extends AnyFunSuite {
       Paths.get(s"$fix/documents.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
     val tag1 = FixtureLayout.contentTag(fix, Seq("documents"))
-    // first touch builds the index for tag1
-    SparkEntry.queries("q_dedup_incremental")(spark, fix).count()
+    // first touch builds the index for tag1; the caller frees what the
+    // build cached (its caches read the same path the rewrite changes)
+    try SparkEntry.queries("q_dedup_incremental")(spark, fix).count()
+    finally spark.catalog.clearCache()
     // regenerate IN PLACE: drop a third of the corpus, same path
     val v2 = spark.read.parquet(s"$fix/documents.parquet")
       .filter(org.apache.spark.sql.functions.col("doc_id") % 3 =!= 0)

@@ -422,9 +422,8 @@ class CurationSpec extends AnyFunSuite {
     }
     // plan: corpus arrives from the stored bucketed table; every live
     // documents scan carries the drop filter (corpus re-scanned zero
-    // times per refresh). The eager localCheckpoint collapses the
-    // returned frame to an ExistingRDD scan, so inspect every plan the
-    // build runs.
+    // times per refresh). The drop-side cache fill runs a plan of its
+    // own, so inspect every plan the build runs.
     val plan = builtPlans("q_novelty_incremental").mkString("\n")
     assert(plan.contains("graft_novidx_"),
       s"stored shingle table missing from the refresh plan:\n$plan")

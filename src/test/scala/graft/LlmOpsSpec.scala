@@ -90,7 +90,7 @@ class LlmOpsSpec extends AnyFunSuite {
         "native and HOF disagree bitwise")
     }
     // registered in SQL too
-    graft.functions.CosineSim.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val viaSql = spark.sql(
       s"SELECT cosine_sim(embedding, embedding) FROM parquet.`$sf/embeddings.parquet` LIMIT 5")
       .collect()
@@ -98,9 +98,9 @@ class LlmOpsSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions injects cosine_sim + graft_h60 at session build") {
-    // graft_h60 is registered ONLY by the extension (cosine_sim also has a
-    // manual register() path), so its presence proves spark.sql.extensions
-    // ran at session creation.
+    // graft_h60 has no Column-API entry, so only the native table puts
+    // it in a session: injected at session creation by
+    // spark.sql.extensions, or by GraftExtensions.register.
     assert(spark.sessionState.functionRegistry
       .functionExists(graft.functions.GraftExtensions.h60Ident),
       "graft_h60 missing — spark.sql.extensions did not inject")
@@ -136,7 +136,7 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("CosineSim guards: zero-norm -> null (not NaN), bad arity -> error") {
     import spark.implicits._
-    graft.functions.CosineSim.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val df = Seq(
       (Array(0.0f, 0.0f), Array(1.0f, 2.0f)),   // zero-norm left
       (Array(1.0f, 2.0f), Array(1.0f, 2.0f))).toDF("a", "b")

@@ -2,8 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.catalyst.expressions.{InSet, Literal}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.expressions.{InSet, Literal,
+  PlanExpression}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.types.MapType
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,6 +19,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * and this spec fails on any unexplained drift — a silently changed
   * join strategy, a window that lost its chunked partition spec, a
   * filter that stopped pushing down.
+  *
+  * The same captures also count each cache's reads, the first rule of
+  * the materialization contract (queries/package.scala).
   *
   * On INTENTIONAL plan changes, regenerate the record and re-audit the
   * diff:
@@ -200,8 +206,50 @@ class PlanDigestSpec extends AnyFunSuite {
     scrub(dropFinalPlans(plan)).linesIterator.map(normalizeLine)
       .mkString("\n")
 
-  /** (digest, number of build-time actions) of one build of `name`. */
-  private def digest(name: String): (String, Int) = {
+  /** Reads of every cache one build creates, named by the cache's
+    * columns, in first-seen order. Each scan of a cache in a captured
+    * plan is one read, except its fill (a `count` whose only leaf is
+    * that scan). A read inside another cache's build counts once,
+    * however often that cache is read. */
+  private def cacheReads(plans: Seq[(String, QueryExecution)])
+      : Seq[(String, Int)] = {
+    // a cache is its builder's one cached plan object
+    val reads = new java.util.IdentityHashMap[SparkPlan, Int]()
+    val order = scala.collection.mutable.ArrayBuffer[SparkPlan]()
+    // a cache's build is planned adaptively (read its initial plan),
+    // and sparkPlan's subqueries are still logical (walk the physical)
+    def scans(p: SparkPlan): Seq[InMemoryTableScanExec] =
+      p.collect {
+        case s: InMemoryTableScanExec => Seq(s)
+        case a: AdaptiveSparkPlanExec => scans(a.inputPlan)
+      }.flatten ++
+        p.flatMap(_.expressions.flatMap(_.collect {
+          case e: PlanExpression[_] => e.plan: Any
+        })).collect { case q: SparkPlan => q }.flatMap(scans)
+    def visit(p: SparkPlan, fill: Boolean): Unit =
+      scans(p).foreach { s =>
+        val b = s.relation.cachedPlan
+        val first = !reads.containsKey(b)
+        if (first) { order += b; reads.put(b, 0) }
+        if (!fill) reads.put(b, reads.get(b) + 1)
+        if (first) visit(b, fill = false)
+      }
+    plans.foreach { case (action, qe) =>
+      val p = qe.sparkPlan
+      visit(p, fill = action == "count" && (p.collectLeaves() match {
+        case Seq(_: InMemoryTableScanExec) => true
+        case _ => false
+      }))
+    }
+    order.toSeq.map { b =>
+      b.output.map(_.name).mkString("cache(", ",", ")") ->
+        reads.get(b)
+    }
+  }
+
+  /** (digest, number of build-time actions, cache reads) of one build
+    * of `name`. */
+  private def digest(name: String): (String, Int, Seq[(String, Int)]) = {
     // cached frames left by OTHER suites (or by previously digested
     // queries) would substitute InMemoryRelation into matching subplans
     // and make the digest depend on what ran before — always start cold
@@ -235,15 +283,16 @@ class PlanDigestSpec extends AnyFunSuite {
     val md5 = java.security.MessageDigest.getInstance("MD5")
       .digest(canon.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.substring(0, 16)
-    (md5, actions.size)
+    (md5, actions.size, cacheReads(plans))
   }
 
-  /** One digest pass over every key, shared by both tests. A key's
+  /** One digest pass over every key, shared by every test. A key's
     * first build in a JVM may publish its content-addressed store, and
     * building a cold store can run actions of its own (the ANN model's
     * training collects), so a key whose build runs actions is pinned on
     * its next build, which reads the store the first one left. */
-  private lazy val firstPass: Seq[(String, (String, Int))] =
+  private lazy val firstPass
+      : Seq[(String, (String, Int, Seq[(String, Int)]))] =
     try SparkEntry.queries.keys.toSeq.sorted.map { n =>
       val first = digest(n)
       n -> (if (first._2 > 0) digest(n) else first)
@@ -251,7 +300,7 @@ class PlanDigestSpec extends AnyFunSuite {
 
   test("canonical plan digests match the committed record") {
     val names = firstPass.map(_._1)
-    val digests = firstPass.map { case (n, (d, _)) => n -> d }
+    val digests = firstPass.map { case (n, (d, _, _)) => n -> d }
     if (sys.env.contains("GRAFT_UPDATE_PLAN_DIGESTS")) {
       val body = digests.map { case (n, d) => s"$n\t$d" }.mkString("\n")
       Files.write(Paths.get(recordPath), (body + "\n").getBytes("UTF-8"))
@@ -285,10 +334,35 @@ class PlanDigestSpec extends AnyFunSuite {
     // meaningless noise. Build-time actions are where such inputs
     // enter, so every key whose build runs one is built again, after
     // the rest of the pass has moved the session's counters on.
-    val probe = firstPass.collect { case (n, (d, k)) if k > 0 => n -> d }
+    val probe = firstPass.collect { case (n, (d, k, _)) if k > 0 => n -> d }
     assert(probe.nonEmpty, "no key runs a build-time action")
     try probe.foreach { case (n, d) =>
       assert(digest(n)._1 == d, s"$n digest unstable across builds")
     } finally spark.sharedState.cacheManager.clearCache()
+  }
+
+  /** Caches that stay although the key's plans read them fewer than
+    * twice: each removal was measured to slow its key at sf0.1 or sf1
+    * by more than the with-cache pass spread (rule 3 of the
+    * materialization contract, queries/package.scala). Site =
+    * "<key> cache(<columns>)" -> the measurement. */
+  private val measuredCaches: Map[String, String] = Map()
+
+  test("every cache a build creates is read twice or kept by a measurement") {
+    // reads from the digest pass's own captures: no second build
+    val under = firstPass.flatMap { case (n, (_, _, caches)) =>
+      caches.collect { case (c, r) if r < 2 => s"$n $c" -> r }
+    }
+    val unlisted = under.filterNot { case (site, _) =>
+      measuredCaches.contains(site)
+    }
+    val stale = measuredCaches.keySet -- under.map(_._1)
+    assert(unlisted.isEmpty && stale.isEmpty,
+      "a cache must be read at least twice by its key's plans (its fill " +
+        "not counted), or be listed in measuredCaches with the " +
+        "measurement that keeps it (queries/package.scala).\n" +
+        s"  read fewer than twice: ${unlisted.map { case (site, r) =>
+          s"$site ($r)" }.mkString(", ")}\n" +
+        s"  listed but read twice or gone: ${stale.mkString(", ")}")
   }
 }

@@ -4,22 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites: local[4] mirrors the driver's Verify
-  * config; shuffle partitions pinned to cores (not 200). */
+/** Shared session for all suites: the harnesses' FixtureSession at
+  * local[4]. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // fixture scale: the O(n^2) exact twin may run (round-4 verdict #5)
-      .config("spark.graft.allowQuadratic", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = FixtureSession(4)
   val sf = "/root/testdata/sf0.001"
 
   /** The executed plans of one build of `name`: every build-time action,
@@ -37,12 +25,15 @@ class QueriesSpec extends AnyFunSuite {
 
   test("every query key has runnable plan and stable schema") {
     SparkEntry.queries.foreach { case (name, fn) =>
-      val df = fn(spark, sf)
-      assert(df.columns.nonEmpty, s"$name: no columns")
-      assert(df.columns.distinct.length == df.columns.length,
-        s"$name: duplicate column names ${df.columns.mkString(",")}")
-      val n = df.count()
-      assert(n > 0, s"$name: produced 0 rows at sf0.001")
+      // the caller frees what each key's build cached
+      try {
+        val df = fn(spark, sf)
+        assert(df.columns.nonEmpty, s"$name: no columns")
+        assert(df.columns.distinct.length == df.columns.length,
+          s"$name: duplicate column names ${df.columns.mkString(",")}")
+        val n = df.count()
+        assert(n > 0, s"$name: produced 0 rows at sf0.001")
+      } finally spark.catalog.clearCache()
     }
   }
 
@@ -1396,7 +1387,7 @@ class QueriesSpec extends AnyFunSuite {
     val verified = graft.queries.Joins.nameMatchPairs(
       dirtyRows.select("blk_nat", "blk_seg", "d_fold").distinct(),
       masterRows.select("blk_nat", "blk_seg", "m_fold").distinct())
-    val (hubEdges, hubIdsHandle) = graft.queries.Joins
+    val (hubEdges, _) = graft.queries.Joins
       .entityHubStarEdges(dirtyRows, masterRows, verified)
     val nEdges = hubEdges.count()
     val nRows = rows.size.toLong
@@ -1421,14 +1412,14 @@ class QueriesSpec extends AnyFunSuite {
     val rowEdges = rowPairs.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(rowPairs.select(col("b").as("src"), col("a").as("dst")))
     val (rowLab, _) = graft.queries.AnnOps.propagateMinLabels(rowEdges)
-    hubIdsHandle.unpersist()
     // end-to-end per-key labels through the operator's own fan-back path
-    val (keyLab, hubIds2) = graft.queries.Joins
+    val keyLab = graft.queries.Joins
       .entityKeyLabels(dirtyRows, masterRows, verified)
     val keyIds = rows.map(_._1).toSet
     val he = keyLab.collect().map(r => r.getLong(0) -> r.getLong(1))
       .filter(kv => keyIds.contains(kv._1)).toMap
-    hubIds2.unpersist()
+    // the caller frees what the builds cached
+    spark.catalog.clearCache()
     val re = rowLab.collect().map(r => r.getLong(0) -> r.getLong(1))
       .filter(kv => keyIds.contains(kv._1)).toMap
     assert(re.nonEmpty && he == re,

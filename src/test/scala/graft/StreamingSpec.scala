@@ -984,6 +984,26 @@ class StreamingSpec extends AnyFunSuite {
     assert(values.last == upd(20))
   }
 
+  test("s_resolved_watermark: a batch with an older max keeps the earlier marker") {
+    val in = tmp("cdc-res-old"); val markers = tmp("cdc-markers-old")
+    val parsed = Streams.parseEnvelope(Streams.ingestLines(spark, in), payload)
+    val q = Streams.resolvedWatermark(parsed, markers, tmp("cdc-res-old-ckpt"))
+    write(in, s"sharedKey=k1/t/2024-01-01/${ts33(1)}-u1-orders-1.ndjson",
+      Seq(envLine(20)))
+    q.processAllAvailable()
+    write(in, s"sharedKey=k1/t/2024-01-01/${ts33(2)}-u2-orders-1.ndjson",
+      Seq(envLine(15)))
+    q.processAllAvailable()
+    q.stop()
+    val names = Files.list(Paths.get(markers)).toArray.toSeq
+      .map(_.asInstanceOf[Path].getFileName.toString).sorted
+    assert(names == Seq("batch-00000.RESOLVED", "batch-00001.RESOLVED"),
+      s"expected one marker per batch and no temp file, got $names")
+    val values = names.map(n =>
+      Files.readString(Paths.get(markers, n)).split("\"")(3))
+    assert(values == Seq(upd(20), upd(20)), s"markers: $values")
+  }
+
   // ------------------------------------------------------------ windows
 
   private def writeEventFixture(dir: String): Unit = {
@@ -1295,6 +1315,34 @@ class StreamingSpec extends AnyFunSuite {
     assert(published.filter(col("topic") === "__dead_letter").count() == 1)
     assert(routable.filter(col("updated") === f"${21L}%023d.0000000001")
       .count() == 1)
+  }
+
+  test("s_checkpoint_recovery: a batch replayed after a lost commit publishes once") {
+    // the CrashPrefixSpec method: two one-file batches, then the last
+    // batch's commit entry and checksum are deleted, as a crash after
+    // the sink write and before the commit-log write leaves them
+    val in = tmp("cdc-replay"); val out = tmp("cdc-replay-out")
+    val ckpt = tmp("cdc-replay-ck")
+    val q1 = Streams.routePublish(routedCdc(in), out, ckpt)
+    write(in, s"sharedKey=k1/ord_topic/2024-01-01/${ts33(1)}-u1-orders-1.ndjson",
+      Seq(envLine(1), envLine(2)))
+    q1.processAllAvailable()
+    write(in, "sharedKey=k1/junk.txt", Seq("""{"x": 1}"""))
+    q1.processAllAvailable()
+    q1.stop()
+    val last = new java.io.File(ckpt, "commits").list()
+      .flatMap(_.toLongOption).max
+    assert(last == 1, s"expected two batches, last id $last")
+    Seq(s"$last", s".$last.crc").foreach(f =>
+      Files.deleteIfExists(Paths.get(ckpt, "commits", f)))
+    val q2 = Streams.routePublish(routedCdc(in), out, ckpt)
+    q2.processAllAvailable()
+    q2.stop()
+    val published = spark.read.parquet(s"$out/data")
+    assert(sortedRows(published.filter(col("topic") =!= "__dead_letter")
+      .select("updated")) == Seq(upd(1), upd(2)).map(u => s"[$u]"))
+    assert(published.filter(col("topic") === "__dead_letter").count() == 1,
+      "the replayed batch published its dead letter again")
   }
 
   test("s_enrich_static: stream-static dim join == batch golden") {
