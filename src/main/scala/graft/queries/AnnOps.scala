@@ -102,11 +102,11 @@ object AnnOps {
     (minhashPairsOf(arr.select(col("doc_id"), col("sh"))), arr, maxCnt > 1)
   }
 
-  /** [[minhashClassOf]] for the per-doc consumers (q_dedup_cluster,
-    * q_curation_keep), which read the membership frame again after the
-    * class sketch's build: `mem` is persisted before the sketch fills,
-    * so both reads share one class assignment. Returns (mem, pairs,
-    * arr, fanOut). */
+  /** [[minhashClassOf]] with the membership frame its consumers read
+    * again after the class sketch's build (q_dedup_minhash's fan-back
+    * joins, q_dedup_cluster's and q_curation_keep's per-doc labels):
+    * `mem` is persisted before the sketch fills, so every read shares
+    * one class assignment. Returns (mem, pairs, arr, fanOut). */
   private def minhashClassMem(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, Boolean) = {
     val (mem, canon) = TextOps.classMembership(s, d)
@@ -198,8 +198,7 @@ object AnnOps {
     // (round 18 — see minhashClassOf for the fan-back algebra; oracle
     // unchanged, raw exact-Jaccard semantics).
     "q_dedup_minhash" -> ((s, d) => {
-      val (mem, canon) = TextOps.classMembership(s, d)
-      val (pairs, arr, fanOut) = minhashClassOf(s, canon)
+      val (mem, pairs, arr, fanOut) = minhashClassMem(s, d)
       val out = if (!fanOut) pairs else {
         val cross = pairs
           .join(mem.select(col("cdoc").as("d1"), col("doc_id").as("x")),
@@ -435,14 +434,20 @@ object AnnOps {
   private[queries] def dedupClusterLabelsFrom(rawPairs: DataFrame)
       : DataFrame = {
     // Materialize the pair pipeline ONCE, then truncate its whole DAG
-    // out of the loop's plans (the union references pairs twice, and
-    // every round's plan would re-embed it otherwise).
-    // eager fill: one pair pass for both union branches
-    val pairs = persistEager(rawPairs.select("d1", "d2"))
-    propagateMinLabels(checkpointed(
-      pairs.select(col("d1").as("src"), col("d2").as("dst"))
-        .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))))._1
+    // out of the loop's plans (every round's plan would re-embed it
+    // otherwise): one narrow explode emits both directions, so the
+    // checkpoint reads the pairs once.
+    propagateMinLabels(checkpointed(symmetricEdges(rawPairs, "d1", "d2")))._1
   }
+
+  /** (src, dst) in both directions of each (`a`, `b`) pair — the
+    * symmetric edge list [[propagateMinLabels]] iterates over. */
+  private[queries] def symmetricEdges(pairs: DataFrame, a: String,
+      b: String): DataFrame =
+    pairs.select(explode(array(
+        struct(col(a).as("src"), col(b).as("dst")),
+        struct(col(b).as("src"), col(a).as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
 
   /** Min-label propagation with pointer doubling over a symmetric edge
     * list (`src`, `dst` — both directions present; caller checkpoints).

@@ -44,12 +44,13 @@ object GraphOps {
     * mega-basket (a wholesale order with 10k line items) can no longer
     * emit basket² pair rows on a single order key. The cut is
     * deterministic and repartition-stable (the shingleDfCap precedent,
-    * TextOps.shinglePairSizedOf), and per-order: capping disjoint order
-    * sets (the incremental drop split, the streaming epochs) one by one
-    * equals capping their union. With cap >= the corpus max basket the
-    * output is bit-identical to uncapped (spec-pinned, QueriesSpec). One
-    * groupBy(ok) with a map-side-partial collect_set, so the basket
-    * shuffles deduplicated instead of row-per-line. */
+    * TextOps.shinglePairSizedFromArrays), and per-order: capping
+    * disjoint order sets (the incremental drop split, the streaming
+    * epochs) one by one equals capping their union. With cap >= the
+    * corpus max basket the output is bit-identical to uncapped
+    * (spec-pinned, QueriesSpec). One groupBy(ok) with a map-side-partial
+    * collect_set, so the basket shuffles deduplicated instead of
+    * row-per-line. */
   private[graft] def baskets(lines: DataFrame, cap: Int): DataFrame = {
     val grouped = lines.groupBy("ok")
       .agg(sort_array(collect_set(col("pk"))).as("ps"))
@@ -270,10 +271,8 @@ object GraphOps {
     // are FRAGMENTED (sf0.1: 2350 components over 5922 nodes).
     "q_graph_components" -> ((s, d) => {
       val (inc, pairs0) = pairCounts(s, d)
-      val pairs = persistEager(pairs0.select("p1", "p2"))
-      val (labels, _) = AnnOps.propagateMinLabels(checkpointed(
-        pairs.select(col("p1").as("src"), col("p2").as("dst"))
-          .union(pairs.select(col("p2").as("src"), col("p1").as("dst")))))
+      val (labels, _) = AnnOps.propagateMinLabels(
+        checkpointed(AnnOps.symmetricEdges(pairs0, "p1", "p2")))
       val csz = org.apache.spark.sql.expressions.Window
         .partitionBy("component_id")
       inc.select(col("pk")).distinct()

@@ -534,12 +534,7 @@ object Joins {
       .select(col("hub_id").as("a"), col("kmin").as("b"))
       .filter(col("a") =!= col("b")) // self-loops move no labels
       .distinct()
-    val edges = und
-      .select(explode(array(
-        struct(col("a").as("src"), col("b").as("dst")),
-        struct(col("b").as("src"), col("a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    (checkpointed(edges), hubIds)
+    (checkpointed(AnnOps.symmetricEdges(und, "a", "b")), hubIds)
   }
 
   /** The three shared frames of the linkage machinery:

@@ -217,11 +217,12 @@ object LlmOps {
     // distinct-document load. Stages: (1) q_dedup_exact's digest
     // window — canonical = lowest doc_id per normalized-text digest;
     // (2) q_dedup_ngram_jaccard's shared shingle machinery
-    // (TextOps.shinglePairSizedOf — the single definition, restricted
-    // to canonicals) at the family's 0.8 bar; (3) per-doc verdict:
-    // keep = exact-canonical with no smaller-id near-dup partner (the
-    // same greedy-by-id rule as the pair convention d1 < d2; the
-    // transitive-closure variant stays q_dedup_cluster's contract).
+    // (TextOps.shinglePairSizedFromArrays — the single definition,
+    // restricted to canonicals) at the family's 0.8 bar; (3) per-doc
+    // verdict: keep = exact-canonical with no smaller-id near-dup
+    // partner (the same greedy-by-id rule as the pair convention
+    // d1 < d2; the transitive-closure variant stays q_dedup_cluster's
+    // contract).
     // Scale shape: one digest shuffle over the full corpus, then every
     // downstream stage runs on distinct documents only.
     "q_dedup_pipeline" -> ((s, d) => {
@@ -237,8 +238,9 @@ object LlmOps {
       val (mem0, canon) = TextOps.classMembership(s, d)
       // read by the shingle cache's build and by the per-doc verdict
       val mem = graft.queries.persistLazy(mem0)
-      val sized = TextOps.shinglePairSizedOf(s,
-        canon.select(col("doc_id"), col("text")))
+      val sized = TextOps.shinglePairSizedFromArrays(s,
+        graft.queries.persistEager(AnnOps.shingleArraysOf(s,
+          canon.select(col("doc_id"), col("text")))))
       val nd = sized.select(col("d1"), col("d2"),
           round(col("inter").cast("double")
             / (col("n1") + col("n2") - col("inter")), 6).as("jaccard"))

@@ -75,28 +75,16 @@ object TextOps {
 
   /** Shared candidate machinery for the set-similarity dedup family
     * (jaccard / containment / fuzzy-edit, the dedup pipeline and the
-    * dashboard) over a caller-chosen (doc_id, text) frame — since round
-    * 17 always a CANONICAL doc set (one row per exact-dup class; the
-    * per-class fan-back lives in [[classFanBack]]): per-doc DISTINCT
-    * 3-gram shingle hashes persisted once (8 bytes per shingle,
-    * MEMORY_AND_DISK — spills, never OOMs), pair intersection counts
-    * from the shingle equi-join with BOTH set sizes attached. Honors
-    * `spark.graft.shingleDfCap` (df-capped candidate generation with
-    * exact full-set verify — the O(df²) join-row bound). Returns the
-    * sized pairs. One definition so no family member can drift from
-    * the proven candidate semantics, and composite consumers pay the
-    * shingle pipeline exactly once. */
-  private[queries] def shinglePairSizedOf(
-      s: org.apache.spark.sql.SparkSession,
-      docs: DataFrame): DataFrame =
-    shinglePairSizedFromArrays(s, persistEager(docs
-      .select(col("doc_id"),
-        graft.functions.ShingleHash60(s, col("text"), 3, distinct = true)
-          .as("sh"))))
-
-  /** [[shinglePairSizedOf]] from a caller-PERSISTED (doc_id, sh:
-    * distinct-shingle hash array) frame — the q_dedup_report seam, and
-    * since round 16 the only cached form of the shingle machinery.
+    * dashboard) over a caller-PERSISTED (doc_id, sh: distinct-shingle
+    * hash array) frame from AnnOps.shingleArraysOf — since round 17
+    * always a CANONICAL doc set (one row per exact-dup class; the
+    * per-class fan-back lives in [[classFanBack]]): pair intersection
+    * counts from the shingle equi-join with BOTH set sizes attached.
+    * Honors `spark.graft.shingleDfCap` (df-capped candidate generation
+    * with exact full-set verify — the O(df²) join-row bound). One
+    * definition so no family member can drift from the proven
+    * candidate semantics, and composite consumers pay the shingle
+    * pipeline exactly once.
     *
     * Round-16 re-plan (the r15 sf3 cpus=32 OOM): the previous shape
     * persisted the EXPLODED (doc_id, s) rows — one cached row per
@@ -152,10 +140,10 @@ object TextOps {
     * cluster family (AnnOps, round 18): `mem` (ckey, doc_id, cdoc, cnt —
     * every raw doc keyed by its class and the class canonical) and
     * `canon` (ckey, doc_id, text, cnt, len — one row per class,
-    * lowest-doc_id representative). Neither is persisted: a caller
-    * that re-reads `mem` persists it before its first action, and each
-    * caller persists the derived frame it re-reads and observes
-    * max(cnt) on that fill.
+    * lowest-doc_id representative). Neither is persisted: each caller
+    * persists `mem` before its first action (canon's build reads it,
+    * and so does every fan-back or per-doc verdict), persists the
+    * derived frame it re-reads and observes max(cnt) on that fill.
     *
     * Class assignment shuffles only (ckey, doc_id) — never text — as
     * ONE unordered window over that id frame (min + count per ckey),
@@ -199,9 +187,10 @@ object TextOps {
     *
     * Returns: canon (ckey, doc_id, text, cnt, len — one row per class,
     * lowest-doc_id representative), mem (ckey, cdoc, doc_id — every raw
-    * doc keyed by its class and the class canonical), sized (canonical
-    * candidate pairs with set sizes, from the shared shingle
-    * machinery), withinCls (ckey, n_sh, len for classes the raw plan
+    * doc keyed by its class and the class canonical; cached, its cache
+    * fills as the shingle cache's build reads it, so the fan-back joins
+    * reuse one class assignment), sized (canonical candidate pairs
+    * with set sizes, from the shared shingle machinery), withinCls (ckey, n_sh, len for classes the raw plan
     * would self-pair: >= 2 copies and >= 1 shingle), and fanOut.
     *
     * `fanOut` is the round-18 short-circuit
@@ -220,11 +209,11 @@ object TextOps {
       s: org.apache.spark.sql.SparkSession, d: String,
       key: Column => Column = t => md5(lower(trim(t)).cast("binary")))
       : (DataFrame, DataFrame, DataFrame, DataFrame, Boolean) = {
-    val (mem, canon) = classMembership(s, d, key)
-    val (sh, maxCnt) = persistEager(canon
+    val (mem0, canon) = classMembership(s, d, key)
+    val mem = persistLazy(mem0)
+    val (sh, maxCnt) = persistEager(AnnOps.shingleArraysOf(s, canon
       .select(col("ckey"), col("doc_id"), col("cnt"), col("len"),
-        graft.functions.ShingleHash60(s, col("text"), 3, distinct = true)
-          .as("sh")), max(col("cnt")))
+        col("text"))), max(col("cnt")))
     val withinCls = sh
       .filter(col("cnt") >= 2 && size(col("sh")) > 0)
       .select(col("ckey"), size(col("sh")).cast("long").as("n_sh"),
@@ -514,8 +503,8 @@ object TextOps {
       // Round-17 optimization pass: the candidate-pair filter and the
       // within-class frame each feed exactly ONE consumer below, so the
       // former per-stage checkpoints (pairs / withinM) were pure job
-      // barriers — everything upstream they could recompute is already
-      // persisted inside classFanBack (canon / mem / sh).
+      // barriers — what they would recompute reads the two caches
+      // classFanBack keeps (mem and the shingle arrays).
       val (_, mem, sized, withinCls, fanOut) = classFanBack(s, d)
       val pairs = sized
         .select(col("d1"), col("d2"), col("inter"),

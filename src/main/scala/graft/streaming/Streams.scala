@@ -146,14 +146,28 @@ object Streams {
     * observedMetrics("route_publish").unroutable_404. The sink's
     * `_spark_metadata` log makes it exactly-once: a batch id it has
     * already committed is skipped on replay, and `spark.read` of
-    * `outDir/data` lists only committed files. */
-  def routePublish(routed: DataFrame, outDir: String, checkpoint: String): StreamingQuery =
+    * `outDir/data` lists only committed files.
+    *
+    * The checkpoint and `outDir/data` are one unit: keep both or
+    * delete both. A fresh checkpoint numbers its batches from 0 again,
+    * and the log would skip each of them up to the last id it
+    * committed, so starting one against a published `outDir` fails
+    * instead of dropping those batches. */
+  def routePublish(routed: DataFrame, outDir: String, checkpoint: String): StreamingQuery = {
+    def logged(dir: String): Boolean =
+      Option(new java.io.File(dir).list()).exists(_.exists(!_.startsWith(".")))
+    require(logged(s"$checkpoint/offsets") ||
+        !logged(s"$outDir/data/_spark_metadata"),
+      s"$outDir/data was published under another checkpoint; " +
+        s"a fresh checkpoint at $checkpoint would skip its batch ids — " +
+        "delete both or neither")
     messages(observed(routed, "route_publish")).writeStream
       .format("parquet")
       .partitionBy("topic")
       .option("path", s"$outDir/data")
       .option("checkpointLocation", checkpoint)
       .start()
+  }
 
   /** s_route_publish_net (R9 over a real wire): the same `messages` as
     * `routePublish`, delivered to a NETWORK publish endpoint

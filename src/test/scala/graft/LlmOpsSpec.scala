@@ -98,12 +98,16 @@ class LlmOpsSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions injects cosine_sim + graft_h60 at session build") {
-    // graft_h60 has no Column-API entry, so only the native table puts
-    // it in a session: injected at session creation by
-    // spark.sql.extensions, or by GraftExtensions.register.
+    // A new session's registry holds the builtins plus what
+    // spark.sql.extensions injects; GraftExtensions.register has never
+    // run on it, so graft_h60's presence proves the injection.
+    val spark = TestSpark.spark.newSession()
     assert(spark.sessionState.functionRegistry
       .functionExists(graft.functions.GraftExtensions.h60Ident),
       "graft_h60 missing — spark.sql.extensions did not inject")
+    assert(spark.sessionState.functionRegistry.functionExists(
+      org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim")),
+      "cosine_sim missing — spark.sql.extensions did not inject")
     // value matches the engine's portable 60-bit hash derivation
     val got = spark.sql("SELECT graft_h60('abc') AS h").collect()(0).getLong(0)
     val md = java.security.MessageDigest.getInstance("MD5")

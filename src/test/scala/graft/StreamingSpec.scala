@@ -1345,6 +1345,20 @@ class StreamingSpec extends AnyFunSuite {
       "the replayed batch published its dead letter again")
   }
 
+  test("s_checkpoint_recovery: a fresh checkpoint on a published dir fails") {
+    // the sink's log would skip batch 0 of a new checkpoint, dropping it
+    val in = tmp("cdc-refresh"); val out = tmp("cdc-refresh-out")
+    write(in, s"sharedKey=k1/ord_topic/2024-01-01/${ts33(1)}-u1-orders-1.ndjson",
+      Seq(envLine(1)))
+    val q1 = Streams.routePublish(routedCdc(in), out, tmp("cdc-refresh-ck1"))
+    q1.processAllAvailable()
+    q1.stop()
+    val e = intercept[IllegalArgumentException] {
+      Streams.routePublish(routedCdc(in), out, tmp("cdc-refresh-ck2")).stop()
+    }
+    assert(e.getMessage.contains("published under another checkpoint"))
+  }
+
   test("s_enrich_static: stream-static dim join == batch golden") {
     val in = tmp("cdc-enrich")
     write(in, s"sharedKey=k1/t/2024-01-01/${ts33(1)}-u1-orders-1.ndjson",
