@@ -57,62 +57,25 @@ object AnnOps {
     ((h(s"mh-a-$i") % (P - 1)) + 1, h(s"mh-b-$i") % P)
   }
 
-  /** Canonical-corpus MinHash machinery (round 18, r17 verdict #1 — the
-    * q_dedup_report treatment for the CLUSTER consumers): every minhash
-    * verdict is a function of the two docs' exact-dup digest classes
-    * alone (same md5(lower(trim(text))) digest ⇒ same lower-text token
-    * sequence ⇒ same shingle set ⇒ same 48 affine min-hashes ⇒ same 16
-    * band buckets), so the sketch build, the banded candidate join and
-    * the exact-Jaccard verify all run ONCE per distinct class instead of
-    * once per raw doc — a replica-heavy drop no longer pays O(class²)
-    * candidate pairs inside each digest class (the exact shape that made
-    * q_dedup_report 421 s at sf3 before round 17). Raw pairs/labels fan
-    * back through the membership frame:
-    *   cross-class: identical docs share every band, so raw pair (a, b)
-    *     is a candidate iff its class reps are, and jaccard(a, b) =
-    *     jaccard(rep_a, rep_b) — each verified canonical pair fans to
-    *     members(A) x members(B) verbatim;
-    *   within-class: byte-identical-after-normalization docs share all
-    *     buckets, so a class with >= 2 copies and >= 1 shingle raw-pairs
-    *     every member with every other at inter = |set|, jaccard 1
-    *     (a shingle-less class has no bands, hence no candidates — on
-    *     the raw plan too).
-    * Oracles are UNCHANGED raw-corpus SQL, so the sf0.01/sf0.1 hash
-    * gates check the reconstruction algebra itself; QueriesSpec pins
-    * fan-back == raw-plan output on a replicated planted fixture.
+  /** Canonical-corpus MinHash (round 18, r17 verdict #1 — the
+    * q_dedup_report treatment for the CLUSTER consumers): same digest ⇒
+    * same shingle set ⇒ same 48 affine min-hashes ⇒ same 16 band
+    * buckets, so the sketch build, the banded candidate join and the
+    * exact-Jaccard verify run ONCE per exact-dup class (TextOps.classes)
+    * instead of once per raw doc — a replica-heavy drop no longer pays
+    * O(class²) candidate pairs inside each class (the shape that made
+    * q_dedup_report 421 s at sf3 before round 17). Raw pairs and labels
+    * fan back through [[TextOps.Classes]].
     *
     * No shingle df-cap is needed here (unlike q_dedup_ngram_jaccard's
     * `spark.graft.shingleDfCap`): candidates come from (band, bucket)
     * equi-joins — O(classes x bands) rows regardless of how hot any
     * single shingle is — and the shingle explode only feeds per-class
-    * aggregations, never a shingle-keyed join.
-    *
-    * Takes `canon` from TextOps.classMembership and returns (canonical
-    * verified pairs, arr — the persisted (ckey, doc_id, cnt, sh) class
-    * sketch frame, fanOut). fanOut mirrors classFanBack's
-    * short-circuit: arr's cache-filling count observes max(cnt), and a
-    * replica-free corpus (every class a singleton) provably makes the
-    * fan-back joins identity/empty, so consumers skip them. */
-  private def minhashClassOf(s: SparkSession, canon: DataFrame)
-      : (DataFrame, DataFrame, Boolean) = {
-    val (arr, maxCnt) = persistEager(
-      shingleArraysOf(s, canon
-        .select(col("ckey"), col("doc_id"), col("cnt"), col("text"))),
-      max(col("cnt")))
-    (minhashPairsOf(arr.select(col("doc_id"), col("sh"))), arr, maxCnt > 1)
-  }
-
-  /** [[minhashClassOf]] with the membership frame its consumers read
-    * again after the class sketch's build (q_dedup_minhash's fan-back
-    * joins, q_dedup_cluster's and q_curation_keep's per-doc labels):
-    * `mem` is persisted before the sketch fills, so every read shares
-    * one class assignment. Returns (mem, pairs, arr, fanOut). */
-  private def minhashClassMem(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, DataFrame, Boolean) = {
-    val (mem, canon) = TextOps.classMembership(s, d)
-    val cached = persistLazy(mem)
-    val (pairs, arr, fanOut) = minhashClassOf(s, canon)
-    (cached, pairs, arr, fanOut)
+    * aggregations, never a shingle-keyed join. */
+  private def minhashClasses(s: SparkSession, d: String)
+      : (TextOps.Classes, DataFrame) = {
+    val c = TextOps.classes(s, d)
+    (c, minhashPairsOf(c.sh.select(col("doc_id"), col("sh"))))
   }
 
   /** (doc_id, band, bucket) LSH banding of a (doc_id, sh) frame: 48
@@ -143,7 +106,7 @@ object AnnOps {
     * …) — THE shingle-array definition of the dedup family (round-15
     * review: two copies of this literal would let the report's metrics
     * drift from the standalone operators if the shingle parameters ever
-    * changed in one place), shared by [[minhashClassOf]] and
+    * changed in one place), shared by TextOps.classes and
     * q_dedup_report's cache. Since round 18 every minhash consumer
     * sketches a CANONICAL doc set (one row per normalized-text digest
     * class). Passthrough columns (e.g. the class size `cnt`) survive;
@@ -159,7 +122,7 @@ object AnnOps {
     * q_dedup_report uses to pay the corpus's ShingleHash60 pass ONCE
     * across the jaccard/simhash/minhash-cluster branches (round-14
     * verdict #5, the d96e96e sharing pattern), and since round 18 the
-    * shared kernel of [[minhashClassOf]]. */
+    * shared kernel of [[minhashClasses]]. */
   private[queries] def minhashPairsOf(docsSh: DataFrame): DataFrame = {
     val docs = docsSh
     // Persist the banded SKETCH (doc_id, band, bucket — constant bytes
@@ -178,47 +141,33 @@ object AnnOps {
         col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .dropDuplicates("d1", "d2")
-    val pairs = cand
-      .join(docs.select(col("doc_id").as("d1"), col("sh").as("sh1")), "d1")
-      .join(docs.select(col("doc_id").as("d2"), col("sh").as("sh2")), "d2")
+    verifiedPairs(cand, docs)
+  }
+
+  /** Exact-Jaccard verify of candidate pairs (d1, d2) against the full
+    * (doc_id, sh) shingle sets: (d1, d2, inter, jaccard) at jaccard
+    * >= 0.8. Shared by [[minhashPairsOf]] and q_dedup_incremental. */
+  private def verifiedPairs(cand: DataFrame, docsSh: DataFrame)
+      : DataFrame =
+    cand
+      .join(docsSh.select(col("doc_id").as("d1"), col("sh").as("sh1")), "d1")
+      .join(docsSh.select(col("doc_id").as("d2"), col("sh").as("sh2")), "d2")
       .withColumn("inter",
         size(array_intersect(col("sh1"), col("sh2"))).cast("long"))
       .select(col("d1"), col("d2"), col("inter"),
-        round(col("inter").cast("double")
-          / (size(col("sh1")) + size(col("sh2")) - col("inter")), 6)
+        TextOps.jaccard(col("inter"), size(col("sh1")), size(col("sh2")))
           .as("jaccard"))
       .filter(col("jaccard") >= 0.8)
-    pairs
-  }
 
   // ------------------------------------------------------------- queries
 
   private val pairQ: Map[String, Q] = Map(
     // Raw near-dup pair listing, detector run once per digest class
-    // (round 18 — see minhashClassOf for the fan-back algebra; oracle
-    // unchanged, raw exact-Jaccard semantics).
+    // (round 18 — see minhashClasses; oracle unchanged, raw
+    // exact-Jaccard semantics).
     "q_dedup_minhash" -> ((s, d) => {
-      val (mem, pairs, arr, fanOut) = minhashClassMem(s, d)
-      val out = if (!fanOut) pairs else {
-        val cross = pairs
-          .join(mem.select(col("cdoc").as("d1"), col("doc_id").as("x")),
-            "d1")
-          .join(mem.select(col("cdoc").as("d2"), col("doc_id").as("y")),
-            "d2")
-          .select(least(col("x"), col("y")).as("d1"),
-            greatest(col("x"), col("y")).as("d2"),
-            col("inter"), col("jaccard"))
-        val within = arr
-          .filter(col("cnt") >= 2 && size(col("sh")) > 0)
-          .select(col("ckey"), size(col("sh")).cast("long").as("inter"))
-          .join(mem.select(col("ckey"), col("doc_id").as("x")), "ckey")
-          .join(mem.select(col("ckey"), col("doc_id").as("y")), "ckey")
-          .filter(col("x") < col("y"))
-          .select(col("x").as("d1"), col("y").as("d2"), col("inter"),
-            lit(1.0).as("jaccard"))
-        cross.unionByName(within)
-      }
-      out.orderBy("d1", "d2")
+      val (c, pairs) = minhashClasses(s, d)
+      TextOps.jaccardFanBack(c, pairs).orderBy("d1", "d2")
     }),
 
     // Incremental near-dup dedup against a PERSISTED corpus index (round
@@ -278,18 +227,7 @@ object AnnOps {
           col("a.doc_id") < col("b.doc_id"))
         .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       val cand = candOld.unionByName(candNew).dropDuplicates("d1", "d2")
-      val shAll = newSh.unionByName(idxDocs)
-      val pairs = cand
-        .join(shAll.select(col("doc_id").as("d1"), col("sh").as("sh1")), "d1")
-        .join(shAll.select(col("doc_id").as("d2"), col("sh").as("sh2")), "d2")
-        .withColumn("inter",
-          size(array_intersect(col("sh1"), col("sh2"))).cast("long"))
-        .select(col("d1"), col("d2"), col("inter"),
-          round(col("inter").cast("double")
-            / (size(col("sh1")) + size(col("sh2")) - col("inter")), 6)
-            .as("jaccard"))
-        .filter(col("jaccard") >= 0.8)
-      pairs.orderBy("d1", "d2")
+      verifiedPairs(cand, newSh.unionByName(idxDocs)).orderBy("d1", "d2")
     }),
 
     // Duplicate-cluster assignment — the step a real curation pipeline
@@ -344,21 +282,20 @@ object AnnOps {
       // PLUS every lang/quality column by digest, and dedupCluster's
       // internal class assignment — and dedupCluster's cluster_size
       // window, which this operator never reads. Both canonicality bits
-      // now ride the ONE shared classMembership frame (ids-only digest
+      // now ride the ONE shared TextOps.classes frame (ids-only digest
       // shuffle; exact_canonical = doc_id == cdoc IS the old rn = 1),
       // lang/quality stay stateless projections on the scan, and the
       // near-dup side stops at the per-doc label fan-back (no size
       // window).
-      val (mem, pairs, arr, fanOut) = minhashClassMem(s, d)
-      val labels = dedupClusterLabelsFrom(pairs)
-      val near = clusterPerDoc(mem, arr, labels, fanOut)
+      val (c, pairs) = minhashClasses(s, d)
+      val near = clusterPerDoc(c, dedupClusterLabelsFrom(pairs))
         .select(col("doc_id"),
           (col("doc_id") === col("cluster_id")).as("near_canonical"))
       val base = TextOps.withQualityCols(TextOps.withLangCols(
           Tables(s, d, "documents")))
         .select(col("doc_id"), col("pred_lang"), col("quality"))
       val out = base
-        .join(mem.select(col("doc_id"),
+        .join(c.mem.select(col("doc_id"),
           (col("doc_id") === col("cdoc")).as("exact_canonical")),
           "doc_id")
         .join(near, "doc_id")
@@ -393,16 +330,16 @@ object AnnOps {
     *     own doc_id.
     * The corpus never rejoins by a second scan: the membership frame
     * already carries every doc_id. */
-  private def clusterPerDoc(mem: DataFrame, arr: DataFrame,
-      labels: DataFrame, fanOut: Boolean): DataFrame =
-    if (!fanOut)
-      mem.select(col("doc_id"))
+  private def clusterPerDoc(c: TextOps.Classes, labels: DataFrame)
+      : DataFrame =
+    if (!c.fanOut)
+      c.mem.select(col("doc_id"))
         .join(labels, Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("label"), col("doc_id")).as("cluster_id"))
     else
-      mem
-        .join(arr.select(col("ckey"),
+      c.mem
+        .join(c.sh.select(col("ckey"),
           (size(col("sh")) > 0).as("has_sh")), "ckey")
         .join(labels.select(col("doc_id").as("cdoc"), col("label")),
           Seq("cdoc"), "left")
@@ -412,10 +349,9 @@ object AnnOps {
               .otherwise(col("doc_id"))).as("cluster_id"))
 
   private def dedupCluster(s: SparkSession, d: String): DataFrame = {
-    val (mem, pairs, arr, fanOut) = minhashClassMem(s, d)
-    val labels = dedupClusterLabelsFrom(pairs)
+    val (c, pairs) = minhashClasses(s, d)
     val csz = Window.partitionBy("cluster_id")
-    clusterPerDoc(mem, arr, labels, fanOut)
+    clusterPerDoc(c, dedupClusterLabelsFrom(pairs))
       .withColumn("cluster_size", count(lit(1)).over(csz))
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
         (col("doc_id") === col("cluster_id")).as("is_canonical"))

@@ -53,8 +53,7 @@ object LlmOps {
       // per digest IS the rn=1 row of the doc_id-ordered window.
       val docs = Tables(s, d, "documents")
       val cls = docs
-        .select(md5(lower(trim(col("text"))).cast("binary")).as("digest"),
-          col("doc_id"))
+        .select(TextOps.digest(col("text")).as("digest"), col("doc_id"))
         .groupBy("digest")
         .agg(min(col("doc_id")).as("doc_id"),
           count(lit(1)).as("n_copies"))
@@ -128,11 +127,10 @@ object LlmOps {
       // constant-bytes-per-doc shingle-array frame.
       // class assignment shuffles only (digest, doc_id); canonical text
       // comes back through a doc_id join against the scan — text never
-      // shuffles by digest (classFanBack's construction)
+      // shuffles by digest (TextOps.classes's construction)
       val docsRaw = Tables.spread(s, d, "documents")
       val cls = docsRaw
-        .select(md5(lower(trim(col("text"))).cast("binary")).as("digest"),
-          col("doc_id"))
+        .select(TextOps.digest(col("text")).as("digest"), col("doc_id"))
         .groupBy("digest")
         .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("cnt"))
       val canon = docsRaw.select(col("doc_id"), col("text"))
@@ -150,8 +148,8 @@ object LlmOps {
       import scala.concurrent.ExecutionContext.Implicits.global
       // cross-class set-similarity counts, class-size weighted
       val jcF = Future(withCnts(sized).agg(
-        coalesce(sum(when(round(col("inter").cast("double")
-          / (col("n1") + col("n2") - col("inter")), 6) >= 0.8,
+        coalesce(sum(when(
+          TextOps.jaccard(col("inter"), col("n1"), col("n2")) >= 0.8,
           col("cnt1") * col("cnt2"))), lit(0L)).as("jac"),
         coalesce(sum((when(round(col("inter").cast("double") / col("n1"),
             6) >= 0.85, 1L).otherwise(0L)
@@ -228,29 +226,23 @@ object LlmOps {
     "q_dedup_pipeline" -> ((s, d) => {
       // Round-18 re-plan (guide §2.3): the old digest window carried
       // the full TEXT payload (plus lang/source) through the digest
-      // exchange. The shared classMembership frames shuffle only
+      // exchange. The shared class frames (TextOps.classes) shuffle only
       // (digest, doc_id); the canonical rows' text comes back through a
-      // doc_id join (classFanBack's construction), and the per-doc
-      // verdict columns are pure id/count algebra off the membership
-      // frame (exact_canonical = doc_id == cdoc, n_copies = cnt — the
-      // same rows the rn/count window produced). Detector stages and
-      // the keep rule are unchanged.
-      val (mem0, canon) = TextOps.classMembership(s, d)
-      // read by the shingle cache's build and by the per-doc verdict
-      val mem = graft.queries.persistLazy(mem0)
-      val sized = TextOps.shinglePairSizedFromArrays(s,
-        graft.queries.persistEager(AnnOps.shingleArraysOf(s,
-          canon.select(col("doc_id"), col("text")))))
-      val nd = sized.select(col("d1"), col("d2"),
-          round(col("inter").cast("double")
-            / (col("n1") + col("n2") - col("inter")), 6).as("jaccard"))
+      // doc_id join, and the per-doc verdict columns are pure id/count
+      // algebra off the membership frame (exact_canonical = doc_id ==
+      // cdoc, n_copies = cnt — the same rows the rn/count window
+      // produced). Detector stages and the keep rule are unchanged.
+      val c = TextOps.classes(s, d)
+      val nd = TextOps.shinglePairSizedFromArrays(s, c.sh)
+        .select(col("d1"), col("d2"),
+          TextOps.jaccard(col("inter"), col("n1"), col("n2")).as("jaccard"))
         .filter(col("jaccard") >= 0.8)
       val partners = nd.select(col("d1").as("doc_id"))
         .unionByName(nd.select(col("d2").as("doc_id")))
         .groupBy("doc_id").agg(count(lit(1)).as("nd_partners"))
       val droppedNd = nd.select(col("d2").as("doc_id")).distinct()
         .withColumn("nd_dropped", lit(true))
-      mem
+      c.mem
         .select(col("doc_id"), col("cnt").as("n_copies"),
           (col("doc_id") === col("cdoc")).as("exact_canonical"))
         .join(partners, Seq("doc_id"), "left")

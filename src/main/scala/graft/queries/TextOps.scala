@@ -78,7 +78,7 @@ object TextOps {
     * dashboard) over a caller-PERSISTED (doc_id, sh: distinct-shingle
     * hash array) frame from AnnOps.shingleArraysOf — since round 17
     * always a CANONICAL doc set (one row per exact-dup class; the
-    * per-class fan-back lives in [[classFanBack]]): pair intersection
+    * per-class fan-back lives in [[Classes]]): pair intersection
     * counts from the shingle equi-join with BOTH set sizes attached.
     * Honors `spark.graft.shingleDfCap` (df-capped candidate generation
     * with exact full-set verify — the O(df²) join-row bound). One
@@ -136,90 +136,113 @@ object TextOps {
         col("s1.n").as("n1"), col("s2.n").as("n2"))
   }
 
-  /** Class-assignment frames shared by [[classFanBack]] and the minhash
-    * cluster family (AnnOps, round 18): `mem` (ckey, doc_id, cdoc, cnt —
-    * every raw doc keyed by its class and the class canonical) and
-    * `canon` (ckey, doc_id, text, cnt, len — one row per class,
-    * lowest-doc_id representative). Neither is persisted: each caller
-    * persists `mem` before its first action (canon's build reads it,
-    * and so does every fan-back or per-doc verdict), persists the
-    * derived frame it re-reads and observes max(cnt) on that fill.
+  /** The exact-dup class key of the dedup family: two texts with the
+    * same md5(lower(trim(text))) digest have the same lower-text token
+    * sequence, hence the same shingle set, minhash bands and simhash
+    * signature, so every set-similarity verdict is a function of the
+    * two docs' classes alone. */
+  private[graft] def digest(text: Column): Column =
+    md5(lower(trim(text)).cast("binary"))
+
+  /** The family's pair score: 6-dp Jaccard from the intersection and
+    * both set sizes. */
+  private[queries] def jaccard(inter: Column, n1: Column, n2: Column)
+      : Column =
+    round(inter.cast("double") / (n1 + n2 - inter), 6)
+
+  /** One exact-dup class assignment of the documents and its canonical
+    * shingle arrays, built by [[classes]]:
+    *  - `mem` (ckey, doc_id, cdoc, cnt): every raw doc keyed by its
+    *    class, the class canonical (lowest doc_id) and the class size;
+    *    cached lazily, so canon's build fills it and every later read
+    *    shares one class assignment;
+    *  - `canon` (ckey, doc_id, text, cnt, len): one row per class;
+    *  - `sh` (ckey, doc_id, cnt, len, sh): canon's distinct 3-shingle
+    *    hash arrays, cached eagerly;
+    *  - `fanOut`: some class has >= 2 members (sh's fill observes
+    *    max(cnt), no extra job).
+    *
+    * A pair detector runs once per class on the canonical rows, and
+    * [[cross]] and [[within]] rebuild the raw pair list:
+    *  - cross-class: a verdict read only from the two class
+    *    representatives holds for every member pair, so a canonical
+    *    pair (a, b) stands for members(a) x members(b);
+    *  - within-class: the members of a class are identical under the
+    *    key, so a class with >= 2 copies and >= 1 shingle pairs every
+    *    member with every other (a shingle-less text has no candidates,
+    *    on the raw plan too) at the identical-pair score.
+    * When `fanOut` is false mem maps every canonical pair to itself and
+    * no class can self-pair, so callers emit the canonical pairs as the
+    * raw ones and skip both joins. The oracles are raw-corpus SQL, and
+    * AnnSpec pins fan-back == raw semantics on a replicated corpus. */
+  private[queries] final case class Classes(mem: DataFrame,
+      canon: DataFrame, sh: DataFrame, fanOut: Boolean) {
+    /** `pairs` keyed by canonical ids in columns `a` and `b`, joined to
+      * every member pair: member ids in `x` (of a) and `y` (of b). */
+    def cross(pairs: DataFrame, a: String, b: String): DataFrame =
+      pairs
+        .join(mem.select(col("cdoc").as(a), col("doc_id").as("x")), a)
+        .join(mem.select(col("cdoc").as(b), col("doc_id").as("y")), b)
+
+    /** (x, y, n_sh, len): the member pairs of every class with >= 2
+      * copies and >= 1 shingle, with the class's shingle count and text
+      * length; x != y when `directed`, else x < y. */
+    def within(directed: Boolean): DataFrame = {
+      def member(id: String) =
+        mem.select(col("ckey"), col("doc_id").as(id))
+      sh.filter(col("cnt") >= 2 && size(col("sh")) > 0)
+        .select(col("ckey"), size(col("sh")).cast("long").as("n_sh"),
+          col("len"))
+        .join(member("x"), "ckey").join(member("y"), "ckey")
+        .filter(if (directed) col("x") =!= col("y") else col("x") < col("y"))
+    }
+  }
+
+  /** The [[Classes]] of the documents under `key` ([[digest]] by
+    * default; q_dedup_fuzzy_edit keys on the raw text).
     *
     * Class assignment shuffles only (ckey, doc_id) — never text — as
     * ONE unordered window over that id frame (min + count per ckey),
-    * which yields the membership frame `mem` directly: a groupBy +
-    * join-back shape would shuffle the same (ckey, doc_id) bytes TWICE
-    * (guide §2.4 — two operations keyed the same way share one
-    * exchange). The canonical rows' text comes back through a doc_id
-    * join against the scan (AQE broadcasts the class side at fixture
-    * scale; at 100 TB it is a doc_id-keyed equi join, still cheaper
-    * than shuffling every text copy by ckey). */
-  private[queries] def classMembership(
-      s: org.apache.spark.sql.SparkSession, d: String,
-      key: Column => Column = t => md5(lower(trim(t)).cast("binary")))
-      : (DataFrame, DataFrame) = {
+    * which yields the membership frame directly: a groupBy + join-back
+    * shape would shuffle the same (ckey, doc_id) bytes TWICE (guide
+    * §2.4 — two operations keyed the same way share one exchange). The
+    * canonical rows' text comes back through a doc_id join against the
+    * scan (AQE broadcasts the class side at fixture scale; at 100 TB it
+    * is a doc_id-keyed equi join, still cheaper than shuffling every
+    * text copy by ckey). */
+  private[queries] def classes(s: org.apache.spark.sql.SparkSession,
+      d: String, key: Column => Column = digest): Classes = {
     val docs = graft.Tables(s, d, "documents")
     val w = Window.partitionBy("ckey")
-    val mem = docs
+    val mem = persistLazy(docs
       .select(key(col("text")).as("ckey"), col("doc_id"))
       .withColumn("cdoc", min(col("doc_id")).over(w))
-      .withColumn("cnt", count(lit(1)).over(w))
+      .withColumn("cnt", count(lit(1)).over(w)))
     val canon = docs.select(col("doc_id"), col("text"))
       .join(mem.filter(col("doc_id") === col("cdoc"))
         .select(col("ckey"), col("doc_id"), col("cnt")), "doc_id")
       .select(col("ckey"), col("doc_id"), col("text"), col("cnt"),
         length(col("text")).cast("long").as("len"))
-    (mem, canon)
-  }
-
-  /** Exact-dup class machinery for the raw-pair FAN-BACK detectors
-    * (round 17, r16 verdict #3 generalized): the pair-emitting
-    * detectors' verdicts are functions of the two docs' class
-    * representatives alone, so each detector runs once per class on the
-    * canonical corpus and the raw pair list is reconstructed by fanning
-    * canonical pairs back through the membership frame — the output
-    * stays the full declared pair list (inherently quadratic in
-    * replicas), but the candidate join, set verify and per-pair DP drop
-    * to the distinct-document load. `key` picks the invariance class:
-    * the family digest md5(lower(trim(text))) for the set-similarity
-    * detectors (same digest ⇒ same lower-text token sequence ⇒ same
-    * shingle set), md5(text) for byte-exact invariance (levenshtein).
-    *
-    * Returns: canon (ckey, doc_id, text, cnt, len — one row per class,
-    * lowest-doc_id representative), mem (ckey, cdoc, doc_id — every raw
-    * doc keyed by its class and the class canonical; cached, its cache
-    * fills as the shingle cache's build reads it, so the fan-back joins
-    * reuse one class assignment), sized (canonical candidate pairs
-    * with set sizes, from the shared shingle machinery), withinCls (ckey, n_sh, len for classes the raw plan
-    * would self-pair: >= 2 copies and >= 1 shingle), and fanOut.
-    *
-    * `fanOut` is the round-18 short-circuit
-    * (r17 verdict #4): the shingle cache carries each canonical's class
-    * scalars (ckey, cnt, len), so its filling count also observes the
-    * corpus's max class size, and when every class is a singleton
-    * (max(cnt) = 1) the membership fan-out joins and the within-class
-    * branches are PROVABLY identity/empty — mem maps every canonical
-    * pair to itself and no class can self-pair — so consumers skip
-    * them and emit the canonical pairs directly. The branch is a
-    * function of the data alone (same rows either way; QueriesSpec
-    * pins fan-back == raw on a replicated fixture, and the sf0.01/0.1
-    * oracle gates run the short-circuited path against the raw-corpus
-    * SQL). */
-  private[queries] def classFanBack(
-      s: org.apache.spark.sql.SparkSession, d: String,
-      key: Column => Column = t => md5(lower(trim(t)).cast("binary")))
-      : (DataFrame, DataFrame, DataFrame, DataFrame, Boolean) = {
-    val (mem0, canon) = classMembership(s, d, key)
-    val mem = persistLazy(mem0)
     val (sh, maxCnt) = persistEager(AnnOps.shingleArraysOf(s, canon
       .select(col("ckey"), col("doc_id"), col("cnt"), col("len"),
         col("text"))), max(col("cnt")))
-    val withinCls = sh
-      .filter(col("cnt") >= 2 && size(col("sh")) > 0)
-      .select(col("ckey"), size(col("sh")).cast("long").as("n_sh"),
-        col("len"))
-    (canon, mem, shinglePairSizedFromArrays(s, sh), withinCls, maxCnt > 1)
+    Classes(mem, canon, sh, maxCnt > 1)
   }
+
+  /** Raw (d1, d2, inter, jaccard) pairs from the canonical ones: a
+    * cross-class pair keeps its score under the id reorder, and a
+    * within-class pair scores inter = |set|, jaccard 1. Shared by
+    * q_dedup_ngram_jaccard and q_dedup_minhash. */
+  private[queries] def jaccardFanBack(c: Classes, pairs: DataFrame)
+      : DataFrame =
+    if (!c.fanOut) pairs
+    else c.cross(pairs, "d1", "d2")
+      .select(least(col("x"), col("y")).as("d1"),
+        greatest(col("x"), col("y")).as("d2"),
+        col("inter"), col("jaccard"))
+      .unionByName(c.within(directed = false)
+        .select(col("x").as("d1"), col("y").as("d2"),
+          col("n_sh").as("inter"), lit(1.0).as("jaccard")))
 
   val q: Map[String, Q] = Map(
     // n-gram(1) profile heuristic: occurrence count per language marker
@@ -493,45 +516,19 @@ object TextOps {
     // plan, unchanged at fixture scale.
     // Round-17 fan-back re-plan (r16 verdict #3 generalized — this key
     // scaled 20.3x on the 10x sf1 step): detector on the exact-canonical
-    // corpus, raw pairs reconstructed through the class membership
-    // frame. inter/jaccard are digest-class-invariant (same digest ⇒
-    // same shingle set), so cross-class pairs fan verbatim (both
-    // symmetric) and a dup class with >= 1 shingle self-pairs at
-    // inter = |set|, jaccard 1. Oracle unchanged — raw semantics — so
-    // the sf0.01 hash gate checks the reconstruction itself.
+    // corpus, raw pairs rebuilt by `jaccardFanBack` (see [[Classes]]).
+    // Oracle unchanged — raw semantics — so the sf0.01 hash gate checks
+    // the reconstruction itself.
     "q_dedup_ngram_jaccard" -> ((s, d) => {
-      // Round-17 optimization pass: the candidate-pair filter and the
-      // within-class frame each feed exactly ONE consumer below, so the
-      // former per-stage checkpoints (pairs / withinM) were pure job
-      // barriers — what they would recompute reads the two caches
-      // classFanBack keeps (mem and the shingle arrays).
-      val (_, mem, sized, withinCls, fanOut) = classFanBack(s, d)
-      val pairs = sized
+      // The candidate-pair filter feeds exactly ONE consumer, so it
+      // composes lazily over the two caches `classes` keeps (mem and
+      // the shingle arrays).
+      val c = classes(s, d)
+      val pairs = shinglePairSizedFromArrays(s, c.sh)
         .select(col("d1"), col("d2"), col("inter"),
-          round(col("inter").cast("double")
-            / (col("n1") + col("n2") - col("inter")), 6).as("jaccard"))
+          jaccard(col("inter"), col("n1"), col("n2")).as("jaccard"))
         .filter(col("jaccard") >= 0.8)
-      // Replica-free short-circuit (round 18, r17 verdict #4): every
-      // class is a singleton, so the membership joins map each
-      // canonical pair to itself and withinCls is empty — the
-      // canonical pairs ARE the raw pairs.
-      val out = if (!fanOut) pairs else {
-        val cross = pairs
-          .join(mem.select(col("cdoc").as("d1"), col("doc_id").as("x")),
-            "d1")
-          .join(mem.select(col("cdoc").as("d2"), col("doc_id").as("y")),
-            "d2")
-          .select(least(col("x"), col("y")).as("d1"),
-            greatest(col("x"), col("y")).as("d2"),
-            col("inter"), col("jaccard"))
-        val within = withinCls
-          .join(mem.select(col("ckey"), col("doc_id").as("x")), "ckey")
-          .join(mem.select(col("ckey"), col("doc_id").as("y")), "ckey")
-          .filter(col("x") < col("y"))
-          .select(col("x").as("d1"), col("y").as("d2"),
-            col("n_sh").as("inter"), lit(1.0).as("jaccard"))
-        cross.unionByName(within)
-      }
+      val out = jaccardFanBack(c, pairs)
       out.orderBy("d1", "d2")
     }),
 
@@ -556,16 +553,12 @@ object TextOps {
       // candidate self-join per side (sized is lazy — round 16,
       // measured ~2x the jaccard twin's time for identical machinery).
       // Round-17 fan-back (19.9x on the sf1 step): detector on the
-      // canonical corpus, directed raw rows reconstructed — a directed
-      // canonical row (a→b) fans to members(a) x members(b) verbatim
-      // (containment is class-invariant and direction rides the row,
-      // so no side-swap is needed), and a dup class with >= 1 shingle
-      // contributes all n(n-1) ordered member pairs at containment 1.
-      // Round-17 optimization pass: single-consumer stages compose
-      // lazily (no per-stage checkpoint barriers — the jaccard twin's
-      // comment).
-      val (_, mem, sized, withinCls, fanOut) = classFanBack(s, d)
-      val dir = sized.select(explode(array(
+      // canonical corpus, directed raw rows rebuilt through [[Classes]]
+      // — direction rides the row, so a cross-class row needs no side
+      // swap, and a dup class contributes all n(n-1) ordered member
+      // pairs at containment 1. Single-consumer stages compose lazily.
+      val c = classes(s, d)
+      val dir = shinglePairSizedFromArrays(s, c.sh).select(explode(array(
           struct(col("d1").as("d_sub"), col("d2").as("d_super"),
             col("inter"),
             round(col("inter").cast("double") / col("n1"), 6)
@@ -577,24 +570,13 @@ object TextOps {
         .select(col("r.d_sub").as("d_sub"), col("r.d_super").as("d_super"),
           col("r.inter").as("inter"), col("r.containment").as("containment"))
         .filter(col("containment") >= 0.85)
-      // Replica-free short-circuit (round 18, r17 verdict #4): see the
-      // jaccard twin — the directed canonical rows ARE the raw rows.
-      val out = if (!fanOut) dir else {
-        val cross = dir
-          .join(mem.select(col("cdoc").as("d_sub"), col("doc_id").as("x")),
-            "d_sub")
-          .join(mem.select(col("cdoc").as("d_super"),
-            col("doc_id").as("y")), "d_super")
+      val out = if (!c.fanOut) dir
+        else c.cross(dir, "d_sub", "d_super")
           .select(col("x").as("d_sub"), col("y").as("d_super"),
             col("inter"), col("containment"))
-        val within = withinCls
-          .join(mem.select(col("ckey"), col("doc_id").as("x")), "ckey")
-          .join(mem.select(col("ckey"), col("doc_id").as("y")), "ckey")
-          .filter(col("x") =!= col("y"))
-          .select(col("x").as("d_sub"), col("y").as("d_super"),
-            col("n_sh").as("inter"), lit(1.0).as("containment"))
-        cross.unionByName(within)
-      }
+          .unionByName(c.within(directed = true)
+            .select(col("x").as("d_sub"), col("y").as("d_super"),
+              col("n_sh").as("inter"), lit(1.0).as("containment")))
       out.orderBy("d_sub", "d_super")
     }),
 
@@ -623,50 +605,32 @@ object TextOps {
     // distinct RAW text (md5(text) class — stricter than the dedup
     // family's lower(trim) digest precisely because levenshtein is
     // case/whitespace-sensitive, so this needs NO fixture assumption),
-    // and the raw pair list is reconstructed exactly:
-    //   cross-class: each verified canonical pair fans to members x
-    //     members via two equi-joins (output-proportional — the
-    //     contract is the full pair list), len1/len2 swapped when the
-    //     reordered ids swap sides;
-    //   within-class: byte-identical docs are candidates iff the text
-    //     has >= 1 shingle (as on the raw plan) and then score
-    //     edit 0 / rel 0 / dup — a members self-join per dup class.
+    // and the raw pair list is rebuilt through [[Classes]]: a
+    // cross-class pair swaps len1/len2 when the reordered ids swap
+    // sides, and byte-identical docs score edit 0 / rel 0 / dup.
     // Oracle unchanged (raw semantics) — the sf0.01 hash gate checks
     // the reconstruction, not a re-statement of it.
     "q_dedup_fuzzy_edit" -> ((s, d) => {
-      val (canon, mem, sized, withinCls, fanOut) =
-        classFanBack(s, d, t => md5(t.cast("binary")))
-      val cands = sized
-        .filter(round(col("inter").cast("double")
-          / (col("n1") + col("n2") - col("inter")), 6) >= 0.5)
+      val c = classes(s, d, t => md5(t.cast("binary")))
+      val cands = shinglePairSizedFromArrays(s, c.sh)
+        .filter(jaccard(col("inter"), col("n1"), col("n2")) >= 0.5)
         .select("d1", "d2")
       // both verify sides read the canonical texts
-      val t = persistLazy(canon.select(col("doc_id"), col("text")))
-      // O(len²) DP once per distinct-text candidate pair — the win.
-      // Round-17 optimization pass: cands → verified → cross is a
-      // single-consumer chain over persisted inputs, so it composes
-      // lazily (the former per-stage checkpoints were pure job
-      // barriers). The one checkpoint below stays: whole-stage codegen
-      // defers `edit_dist` into the fan-out joins' match loops, so
-      // without a barrier above them levenshtein would run per fanned
-      // row rather than per pair.
-      val verified = cands
+      val t = persistLazy(c.canon.select(col("doc_id"), col("text")))
+      // O(len²) DP once per distinct-text candidate pair — the win. The
+      // cache is the barrier that keeps it so: whole-stage codegen
+      // defers `edit_dist` into the fan-out joins' match loops, so over
+      // an uncached frame levenshtein would run once per fanned row.
+      // PlanDigestSpec checks it runs only inside this cache's build.
+      val verified = persistLazy(cands
         .join(t.select(col("doc_id").as("d1"), col("text").as("t1")), "d1")
         .join(t.select(col("doc_id").as("d2"), col("text").as("t2")), "d2")
         .select(col("d1"), col("d2"),
           length(col("t1")).cast("long").as("len1"),
           length(col("t2")).cast("long").as("len2"),
-          levenshtein(col("t1"), col("t2")).cast("long").as("edit_dist"))
-      // Replica-free short-circuit (round 18, r17 verdict #4): the
-      // verified canonical pairs ARE the raw pairs (d1 < d2 already
-      // holds on canonical ids, so the least/greatest projection is
-      // the identity) and no class can self-pair.
-      val base = if (!fanOut) verified else {
-        val cross = verified
-          .join(mem.select(col("cdoc").as("d1"), col("doc_id").as("x")),
-            "d1")
-          .join(mem.select(col("cdoc").as("d2"), col("doc_id").as("y")),
-            "d2")
+          levenshtein(col("t1"), col("t2")).cast("long").as("edit_dist")))
+      val base = if (!c.fanOut) verified
+        else c.cross(verified, "d1", "d2")
           .select(least(col("x"), col("y")).as("d1"),
             greatest(col("x"), col("y")).as("d2"),
             when(col("x") < col("y"), col("len1")).otherwise(col("len2"))
@@ -674,19 +638,14 @@ object TextOps {
             when(col("x") < col("y"), col("len2")).otherwise(col("len1"))
               .as("len2"),
             col("edit_dist"))
-        val within = withinCls
-          .join(mem.select(col("ckey"), col("doc_id").as("x")), "ckey")
-          .join(mem.select(col("ckey"), col("doc_id").as("y")), "ckey")
-          .filter(col("x") < col("y"))
-          .select(col("x").as("d1"), col("y").as("d2"),
-            col("len").as("len1"), col("len").as("len2"),
-            lit(0L).as("edit_dist"))
-        cross.unionByName(within)
-      }
-      checkpointed(base
+          .unionByName(c.within(directed = false)
+            .select(col("x").as("d1"), col("y").as("d2"),
+              col("len").as("len1"), col("len").as("len2"),
+              lit(0L).as("edit_dist")))
+      base
         .withColumn("rel_edit", round(col("edit_dist").cast("double")
           / greatest(col("len1"), col("len2")), 6))
-        .withColumn("is_dup", col("rel_edit") <= 0.2))
+        .withColumn("is_dup", col("rel_edit") <= 0.2)
         .orderBy("d1", "d2")
     }),
 

@@ -27,7 +27,9 @@ import org.apache.spark.sql.functions._
   *  2. a checkpoint cuts a loop's lineage (PageRank, propagateMinLabels);
   *  3. removing it slows a key through it at sf0.1 or sf1 by more than
   *     that key's with-barrier pass spread — each such site is listed
-  *     with its measurement in PlanDigestSpec.
+  *     with its measurement in PlanDigestSpec. One site is: the verified
+  *     pairs of q_dedup_fuzzy_edit, read once, whose cache keeps
+  *     levenshtein out of the class fan-back joins above it.
   * The three helpers below are the only code under `queries/` that
   * persists, checkpoints or unpersists. */
 package object queries {

@@ -68,12 +68,12 @@ final class IngestServer(bindAddr: String, landingDir: String,
   server.createContext("/", new HttpHandler {
     override def handle(ex: HttpExchange): Unit = {
       try {
-        if (ex.getRequestMethod != "POST") { reply(ex, 405, "POST only") }
+        if (ex.getRequestMethod != "POST") { status(ex, 405) }
         else {
           val key = sharedKey(ex)
           if (!authorized(key)) {
             rejected.incrementAndGet() // the 401 the producer sees
-            reply(ex, 401, "invalid sharedKey")
+            status(ex, 401)
           } else {
             val rel = ex.getRequestURI.getPath.stripPrefix("/")
             // Encode the accepted key into the landed path for the stream's
@@ -84,7 +84,7 @@ final class IngestServer(bindAddr: String, landingDir: String,
             // path traversal guard: the landed file must stay inside the
             // landing dir even for a hostile ../ URL
             if (!dest.startsWith(Paths.get(landingDir).normalize())) {
-              reply(ex, 400, "bad path")
+              status(ex, 400)
             } else {
               Files.createDirectories(dest.getParent)
               // land atomically: directory sources must never list a
@@ -102,10 +102,7 @@ final class IngestServer(bindAddr: String, landingDir: String,
                 throw e
               }
               landed.incrementAndGet()
-              // Headers only, so the ack leaves in one segment: a body
-              // written after the flushed headers waits under Nagle for
-              // the client's delayed ACK, about 40 ms per POST.
-              ex.sendResponseHeaders(201, -1)
+              status(ex, 201)
             }
           }
         }
@@ -120,7 +117,7 @@ final class IngestServer(bindAddr: String, landingDir: String,
   server.createContext("/healthz", new HttpHandler {
     override def handle(ex: HttpExchange): Unit =
       try {
-        if (ex.getRequestMethod != "GET") reply(ex, 405, "GET only")
+        if (ex.getRequestMethod != "GET") status(ex, 405)
         else if (!draining) reply(ex, 200, "OK")
         else reply(ex, 503, "shutting down")
       } finally ex.close()
@@ -135,7 +132,7 @@ final class IngestServer(bindAddr: String, landingDir: String,
   server.createContext("/metrics", new HttpHandler {
     override def handle(ex: HttpExchange): Unit =
       try {
-        if (ex.getRequestMethod != "GET") reply(ex, 405, "GET only")
+        if (ex.getRequestMethod != "GET") status(ex, 405)
         else try {
           val m = Map("rejected_401" -> rejected.get(),
             "landed" -> landed.get()) ++ extraMetrics()
@@ -173,12 +170,12 @@ final class IngestServer(bindAddr: String, landingDir: String,
   server.createContext("/debug/pprof/profile", new HttpHandler {
     override def handle(ex: HttpExchange): Unit =
       try {
-        if (ex.getRequestMethod != "GET") reply(ex, 405, "GET only")
+        if (ex.getRequestMethod != "GET") status(ex, 405)
         else if (!authorized(sharedKey(ex))) {
           rejected.incrementAndGet()
-          reply(ex, 401, "invalid sharedKey")
+          status(ex, 401)
         } else if (!profilePermit.tryAcquire()) {
-          reply(ex, 429, "a profile is already running")
+          status(ex, 429)
         } else {
           try {
             val q = ex.getRequestURI.getQuery
@@ -194,10 +191,10 @@ final class IngestServer(bindAddr: String, landingDir: String,
   server.createContext("/debug/pprof/goroutine", new HttpHandler {
     override def handle(ex: HttpExchange): Unit =
       try {
-        if (ex.getRequestMethod != "GET") reply(ex, 405, "GET only")
+        if (ex.getRequestMethod != "GET") status(ex, 405)
         else if (!authorized(sharedKey(ex))) {
           rejected.incrementAndGet()
-          reply(ex, 401, "invalid sharedKey")
+          status(ex, 401)
         } else reply(ex, 200, Profiler.threadDump())
       } catch {
         case e: Exception => reply(ex, 500, s"dump failure: ${e.getMessage}")
@@ -214,6 +211,13 @@ final class IngestServer(bindAddr: String, landingDir: String,
     * the producer quiesces. Mirrors the reference's cancel-then-drain
     * sequence (server.go:86-96). */
   def beginShutdown(): Unit = draining = true
+
+  /** Headers only, so the reply leaves in one segment: a body written
+    * after the flushed headers waits under Nagle for the client's
+    * delayed ACK, about 40 ms per request on a kept-alive connection.
+    * The ack and every refusal go this way; their codes say it all. */
+  private def status(ex: HttpExchange, code: Int): Unit =
+    ex.sendResponseHeaders(code, -1)
 
   private def reply(ex: HttpExchange, code: Int, msg: String,
     contentType: String = "text/plain"): Unit = {

@@ -574,7 +574,7 @@ object Streams {
     * against the persisted index). */
   def dedupWithinWatermark(docs: DataFrame): DataFrame =
     docs
-      .withColumn("digest", md5(lower(trim(col("text"))).cast("binary")))
+      .withColumn("digest", graft.queries.TextOps.digest(col("text")))
       .withWatermark("ts", "10 minutes")
       .dropDuplicatesWithinWatermark(Seq("digest"))
       .select("doc_id", "digest", "lang", "source")

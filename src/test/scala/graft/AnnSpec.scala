@@ -33,6 +33,42 @@ class AnnSpec extends AnyFunSuite {
     assert(c1 != seeds, "training left every centroid at its seed")
   }
 
+  /** The sf0.001 documents unioned with a copy whose ids are offset, so
+    * every exact-dup class has two members and the dedup family takes
+    * its class fan-back branch; with the driver-side shingle sets and
+    * texts of every doc, for ground truth computed independently. */
+  private lazy val replicated = {
+    import org.apache.spark.sql.functions._
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val off = 10000000000L
+    val fix = java.nio.file.Files.createTempDirectory("graft-mhfan").toString
+    docs.unionByName(docs.withColumn("doc_id", col("doc_id") + off))
+      .coalesce(1).write.parquet(s"$fix/documents.parquet")
+    val rows = docs.select(col("doc_id"), col("text"),
+        graft.functions.ShingleHash60(spark, col("text"), 3,
+          distinct = true).as("sh")).collect()
+    val base = rows.map(r =>
+      r.getLong(0) -> (r.getString(1), r.getSeq[Long](2).toSet)).toMap
+    val all = base ++ base.map { case (k, v) => (k + off, v) }
+    (fix, all.map { case (k, v) => k -> v._2 }, all.map { case (k, v) =>
+      k -> v._1 }, all.keys.toSeq.sorted)
+  }
+
+  private def round6(x: Double): Double =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** (d1, d2, inter, 6-dp jaccard) of every pair d1 < d2 whose shingle
+    * sets intersect, computed on the driver. */
+  private lazy val replicatedPairs: Seq[(Long, Long, Long, Double)] = {
+    val (_, sets, _, ids) = replicated
+    for {
+      i <- ids.indices; j <- (i + 1) until ids.length
+      a = sets(ids(i)); b = sets(ids(j))
+      inter = (a & b).size if inter > 0
+    } yield (ids(i), ids(j), inter.toLong,
+      round6(inter.toDouble / (a.size + b.size - inter)))
+  }
+
   test("q_dedup_minhash / q_dedup_cluster: class fan-back == raw semantics on a replicated corpus") {
     // Round-18 pin (r17 verdict #1 done-criterion): the minhash family
     // now sketches ONCE per exact-dup digest class and reconstructs the
@@ -43,31 +79,8 @@ class AnnSpec extends AnyFunSuite {
     // oracle semantics — banding recall on the fixture is exact, which
     // the standing sf gates already pin) and min-label closure over
     // those pairs.
-    import org.apache.spark.sql.functions._
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val off = 10000000000L
-    val fix = java.nio.file.Files.createTempDirectory("graft-mhfan").toString
-    docs.unionByName(docs.withColumn("doc_id", col("doc_id") + off))
-      .coalesce(1).write.parquet(s"$fix/documents.parquet")
-    // driver-side ground truth over the tiny fixture
-    val shRows = docs.select(col("doc_id"),
-        graft.functions.ShingleHash60(spark, col("text"), 3,
-          distinct = true).as("sh")).collect()
-    val baseSets = shRows.map(r =>
-      r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
-    val sets = baseSets ++ baseSets.map { case (k, v) => (k + off, v) }
-    val ids = sets.keys.toSeq.sorted
-    def jac6(a: Set[Long], b: Set[Long]): (Long, Double) = {
-      val i = (a & b).size
-      (i.toLong, BigDecimal(i.toDouble / (a.size + b.size - i))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-    }
-    val expPairs = (for {
-      i <- ids.indices; j <- (i + 1) until ids.length
-      a = sets(ids(i)); b = sets(ids(j))
-      if a.nonEmpty && b.nonEmpty
-      (inter, jc) = jac6(a, b) if jc >= 0.8
-    } yield (ids(i), ids(j), inter, jc)).toSet
+    val (fix, _, _, ids) = replicated
+    val expPairs = replicatedPairs.filter(_._4 >= 0.8).toSet
     val gotPairs = SparkEntry.queries("q_dedup_minhash")(spark, fix)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
@@ -97,6 +110,53 @@ class AnnSpec extends AnyFunSuite {
     assert(gotCluster == expCluster,
       s"cluster mismatch: missing=${(expCluster -- gotCluster).take(3)} " +
         s"extra=${(gotCluster -- expCluster).take(3)}")
+  }
+
+  test("q_dedup_ngram_jaccard / _containment / _fuzzy_edit: class fan-back == raw semantics on a replicated corpus") {
+    // The set-similarity detectors also run once per exact-dup class
+    // and fan the canonical rows back to every member (TextOps.classes).
+    // Expected rows are the raw semantics over the replicated doc set,
+    // from the driver's shingle sets and texts.
+    val (fix, sets, texts, _) = replicated
+    def got(key: String): Set[Seq[Any]] =
+      try SparkEntry.queries(key)(spark, fix).collect().map(_.toSeq).toSet
+      finally spark.catalog.clearCache()
+    def check(key: String, exp: Set[Seq[Any]]): Unit = {
+      val g = got(key)
+      assert(g == exp, s"$key mismatch: missing=${(exp -- g).take(3)} " +
+        s"extra=${(g -- exp).take(3)}")
+    }
+    val jac = replicatedPairs.filter(_._4 >= 0.8)
+    assert(jac.exists(_._4 < 1.0),
+      "fixture self-check: needs at least one genuine cross-class pair")
+    check("q_dedup_ngram_jaccard",
+      jac.map { case (a, b, i, j) => Seq[Any](a, b, i, j) }.toSet)
+    check("q_dedup_containment", replicatedPairs.flatMap {
+      case (a, b, i, _) => Seq(a -> b, b -> a).map { case (sub, sup) =>
+        Seq[Any](sub, sup, i, round6(i.toDouble / sets(sub).size)) }
+    }.filter(_(3).asInstanceOf[Double] >= 0.85).toSet)
+    def lev(x: String, y: String): Long = {
+      val (p, q) = (x.codePoints.toArray, y.codePoints.toArray)
+      var prev = Array.range(0, q.length + 1)
+      p.indices.foreach { i =>
+        val cur = new Array[Int](q.length + 1)
+        cur(0) = i + 1
+        q.indices.foreach { j =>
+          cur(j + 1) = math.min(math.min(cur(j), prev(j + 1)) + 1,
+            prev(j) + (if (p(i) == q(j)) 0 else 1))
+        }
+        prev = cur
+      }
+      prev(q.length).toLong
+    }
+    check("q_dedup_fuzzy_edit", replicatedPairs.filter(_._4 >= 0.5).map {
+      case (a, b, _, _) =>
+        val (l1, l2) = (texts(a).codePointCount(0, texts(a).length).toLong,
+          texts(b).codePointCount(0, texts(b).length).toLong)
+        val e = lev(texts(a), texts(b))
+        val rel = round6(e.toDouble / math.max(l1, l2))
+        Seq[Any](a, b, l1, l2, e, rel, rel <= 0.2)
+    }.toSet)
   }
 
   test("q_dedup_cluster propagation: planted 16-doc chain converges in O(log n) rounds") {

@@ -121,6 +121,45 @@ class ConfigIngestSpec extends AnyFunSuite {
     } finally srv.close()
   }
 
+  test("a rejected POST on a kept-alive connection answers without a Nagle stall") {
+    // A reply body written after the flushed headers waits under Nagle
+    // for the client's delayed ACK (about 40 ms); a headers-only 401
+    // leaves in one segment. One raw socket, so every POST reuses it.
+    val srv = new IngestServer(":0", tmp("http-401"), Set("k1"))
+    val sock = new java.net.Socket("127.0.0.1", srv.port)
+    try {
+      val out = sock.getOutputStream
+      val in = new java.io.BufferedInputStream(sock.getInputStream)
+      def readLine(): String = {
+        val b = new StringBuilder
+        var c = in.read()
+        while (c != '\n' && c != -1) { if (c != '\r') b += c.toChar; c = in.read() }
+        b.toString
+      }
+      val body = envLine(1)
+      val ms = (1 to 15).map { i =>
+        val t0 = System.nanoTime()
+        out.write((s"POST /t/2024-01-01/${ts33(i)}-u$i-orders-1.ndjson" +
+          s"?sharedKey=wrong HTTP/1.1\r\nHost: 127.0.0.1\r\n" +
+          s"Content-Length: ${body.length}\r\n\r\n$body").getBytes("UTF-8"))
+        out.flush()
+        val status = readLine()
+        val headers = Iterator.continually(readLine()).takeWhile(_.nonEmpty)
+          .toList
+        val len = headers.collectFirst {
+          case h if h.toLowerCase.startsWith("content-length:") =>
+            h.split(":", 2)(1).trim.toInt
+        }.getOrElse(0)
+        (1 to len).foreach(_ => in.read())
+        assert(status.startsWith("HTTP/1.1 401"), status)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      assert(ms(ms.length / 2) < 20.0,
+        s"median 401 round trip ${ms(ms.length / 2)} ms: ${ms.mkString(", ")}")
+      assert(srv.rejectedCount == 15)
+    } finally { sock.close(); srv.close() }
+  }
+
   test("no sharedKeys configured => no auth, like the reference's len(keys)>0 gate") {
     val landing = tmp("noauth-landing"); val out = tmp("noauth-out")
     val srv = new IngestServer(":0", landing, Set.empty)
